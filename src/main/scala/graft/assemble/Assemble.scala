@@ -2,6 +2,7 @@ package graft.assemble
 
 import graft.normalize.Normalize.spanText
 import graft.score.ErRule
+import graft.util.{Confs, Materialize}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -325,14 +326,14 @@ object Assemble {
       // captures the physical plan's outputPartitioning into the
       // LogicalRDD, and AdaptiveSparkPlanExec reports Unknown — with
       // AQE on, the hash(entity_id) layout would be invisible and every
-      // downstream agg would re-shuffle (verified: tools/
-      // CheckpointPartitioning). The joins feeding this frame are
-      // uniform doc_id-keyed; skipping AQE here costs nothing
-      .transform(d => graft.util.Confs.withConfs(d.sparkSession)(
+      // downstream agg would re-shuffle (BASELINE.md, "Assembly exchange
+      // elimination": 1 exchange with AQE on vs 0 off on the identical
+      // query). The joins feeding this frame are uniform doc_id-keyed;
+      // skipping AQE here costs nothing
+      .transform(d => Confs.withConfs(d.sparkSession)(
         "spark.sql.adaptive.enabled" -> "false")(
-        graft.util.Confs.withJobDesc(d.sparkSession)("assemble_docs")(
-          // fanned into 3 aggregations below
-          graft.ops.Dedup.materializeTier(d, checkpointDir, "asm_docs"))))
+        // fanned into 3 aggregations below
+        Materialize(d, "asm_docs", checkpointDir).df))
 
     // ---- FEATURES: variant groups per (entity, ftype, canon, usage) ----
     val baseEntries = docs
@@ -355,10 +356,9 @@ object Assemble {
         baseEntries.unionByName(amb).transform(d => d.repartition(
           d.sparkSession.sessionState.conf.numShufflePartitions, col("entity_id"))))
       // AQE off for the same partitioning-capture reason as assemble_docs
-      .transform(d => graft.util.Confs.withConfs(d.sparkSession)(
+      .transform(d => Confs.withConfs(d.sparkSession)(
         "spark.sql.adaptive.enabled" -> "false")(
-        graft.util.Confs.withJobDesc(d.sparkSession)("assemble_entries")(
-          graft.ops.Dedup.materializeTier(d, checkpointDir, "asm_entries"))))
+        Materialize(d, "asm_entries", checkpointDir).df))
 
     val perDesc = entries
       .groupBy("entity_id", "ftype", "canon", "usage", "desc")
@@ -556,10 +556,10 @@ object Assemble {
     // hash(entity_id) layout, so these joins are already exchange-free
     // — but as sort-merge joins each one SORTED its inputs by the
     // 19-char entity key, including the fat collected-RECORDS side
-    // (the dominant time in the final query's metrics,
-    // tools/AssembleMetrics). A shuffled-hash join builds the narrow
-    // aggregate side and streams the fat side unsorted; join results
-    // are strategy-invariant.
+    // (the dominant time in the final query's per-operator SQL
+    // metrics, OPTIMIZATION_r06.md "Assembly"). A shuffled-hash join
+    // builds the narrow aggregate side and streams the fat side
+    // unsorted; join results are strategy-invariant.
     val base = recordsWithSummary
       .join(entityName.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")
       .join(featMap.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")
@@ -609,7 +609,7 @@ object Assemble {
     val ranged = keys.select(keyCol).distinct()
       .repartitionByRange(nPart, col(keyCol))
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true) // pin the (sampled) range boundaries
+      .transform(Materialize(_, "dense_ids", None).df) // pin the (sampled) range boundaries
     val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = (0 until nPart).scanLeft(0L) {

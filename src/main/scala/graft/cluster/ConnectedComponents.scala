@@ -1,5 +1,6 @@
 package graft.cluster
 
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -21,10 +22,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale notes:
   *  - min-per-neighborhood is a groupBy aggregate (partial map-side
   *    combine; never collects a neighborhood into one row);
-  *  - each iteration is checkpointed (localCheckpoint by default, or
-  *    a parquet snapshot via `checkpointDir` for resumability) to
-  *    truncate lineage — O(log n) iterations otherwise explode the
-  *    plan;
+  *  - each iteration is materialized (graft.util.Materialize:
+  *    localCheckpoint by default, or a per-run parquet snapshot via
+  *    `checkpointDir` for resumability) to truncate lineage — O(log n)
+  *    iterations otherwise explode the plan;
   *  - convergence is decided from a (count, xor-hash) fingerprint
   *    OBSERVED on the checkpoint materialization itself
   *    (Dataset.observe + Observation) — zero extra actions or scans
@@ -37,11 +38,9 @@ object ConnectedComponents {
   final case class Stats(iterations: Int, perIterationEdges: Seq[Long])
 
   /** large-star: connect every neighbor larger than u to the min of
-    * u's closed neighborhood. Exposed private[graft] so measurement
-    * probes (tools.FuseProbe) exercise THIS implementation, not a
-    * copy that could drift from what the loop actually runs.
+    * u's closed neighborhood.
     */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
+  private def largeStar(e: DataFrame): DataFrame = {
     val bidir = e.select(col("src").as("u"), col("dst").as("v"))
       .unionAll(e.select(col("dst").as("u"), col("src").as("v")))
     val mins = bidir.groupBy("u")
@@ -56,7 +55,7 @@ object ConnectedComponents {
   /** small-star: point every smaller-or-equal neighbor (and u itself)
     * at the min of u's smaller neighborhood.
     */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
+  private def smallStar(e: DataFrame): DataFrame = {
     val directed = e.select(
       greatest(col("src"), col("dst")).as("u"),
       least(col("src"), col("dst")).as("v"))
@@ -156,27 +155,9 @@ object ConnectedComponents {
       * metric instead of a second scan.
       */
     def checkpoint(df: DataFrame, iter: Int): (DataFrame, (Long, Long)) = {
-      // UUID suffix: Observation matches metrics BY NAME across the
-      // session — concurrent runs (parallel test suites) must not
-      // cross-wire each other's convergence fingerprints
-      val obs = org.apache.spark.sql.Observation(
-        s"cc_fp_${iter}_${java.util.UUID.randomUUID}")
-      val observed = df.observe(obs,
-        count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h"))
-      spark.sparkContext.setJobDescription(s"graft:cc_iter_$iter")
-      val out = try {
-        checkpointDir match {
-          case Some(dir) =>
-            val path = s"$dir/cc_iter_$iter"
-            observed.write.mode("overwrite").parquet(path)
-            spark.read.parquet(path)
-          case None =>
-            observed.localCheckpoint(true)
-        }
-      } finally spark.sparkContext.setJobDescription(null)
-      val row = obs.get
-      (out, (row("n").asInstanceOf[Long], row("h").asInstanceOf[Long]))
+      val m = Materialize(df, s"cc_iter_$iter", checkpointDir,
+        "h" -> coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)))
+      (m.df, (m.rows, m.extras("h")))
     }
 
     // The iteration-0 materialization executes the CALLER's entire
@@ -214,9 +195,9 @@ object ConnectedComponents {
     // sides narrow 19-char-string rows — and the shuffled-hash join
     // skips SMJ's two string sorts per join (measured 0.63–1.0 s vs
     // 1.15–1.26 s per double-step on a 325k-edge clique-heavy frame,
-    // tools/StarWidthProbe). Per-partition build sides are bounded by
-    // the loop width sizing, and the planner still falls back to SMJ
-    // when its size conditions fail. Join results are
+    // OPTIMIZATION_r06.md "dd_dedup_groups"). Per-partition build
+    // sides are bounded by the loop width sizing, and the planner still
+    // falls back to SMJ when its size conditions fail. Join results are
     // strategy-invariant, so labels are unchanged.
     val loop = graft.util.Confs.withConfs(spark)(
       "spark.sql.adaptive.enabled" -> "false",
@@ -261,7 +242,7 @@ object ConnectedComponents {
         // fused double-double-step costs ~2.7× a single job on a tiny
         // frame — the fixed cost is per STAGE, not per job — and 3.4×
         // on the big first frame, where exchange reuse can't cover the
-        // nested tree. tools/FuseProbe.)
+        // nested tree.)
         while (!converged && iter < maxIterations) {
           if (fp._1 > 0 && fp._1 <= localFinishEdges) {
             log.info(s"cc: local union-find finish over ${fp._1} frontier edges")
@@ -291,21 +272,15 @@ object ConnectedComponents {
     // a lazy result re-runs BOTH distincts per consumer — observed as
     // 4+ extra doc_id shuffles in the dd_dedup_groups plan. Narrow
     // 2-column frame, one extra job, re-scans free after it. Durable
-    // (parquet, same convention as the iteration snapshots) when a
-    // checkpointDir is configured — an executor loss after the loop
-    // must not kill the labeling joins (r6, VERDICT ask).
+    // (like the iteration snapshots) when a checkpointDir is configured
+    // — an executor loss after the loop must not kill the labeling
+    // joins (r6, VERDICT ask).
     val assignFrame = e.select(col("src").as("doc_id"), col("dst").as("entity_id"))
       .unionAll(roots)
       .distinct()
     val assignments =
-      if (!materializeAssignments) assignFrame
-      else checkpointDir match {
-        case Some(dir) =>
-          val path = s"$dir/cc_assignments"
-          assignFrame.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
-        case None => assignFrame.localCheckpoint(true)
-      }
+      if (materializeAssignments) Materialize(assignFrame, "cc_assignments", checkpointDir).df
+      else assignFrame
     (assignments, Stats(iter, edgeCounts.toSeq))
   }
 

@@ -6,6 +6,7 @@ import graft.cluster.ConnectedComponents
 import graft.io.SnapshotStore
 import graft.normalize.Normalize
 import graft.score.{Ambiguity, Generic, Scoring}
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,7 +60,7 @@ object ResolveJob {
       metrics: Map[String, Long],
       resumedStages: Seq[String],
       /** wall millis per materialized stage, insertion-ordered —
-        * feeds the scaling-profile decomposition in Bench/JobGaps */
+        * feeds the scaling-profile decomposition in Bench */
       stageMillis: Seq[(String, Long)] = Seq.empty)
 
   def run(spark: SparkSession, docs: DataFrame, cfg: Config = Config()): Result =
@@ -88,31 +89,22 @@ object ResolveJob {
       * snapshot exists; otherwise compute, commit (with per-partition
       * lineage), or localCheckpoint when no store is configured. Row
       * counts — plus any caller-supplied extra aggregates — ride the
-      * materialization job as OBSERVED metrics (Dataset.observe), so
-      * the job's counters cost no extra actions.
+      * materialization job as observed metrics (graft.util.Materialize).
       */
     def stage(name: String, extras: (String, org.apache.spark.sql.Column)*)
         (build: => DataFrame): DataFrame = timed(name) {
-      // UUID suffix: concurrent runs must not cross-match metrics by name
-      val obs = org.apache.spark.sql.Observation(
-        s"stage_${name}_${java.util.UUID.randomUUID}")
-      def observedCheckpoint(df: DataFrame): DataFrame = {
-        val aggs = count(lit(1)).as("rows") +: extras.map { case (k, c) => c.as(k) }
-        spark.sparkContext.setJobDescription(s"graft:$name")
-        val out = try df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint(true)
-        finally spark.sparkContext.setJobDescription(null)
-        val row = obs.get
-        stageRows(name) = row("rows").asInstanceOf[Long]
-        extras.foreach { case (k, _) =>
-          stageRows(s"$name.$k") = row(k).asInstanceOf[Long] }
-        out
+      def materializeStage(df: DataFrame): DataFrame = {
+        val m = Materialize(df, name, None, extras: _*)
+        stageRows(name) = m.rows
+        m.extras.foreach { case (k, v) => stageRows(s"$name.$k") = v }
+        m.df
       }
       store match {
         case Some(st) if st.exists(name) =>
           resumed += name
-          observedCheckpoint(st.read(spark, name))
+          materializeStage(st.read(spark, name))
         case Some(st) =>
-          val df = observedCheckpoint(build)
+          val df = materializeStage(build)
           st.commit(df, name)
           val lineage = df
             .groupBy(spark_partition_id().as("partition_id"))
@@ -120,7 +112,7 @@ object ResolveJob {
             .withColumn("stage", lit(name))
           st.commit(lineage, s"_lineage_$name")
           df
-        case None => observedCheckpoint(build)
+        case None => materializeStage(build)
       }
     }
 

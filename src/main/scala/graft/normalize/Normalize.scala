@@ -253,8 +253,9 @@ object Normalize {
     * regex replaces feeding THREE interpreted HOF filters with
     * per-token rlike, over a token subtree each filter re-derived —
     * measured as ~80% of the whole features_raw stage (5.2 s of 6.4 s
-    * on 200k docs, tools/FeatureProbe). Identical output is
-    * spec-pinned against that formulation (NormalizeKernelSpec).
+    * on 200k docs, local[4]; OPTIMIZATION_r06.md "features_raw").
+    * Identical output is spec-pinned against that formulation
+    * (NormalizeKernelSpec).
     */
   def parseAddr(raw: Column): Column =
     graft.functions.GraftFunctions.parse_addr(raw, AddrStop.toSet.toSeq)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.GraftFunctions
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,39 +31,15 @@ object Dedup {
     * deterministic across runs and parallelism levels.
     *
     * `checkpointDir`: when set, the tier frames are materialized as
-    * parquet snapshots under it instead of `localCheckpoint` —
-    * localCheckpoint blocks live in non-replicated executor storage,
-    * so on a real cluster a lost executor kills a long dedup job;
-    * store-backed tiers survive (mirrors ConnectedComponents'
-    * `checkpointDir`). Same outputs either way (OpsSpec-pinned).
+    * parquet snapshots under it (graft.util.Materialize) instead of
+    * `localCheckpoint` — localCheckpoint blocks live in non-replicated
+    * executor storage, so on a real cluster a lost executor kills a
+    * long dedup job; store-backed tiers survive (mirrors
+    * ConnectedComponents' `checkpointDir`). Same outputs either way
+    * (OpsSpec-pinned).
     */
   final case class BlockBounds(maxBlockSize: Int = 64, megaCap: Int = 4096,
       salts: Int = 8, checkpointDir: Option[String] = None)
-
-  /** Materialize a tier frame: durable parquet snapshot when a
-    * checkpoint dir is configured, localCheckpoint otherwise.
-    *
-    * Snapshot paths live under `<dir>/<applicationId>/` (the same
-    * convention as SparkContext.setCheckpointDir's per-app subdir):
-    * two applications pointed at one checkpointDir — e.g. a streaming
-    * job and a batch job sharing config — must never clobber each
-    * other's live tier snapshots mid-query, which a bare
-    * session-monotonic counter with mode(overwrite) would do (both
-    * apps start at bsj_*_0). WITHIN an app the counter keeps the store
-    * bounded; ACROSS app restarts the per-app subdir is garbage like
-    * any Spark checkpoint dir — reaping dead-app subdirs is the
-    * operator's standard checkpoint-hygiene job.
-    */
-  private val tierSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] def materializeTier(df: DataFrame, dir: Option[String], tag: String): DataFrame =
-    dir match {
-      case Some(d) =>
-        val appId = df.sparkSession.sparkContext.applicationId
-        val path = s"$d/$appId/bsj_${tag}_${tierSeq.getAndIncrement}"
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      case None => df.localCheckpoint(true)
-    }
 
   /** Self-join `keyed` on `keyCols`, emitting distinct id pairs
     * (a < b) with the three-tier bounded-block discipline (object
@@ -82,10 +59,10 @@ object Dedup {
     // this frame ~5× (hot aggregate, cold l/r, hot l/r), and callers
     // pass expensive upstreams (minhash kernels, prefix sorts) that
     // must not be recomputed per scan.
-    val k = materializeTier(keyed
+    val k = Materialize(keyed
       .filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
       .select(struct(keyCols.map(col): _*).as("_k"), col(idCol).as("_id")),
-      bounds.checkpointDir, "keyed")
+      "bsj_keyed", bounds.checkpointDir).df
 
     // Hot-key head. Materialized eagerly so the mega down-sampling
     // decision can be surfaced (never silent) and the frame is built
@@ -98,26 +75,22 @@ object Dedup {
     // observed metric (one job, not a checkpoint job + a second
     // aggregate action) — this function runs once per candidate family
     // and per-invocation driver-serial jobs are the scaling tax the
-    // one-box efficiency measurements keep naming. UUID suffix: the
-    // Observation registry matches by name session-wide.
-    val megaObs = org.apache.spark.sql.Observation(
-      s"bsj_mega_${java.util.UUID.randomUUID}")
-    val hot0 = materializeTier(
+    // one-box efficiency measurements keep naming.
+    val hot0 = Materialize(
       k.groupBy("_k").count().filter(col("count") > bounds.maxBlockSize)
         .withColumn("keep_mod",
           when(col("count") > bounds.megaCap,
             ceil(col("count").cast("double") / bounds.megaCap).cast("long")))
-        .select("_k", "keep_mod", "count")
-        .observe(megaObs,
-          count(when(col("keep_mod").isNotNull, 1)).as("n"),
-          coalesce(sum(when(col("keep_mod").isNotNull, col("count"))), lit(0L)).as("members")),
-      bounds.checkpointDir, "hot")
-    val megaN = megaObs.get("n").asInstanceOf[Long]
+        .select("_k", "keep_mod", "count"),
+      "bsj_hot", bounds.checkpointDir,
+      "mega" -> count(when(col("keep_mod").isNotNull, 1)),
+      "members" -> coalesce(sum(when(col("keep_mod").isNotNull, col("count"))), lit(0L)))
+    val megaN = hot0.extras("mega")
     if (megaN > 0)
       log.warn(s"boundedSelfJoinPairs: $megaN mega block(s) " +
-        s"totalling ${megaObs.get("members")} members down-sampled to ~${bounds.megaCap} " +
+        s"totalling ${hot0.extras("members")} members down-sampled to ~${bounds.megaCap} " +
         "members each (deterministic hash-mod)")
-    val hot = hot0.select("_k", "keep_mod")
+    val hot = hot0.df.select("_k", "keep_mod")
 
     val cold = k.join(hot, Seq("_k"), "left_anti")
     val coldPairs = cold.select(col("_k"), col("_id").as("doc_a"))
@@ -298,18 +271,18 @@ object Dedup {
     // withSets).
     val wg = org.apache.spark.sql.expressions.Window
       .partitionBy("lang", "len_bucket", "sig")
-    val docToRep = materializeTier(all.filter(size(col("shingles")) > 0)
+    val docToRep = Materialize(all.filter(size(col("shingles")) > 0)
       .select(col("doc_id"), col("lang"), col("len_bucket"),
         md5(concat_ws("\n", array_sort(col("shingles")))).as("sig"))
       .select(col("doc_id"),
         min("doc_id").over(wg).as("rep_id"),
         count(lit(1)).over(wg).as("grp_n")),
-      checkpointDir, "ngram_doc2rep")
+      "ngram_doc2rep", checkpointDir).df
     // reps are exactly the rows that are their own group min
-    val withSets = materializeTier(all.join(
+    val withSets = Materialize(all.join(
       docToRep.filter(col("doc_id") === col("rep_id")).select("doc_id"),
       Seq("doc_id"), "left_semi"),
-      checkpointDir, "ngram_repsets")
+      "ngram_repsets", checkpointDir).df
 
     val toks = withSets.select(col("doc_id"), col("lang"), col("len_bucket"),
       size(col("shingles")).as("sz"), explode(col("shingles")).as("t"))
@@ -533,9 +506,9 @@ object Dedup {
     require(16 % slices == 0,
       s"maxHamming $maxHamming: slices ($slices) must divide the 16 hex nibbles")
     val w = 16 / slices // hex chars per slice
-    val fp = materializeTier( // read by banding AND twice by the verify join
+    val fp = Materialize( // read by banding AND twice by the verify join
       simhashVerify(docs).filter(col("simhash_hex").isNotNull),
-      bounds.checkpointDir, "shv_fp")
+      "shv_fp", bounds.checkpointDir).df
     val sliceExprs = (0 until slices).map(i =>
       concat(lit(s"$i:"), substring(col("simhash_hex"), i * w + 1, w)))
     val sliced = fp.select(col("doc_id"), explode(array(sliceExprs: _*)).as("slice"))
@@ -578,7 +551,7 @@ object Dedup {
     // the hamming verify — lazy, the simhash64 kernel re-scanned the
     // full corpus text three times per run
     simhashPairsFromFingerprints(
-      materializeTier(simhash(docs), bounds.checkpointDir, "simhash_fp"),
+      Materialize(simhash(docs), "simhash_fp", bounds.checkpointDir).df,
       maxHamming, bounds)
 
   /** Slice-and-verify over a precomputed `(doc_id, simhash)` frame —
@@ -733,10 +706,10 @@ object Dedup {
     val singletons = docs.select(col("doc_id"))
       .join(r.docToRep.select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), pad(col("doc_id")).as("glabel"))
-    val g = materializeTier(labeled.unionByName(singletons)
+    val g = Materialize(labeled.unionByName(singletons)
       .select(col("doc_id").cast("long").as("doc_id"),
         col("glabel").cast("long").as("group_id")),
-      checkpointDir, "ngram_groups")
+      "ngram_groups", checkpointDir).df
     val sizes = g.groupBy("group_id").agg(count(lit(1)).as("group_size"))
     (g.join(sizes, "group_id")
       .select(col("doc_id"), col("group_id"), col("group_size"),

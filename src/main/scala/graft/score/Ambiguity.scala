@@ -1,5 +1,6 @@
 package graft.score
 
+import graft.util.{Confs, Materialize}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -70,30 +71,24 @@ object Ambiguity {
     // metric — the fixpoint below costs ONE job per round, and the
     // (common) zero-conflict corpus exits after the first job with the
     // edge frame untouched.
-    def observedCheckpoint(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(
-        s"amb_fired_${java.util.UUID.randomUUID}")
-      val out = graft.util.Confs.withJobDesc(df.sparkSession)("ambiguity") {
-        df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      }
-      (out, obs.get("n").asInstanceOf[Long])
-    }
     // AQE scoped OFF for the fixpoint actions: joins key on doc ids
     // with blocking-capped degree (skew-free by construction), and AQE
     // charges per-exchange materialization jobs + re-planning on every
     // round — pure driver-serial latency, identical at any cluster size
-    def ambConfs[T](body: => T): T = graft.util.Confs.withConfs(
+    def ambConfs[T](body: => T): T = Confs.withConfs(
       edges.sparkSession)("spark.sql.adaptive.enabled" -> "false")(body)
-    val (fired0, nFired0) = ambConfs { observedCheckpoint(tri
+    val first = ambConfs(Materialize(tri
       .join(ids.as("fu"), col("u") === col("fu.doc_id"))
       .join(ids.as("fv"), col("v") === col("fv.doc_id"))
       .filter(conflictExpr)
       .join(bestResolved, Seq("v"), "left")
       // exemption: d's resolved claim outranks v's best resolved claim
       .filter(col("v_best").isNotNull && col("v_best") >= col("s_u"))
-      .select(col("d"), col("u"), col("v"), conflictType.as("conflict_type"))) }
+      .select(col("d"), col("u"), col("v"), conflictType.as("conflict_type")),
+      "ambiguity", None))
+    val fired0 = first.df
 
-    if (nFired0 == 0) {
+    if (first.rows == 0) {
       val spark = edges.sparkSession
       import spark.implicits._
       return Result(
@@ -110,18 +105,18 @@ object Ambiguity {
     // reach the fixpoint on anything non-adversarial (frames here are
     // the sparse conflict set — trivially small next to the edge set).
     var fired = fired0
-    var nFired = nFired0
+    var nFired = first.rows
     var prev = -1L
     var iters = 0
     while (iters < 4 && nFired != prev) {
       prev = nFired
       val amb = fired.select(col("d").as("v")).distinct()
         .withColumn("_vamb", lit(true))
-      val (next, n) = ambConfs { observedCheckpoint(fired0.join(amb, Seq("v"), "left")
+      val next = ambConfs(Materialize(fired0.join(amb, Seq("v"), "left")
         .filter(!(coalesce(col("_vamb"), lit(false)) && col("v") < col("d")))
-        .drop("_vamb")) }
-      fired = next
-      nFired = n
+        .drop("_vamb"), "ambiguity", None))
+      fired = next.df
+      nFired = next.rows
       iters += 1
     }
 

@@ -1,5 +1,6 @@
 package graft.score
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -89,14 +90,10 @@ object Generic {
         case _       => cfg.threshold
       })
     }.toMap)
-    val obs = org.apache.spark.sql.Observation(
-      s"generic_hot_${java.util.UUID.randomUUID}")
-    val hot = exploded.groupBy("fam", "v").count()
+    val hot = Materialize(exploded.groupBy("fam", "v").count()
       .filter(col("count") >= element_at(thresholdOf, col("fam")))
-      .select("fam", "v")
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    (hot, obs.get("n").asInstanceOf[Long])
+      .select("fam", "v"), "generic_hot", None)
+    (hot.df, hot.rows)
   }
 
   /** Augment the feature table with boolean `*_generic` flags: one

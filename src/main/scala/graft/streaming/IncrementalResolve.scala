@@ -6,6 +6,7 @@ import graft.io.{SnapshotDiff, SnapshotStore}
 import graft.jobs.ResolveJob
 import graft.normalize.Normalize
 import graft.score.Generic
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,14 +83,6 @@ object IncrementalResolve {
       processBatchInner(spark, store, batch, cfg)
     }
 
-  /** Materialize with an observed row count riding the same job. */
-  private def observedCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation(
-      s"inc_${java.util.UUID.randomUUID}")
-    val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    (out, obs.get("n").asInstanceOf[Long])
-  }
-
   private def processBatchInner(
       spark: SparkSession,
       store: SnapshotStore,
@@ -110,14 +103,14 @@ object IncrementalResolve {
       val incoming = contentHash(newDocs0).join(
         contentHash(prev).select(col("doc_id"), col("_h").as("_h_prev")),
         Seq("doc_id"), "left")
-      val (t, n) = observedCount(incoming
+      val t = Materialize(incoming
         .filter(col("_h_prev").isNull || col("_h") =!= col("_h_prev"))
-        .select("doc_id", "spans"))
-      val kept = prev.join(t.select("doc_id"), Seq("doc_id"), "left_anti")
-      (kept.unionByName(t), t, n)
+        .select("doc_id", "spans"), "inc_touched", None)
+      val kept = prev.join(t.df.select("doc_id"), Seq("doc_id"), "left_anti")
+      (kept.unionByName(t.df), t.df, t.rows)
     } else {
-      val (t, n) = observedCount(newDocs0)
-      (t, t, n)
+      val t = Materialize(newDocs0, "inc_touched", None)
+      (t.df, t.df, t.rows)
     }
     // NOTE: the docs snapshot is committed LAST (end of this method).
     // The content-hash dedup above keys off the PREVIOUS docs snapshot,
@@ -127,23 +120,23 @@ object IncrementalResolve {
     // snapshot.anti-join(touched) + recomputed rows). Committing docs
     // first would turn the redelivered batch into a content-hash no-op
     // and silently drop it from features/edges/assignments.
-    val docsSnap = allDocs.localCheckpoint(true)
-    val touchedIds = touched.select("doc_id").localCheckpoint(true)
+    val docsSnap = Materialize(allDocs, "inc_docs", None).df
+    val touchedIds = Materialize(touched.select("doc_id"), "inc_touched_ids", None).df
 
     // normalize ONLY the touched docs (the per-row CPU-heavy stage);
     // untouched docs' features come from the persisted snapshot
-    val featsNew = Normalize.features(touched).localCheckpoint(true)
+    val featsNew = Materialize(Normalize.features(touched), "inc_features_new", None).df
     val featsRaw = if (store.exists("features_raw")) {
       store.read(spark, "features_raw")
         .join(touchedIds, Seq("doc_id"), "left_anti")
         .unionByName(featsNew)
     } else featsNew
-    val featsRawSnap = featsRaw.localCheckpoint(true)
+    val featsRawSnap = Materialize(featsRaw, "inc_features_raw", None).df
     store.commit(featsRawSnap, "features_raw")
     // generic flags: corpus-wide hot-value thresholds — one aggregate
     // scan of the feature snapshot + per-family joins (no per-row CPU)
-    val feats = Generic.withGenericFlags(featsRawSnap, cfg.generic)
-      .localCheckpoint(true)
+    val feats = Materialize(Generic.withGenericFlags(featsRawSnap, cfg.generic),
+      "inc_features", None).df
 
     // blocking keys ONLY for touched docs, merged into the persisted
     // key table; mega-key capping needs corpus-wide block sizes — one
@@ -154,7 +147,7 @@ object IncrementalResolve {
         .join(touchedIds, Seq("doc_id"), "left_anti")
         .unionByName(keysNew)
     } else keysNew
-    val blocksSnap = blocksMerged.localCheckpoint(true)
+    val blocksSnap = Materialize(blocksMerged, "inc_blocks", None).df
     store.commit(blocksSnap, "blocks")
 
     // candidate pairs restricted to those touching a new/changed doc;
@@ -163,18 +156,17 @@ object IncrementalResolve {
     val blocksNew = blocksAll.join(touchedIds, "doc_id")
     val l = blocksAll.select(col("bkey"), col("doc_id").as("doc_a"))
     val r = blocksNew.select(col("bkey"), col("doc_id").as("doc_b"))
-    val touchingPairs = l.join(r, Seq("bkey"))
+    val touchingPairs = Materialize(l.join(r, Seq("bkey"))
       .filter(col("doc_a") =!= col("doc_b"))
       .select(
         least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), "inc_pairs", None).df
 
     val newEdges = graft.util.Confs.withConfs(spark)(
       "spark.sql.codegen.wholeStage" -> "false") {
-      graft.score.Scoring.scorePairs(touchingPairs, feats, cfg.weights)
-        .localCheckpoint(true)
+      Materialize(graft.score.Scoring.scorePairs(touchingPairs, feats, cfg.weights),
+        "inc_edges_new", None).df
     }
 
     val edges = if (store.exists("edges")) {
@@ -189,17 +181,16 @@ object IncrementalResolve {
         .join(touchedIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
       prev.unionByName(newEdges)
     } else newEdges
-    val edgesSnap = edges.localCheckpoint(true)
+    val edgesSnap = Materialize(edges, "inc_edges", None).df
     store.commit(edgesSnap, "edges") // RAW scores; ambiguity re-derives
     // per batch from the full merged edge set (a new doc can create or
     // dissolve a conflict, and cascades cross POSSIBLY_SAME bridges),
     // matching the batch job's semantics; cost is bounded by the sparse
     // strong-edge set, not the corpus
     val suppressed = graft.score.Ambiguity.suppress(edgesSnap, feats)
-    val currResolved = suppressed.edges
+    val currResolved = Materialize(suppressed.edges
       .filter(col("level") === "RESOLVED")
-      .select("doc_a", "doc_b")
-      .localCheckpoint(true)
+      .select("doc_a", "doc_b"), "inc_resolved", None).df
 
     // connected components over ONLY the affected subgraph: components
     // (by previous labels) containing any endpoint of an added/removed
@@ -222,15 +213,16 @@ object IncrementalResolve {
           .unionByName(changed.select(col("doc_b").as("doc_id")))
           .unionByName(touchedIds)
           .distinct()
-        val affLabels = prevAssign.join(touchedVerts, Seq("doc_id"))
-          .select("entity_id").distinct().localCheckpoint(true)
+        val affLabels = Materialize(prevAssign.join(touchedVerts, Seq("doc_id"))
+          .select("entity_id").distinct(), "inc_aff_labels", None).df
         val freshDocs = touchedIds
           .join(prevAssign.select("doc_id"), Seq("doc_id"), "left_anti")
-        val (affDocs, nAff) = observedCount(
+        val aff = Materialize(
           prevAssign.join(affLabels, Seq("entity_id"), "left_semi")
             .select("doc_id")
             .unionByName(freshDocs)
-            .distinct())
+            .distinct(), "inc_aff_docs", None)
+        val affDocs = aff.df
         // an unchanged edge has both endpoints in the same previous
         // component; a changed edge's endpoints are both in touchedVerts
         // — so a doc_a-side semi-join keeps every affected-subgraph edge
@@ -241,14 +233,14 @@ object IncrementalResolve {
         val carried = prevAssign
           .join(affLabels, Seq("entity_id"), "left_anti")
           .select("doc_id", "entity_id")
-        (carried.unionByName(sub.select("doc_id", "entity_id")), nAff)
+        (carried.unionByName(sub.select("doc_id", "entity_id")), aff.rows)
       case None =>
-        val (allIds, nAll) = observedCount(docsSnap.select("doc_id"))
+        val allIds = Materialize(docsSnap.select("doc_id"), "inc_all_ids", None)
         val (assign, _) = ConnectedComponents.assign(
-          spark, allIds, currResolved, cfg.checkpointDir)
-        (assign, nAll)
+          spark, allIds.df, currResolved, cfg.checkpointDir)
+        (assign, allIds.rows)
     }
-    val assignSnap = assignments.localCheckpoint(true)
+    val assignSnap = Materialize(assignments, "inc_assignments", None).df
 
     val affected = if (store.exists("assignments")) {
       // read() binds the snapshot PATH eagerly, so this lazy diff stays

@@ -26,12 +26,4 @@ object Confs {
       case (k, None)    => try spark.conf.unset(k) catch { case _: Exception => () }
     }
   }
-
-  /** Tag every Spark job fired inside `body` with `graft:name` (shows
-    * in the UI and in listener-based profiles like tools.JobGaps).
-    */
-  def withJobDesc[T](spark: SparkSession)(name: String)(body: => T): T = {
-    spark.sparkContext.setJobDescription(s"graft:$name")
-    try body finally spark.sparkContext.setJobDescription(null)
-  }
 }

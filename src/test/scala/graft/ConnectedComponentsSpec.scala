@@ -61,6 +61,24 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(dist == cc(edges), "local union-find finish must produce the loop's fixpoint labels")
   }
 
+  for (materialize <- Seq(true, false))
+    test(s"durable runs sharing a checkpointDir stay isolated (materializeAssignments=$materialize)") {
+      // A's result is read back lazily from its durable snapshots; B has
+      // the same shape (so it writes as many iteration snapshots) but
+      // other ids, so a shared snapshot path would hand A B's labels
+      val chainA = (0 until 24).map(i => (f"a$i%02d", f"a${i + 1}%02d"))
+      val chainB = chainA.map { case (s, d) => ("b" + s.tail, "b" + d.tail) }
+      val dir = java.nio.file.Files.createTempDirectory("cc_shared").toString
+      def durable(edges: Seq[(String, String)]) = ConnectedComponents.run(
+        spark, edges.toDF("src", "dst"), checkpointDir = Some(dir),
+        localFinishEdges = 0L, materializeAssignments = materialize)
+      val (a, statsA) = durable(chainA)
+      assert(statsA.iterations > 0, "distributed path must actually iterate")
+      durable(chainB)._1.collect()
+      val got = a.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == cc(chainA))
+    }
+
   test("local finish uses UTF8 binary order, matching the loop's least()/min()") {
     // U+1F600 (surrogate pair) vs U+FFFF: Java UTF-16 order puts the
     // surrogate pair FIRST, Spark's UTF8String (code-point) order puts
