@@ -1,7 +1,10 @@
 package graft.io
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.util.Materialize
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot table semantics on plain Parquet.
@@ -12,9 +15,17 @@ import scala.jdk.CollectionConverters._
   * snapshot diff — over a directory layout:
   *
   * {{{
-  * root/<table>/data/snap=<id>/ (parquet, written first)
+  * root/<table>/data/snap=<id>/ (parquet, written by stage)
   * root/<table>/_manifests/<id>.json       (atomic rename = publish)
   * }}}
+  *
+  * A commit has two phases. [[stage]] writes `snap=<latest+1>` once and
+  * returns the frame read back, so a caller can keep computing on it.
+  * [[publish]] renames the manifest into place, which is the moment
+  * readers see the snapshot. A staged but unpublished snapshot is
+  * invisible, so a job can stage every table first and publish them in
+  * order at its end: a failure before the publishes leaves no trace but
+  * orphaned data that the next stage of that id overwrites.
   *
   * A failed job publishes no manifest, so readers never see partial
   * data — this replaces the reference's export-tracker status machine
@@ -22,11 +33,20 @@ import scala.jdk.CollectionConverters._
   * /root/reference/middleware/db.py:41-102): "rewind" is simply the
   * absence of a commit. In production the `TableIO` calls map 1:1 to
   * `spark.read/writeTo(...).format("iceberg")`.
+  *
+  * The manifest is a JSON object `{snapshot, table, path, schema}`; the
+  * schema is Spark's JSON form of the staged frame's schema. [[read]]
+  * passes it to `spark.read.schema`, so a read plans without a
+  * footer-inference job. Manifests without a schema (written before the
+  * field existed) fall back to inference.
   */
 final class SnapshotStore(root: String) {
+  import SnapshotStore._
 
   private def tableDir(table: String): Path = Paths.get(root, table)
   private def manifestDir(table: String): Path = tableDir(table).resolve("_manifests")
+  private def dataPath(table: String, id: Long): Path =
+    tableDir(table).resolve("data").resolve(s"snap=$id")
 
   def snapshots(table: String): Seq[Long] = {
     val dir = manifestDir(table)
@@ -45,27 +65,71 @@ final class SnapshotStore(root: String) {
 
   def latestSnapshot(table: String): Option[Long] = snapshots(table).lastOption
 
-  /** Atomically commit `df` as the next snapshot; returns its id. */
-  def commit(df: DataFrame, table: String): Long = {
+  /** Write `df` as the table's next snapshot without publishing it. The
+    * write is one job through [[graft.util.Materialize.into]] (tagged
+    * `graft:<table>`, rows and `extras` observed on it). Writing
+    * overwrites `snap=<id>`, which only an unpublished earlier attempt
+    * can have left behind. Stage at most one snapshot per table before
+    * publishing it: a second stage reuses the id.
+    */
+  def stage(df: DataFrame, table: String, extras: (String, Column)*): Staged = {
     val id = latestSnapshot(table).getOrElse(0L) + 1L
-    val dataPath = tableDir(table).resolve("data").resolve(s"snap=$id")
-    df.write.mode("overwrite").parquet(dataPath.toString)
+    val path = dataPath(table, id).toString
+    val written = Materialize.into(df, table, extras: _*) { observed =>
+      observed.write.mode("overwrite").parquet(path)
+      df.sparkSession.read.schema(df.schema).parquet(path)
+    }
+    Staged(table, id, written)
+  }
+
+  /** Make a staged snapshot the table's latest (atomic manifest rename);
+    * returns its id.
+    */
+  def publish(staged: Staged): Long = {
+    val Staged(table, id, written) = staged
+    if (latestSnapshot(table).exists(_ >= id))
+      throw new IllegalStateException(
+        s"snapshot $id of $table was staged against an older latest snapshot")
+    val m = mapper.createObjectNode()
+    m.put("snapshot", id)
+    m.put("table", table)
+    m.put("path", dataPath(table, id).toString)
+    m.set("schema", mapper.readTree(written.df.schema.json))
     Files.createDirectories(manifestDir(table))
     val tmp = manifestDir(table).resolve(s".$id.json.tmp")
     val fin = manifestDir(table).resolve(s"$id.json")
-    Files.writeString(tmp, s"""{"snapshot":$id,"table":"$table","path":"$dataPath"}""")
+    Files.writeString(tmp, mapper.writeValueAsString(m))
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
     id
   }
+
+  /** Atomically commit `df` as the next snapshot; returns its id. */
+  def commit(df: DataFrame, table: String): Long = publish(stage(df, table))
 
   /** Read a snapshot (latest by default). */
   def read(spark: SparkSession, table: String, snapshot: Option[Long] = None): DataFrame = {
     val id = snapshot.orElse(latestSnapshot(table))
       .getOrElse(throw new IllegalStateException(s"no committed snapshot for $table"))
-    spark.read.parquet(tableDir(table).resolve("data").resolve(s"snap=$id").toString)
+    val schema = Option(mapper.readTree(manifestDir(table).resolve(s"$id.json").toFile)
+      .get("schema")).map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(dataPath(table, id).toString)
   }
 
   def exists(table: String): Boolean = latestSnapshot(table).isDefined
+}
+
+object SnapshotStore {
+
+  /** A snapshot written by [[SnapshotStore.stage]] and not yet
+    * published: `written.df` reads it back (no job; its schema is the
+    * one the manifest records), `written.rows`/`extras` were observed
+    * on its write.
+    */
+  final case class Staged(table: String, id: Long, written: Materialize.Result) {
+    def df: DataFrame = written.df
+  }
+
+  private val mapper = new ObjectMapper()
 }
 
 object SnapshotDiff {

@@ -86,15 +86,15 @@ object ResolveJob {
     }
 
     /** Materialize a stage: resume from the store when a committed
-      * snapshot exists; otherwise compute, commit (with per-partition
-      * lineage), or localCheckpoint when no store is configured. Row
-      * counts — plus any caller-supplied extra aggregates — ride the
-      * materialization job as observed metrics (graft.util.Materialize).
+      * snapshot exists; otherwise compute and commit it (written once,
+      * with per-partition lineage), or localCheckpoint when no store is
+      * configured. Row counts — plus any caller-supplied extra
+      * aggregates — ride the materialization job as observed metrics
+      * (graft.util.Materialize).
       */
     def stage(name: String, extras: (String, org.apache.spark.sql.Column)*)
         (build: => DataFrame): DataFrame = timed(name) {
-      def materializeStage(df: DataFrame): DataFrame = {
-        val m = Materialize(df, name, None, extras: _*)
+      def record(m: Materialize.Result): DataFrame = {
         stageRows(name) = m.rows
         m.extras.foreach { case (k, v) => stageRows(s"$name.$k") = v }
         m.df
@@ -102,17 +102,18 @@ object ResolveJob {
       store match {
         case Some(st) if st.exists(name) =>
           resumed += name
-          materializeStage(st.read(spark, name))
+          record(Materialize(st.read(spark, name), name, None, extras: _*))
         case Some(st) =>
-          val df = materializeStage(build)
-          st.commit(df, name)
+          val staged = st.stage(build, name, extras: _*)
+          st.publish(staged)
+          val df = record(staged.written)
           val lineage = df
             .groupBy(spark_partition_id().as("partition_id"))
             .agg(count(lit(1)).as("rows"))
             .withColumn("stage", lit(name))
           st.commit(lineage, s"_lineage_$name")
           df
-        case None => materializeStage(build)
+        case None => record(Materialize(build, name, None, extras: _*))
       }
     }
 

@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   * name shared by ≥7 docs is millions of strings) — so they are NEVER
   * collected to the driver. One exploded aggregate computes every
   * family's hot set in a single scan; the materialized hot frame is
-  * joined back per family. The join side is broadcast while the hot
-  * count (observed on the materialization job — no extra action) stays
-  * under [[Config.maxBroadcastHot]]; past that it degrades to a
-  * shuffle join, which is the only shape that exists at 10^12 docs.
+  * the build side of ONE semi-join for all families. It is broadcast
+  * while the hot count (observed on the materialization job — no extra
+  * action) stays under [[Config.maxBroadcastHot]]; past that it
+  * degrades to a shuffle join, which is the only shape that exists at
+  * 10^12 docs.
   */
 object Generic {
 
@@ -38,8 +39,8 @@ object Generic {
     * name+DOB pairs inside such cohorts are ~55% false).
     *
     * `maxBroadcastHot`: total hot values (all families) up to which the
-    * flag joins use a broadcast build side; beyond it they fall back to
-    * shuffle joins. ~5M short strings ≈ low hundreds of MB broadcast —
+    * flag join uses a broadcast build side; beyond it it falls back to a
+    * shuffle join. ~5M short strings ≈ low hundreds of MB broadcast —
     * the practical executor-memory boundary.
     */
   /** Phones sit between exclusive ids and addresses: a landline is
@@ -52,7 +53,7 @@ object Generic {
       maxBroadcastHot: Long = 5000000L)
 
   /** The (flagColumn, valueExpression, thresholdKind) triples. */
-  private def valueCols: Seq[(String, Column, String)] = Seq(
+  private[graft] def valueCols: Seq[(String, Column, String)] = Seq(
     ("email_generic", col("email"), "id"),
     // key-render tier: the reference still RENDERS +EMAIL for a
     // family-shared mailbox (4 uses) but suppresses an org-wide one
@@ -69,19 +70,24 @@ object Generic {
       concat(coalesce(get(split(col("given_can"), " "), lit(0)), lit("")),
         lit(":"), col("surname"))), "name"))
 
-  /** Compute the per-family hot-value frame `(fam, v)` — one exploded
-    * scan of the feature table, map-side-combined aggregate, eagerly
-    * materialized (so each per-family flag join reuses it instead of
-    * re-aggregating). Returns the frame plus its observed row count
-    * (rides the materialization job; no extra action).
+  /** One row per (row of `features`, family) with a non-null value:
+    * `keep` columns plus `fam` (the flag name) and `v`.
     */
-  def hotValues(features: DataFrame, cfg: Config = Config()): (DataFrame, Long) = {
-    val exploded = features.select(explode(array(valueCols.map {
+  private def familyValues(features: DataFrame, keep: Column*): DataFrame =
+    features.select(keep :+ explode(array(valueCols.map {
       case (flagName, valueCol, _) =>
         struct(lit(flagName).as("fam"), valueCol.as("v"))
-    }: _*)).as("fv"))
+    }: _*)).as("fv"): _*)
       .filter(col("fv.v").isNotNull)
-      .select(col("fv.fam").as("fam"), col("fv.v").as("v"))
+      .select(keep :+ col("fv.fam").as("fam") :+ col("fv.v").as("v"): _*)
+
+  /** Compute the per-family hot-value frame `(fam, v)` — one exploded
+    * scan of the feature table, map-side-combined aggregate, eagerly
+    * materialized (the flag join reads it as its build side). Returns
+    * the frame plus its observed row count (rides the materialization
+    * job; no extra action).
+    */
+  def hotValues(features: DataFrame, cfg: Config = Config()): (DataFrame, Long) = {
     val thresholdOf = typedlit(valueCols.map { case (f, _, kind) =>
       f -> (kind match {
         case "addr"  => cfg.addrThreshold
@@ -90,28 +96,40 @@ object Generic {
         case _       => cfg.threshold
       })
     }.toMap)
-    val hot = Materialize(exploded.groupBy("fam", "v").count()
+    val hot = Materialize(familyValues(features).groupBy("fam", "v").count()
       .filter(col("count") >= element_at(thresholdOf, col("fam")))
       .select("fam", "v"), "generic_hot", None)
     (hot.df, hot.rows)
   }
 
-  /** Augment the feature table with boolean `*_generic` flags: one
-    * equi-join per family against the shared hot frame (distinct keys —
-    * no row multiplication; null values never match — flag false).
-    * No driver-side value set ever exists (round-2 collected + inlined
-    * the hot sets as literal isin predicates — linear driver growth and
-    * the janino giant-In failure mode at corpus scale).
+  /** Augment the feature table with boolean `*_generic` flags, appended
+    * in [[valueCols]] order. One join against the hot frame for all
+    * families: the exploded `(doc_id, fam, v)` rows are left-semi
+    * joined to it, the hits are regrouped per doc_id as the list of
+    * that doc's hot `(fam, v)` pairs, and that list is joined back. A
+    * row's flag is whether ITS OWN `(fam, value)` is in the list, so the
+    * flags stay exact when doc_id is not unique (rows sharing a doc_id
+    * share one list, which holds each of their hot values). Rows with
+    * a null doc_id get false flags: doc_id is a required key.
+    *
+    * The join-back is a shuffle join on doc_id: the regrouped frame
+    * grows with the corpus, so it must not be broadcast; only the hot
+    * frame is (under [[Config.maxBroadcastHot]]). No driver-side value
+    * set ever exists (round-2 collected + inlined the hot sets as
+    * literal isin predicates — linear driver growth and the janino
+    * giant-In failure mode at corpus scale).
     */
   def withGenericFlags(features: DataFrame, cfg: Config = Config()): DataFrame = {
     val (hot, nHot) = hotValues(features, cfg)
-    valueCols.foldLeft(features) { case (df, (flagName, valueCol, _)) =>
-      val side = hot.filter(col("fam") === flagName)
-        .select(col("v").as(s"_hv_$flagName"))
-      val build = if (nHot <= cfg.maxBroadcastHot) broadcast(side) else side
-      df.join(build, valueCol === col(s"_hv_$flagName"), "left")
-        .withColumn(flagName, col(s"_hv_$flagName").isNotNull)
-        .drop(s"_hv_$flagName")
-    }
+    val build = if (nHot <= cfg.maxBroadcastHot) broadcast(hot) else hot
+    val hits = familyValues(features, col("doc_id")).join(build, Seq("fam", "v"), "left_semi")
+      .groupBy(col("doc_id").as("_g_doc"))
+      .agg(collect_list(struct(col("fam"), col("v"))).as("_g_hot"))
+    val joined = features.join(hits.hint("shuffle_hash"),
+      features("doc_id") === hits("_g_doc"), "left")
+    valueCols.foldLeft(joined) { case (df, (flagName, valueCol, _)) =>
+      df.withColumn(flagName, coalesce(array_contains(col("_g_hot"),
+        struct(lit(flagName).as("fam"), valueCol.as("v"))), lit(false)))
+    }.drop("_g_doc", "_g_hot")
   }
 }

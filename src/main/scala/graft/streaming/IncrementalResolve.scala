@@ -42,11 +42,17 @@ import org.apache.spark.sql.functions._
   * post-suppression RESOLVED set then catches every flip, wherever it
   * happened, and routes exactly those components back through CC.
   *
-  * State between batches is a [[SnapshotStore]] (atomic snapshot
-  * commits): `docs`, `features_raw`, `blocks`, `edges` (raw scores),
-  * `resolved` (post-suppression RESOLVED pairs), `assignments` —
-  * restart-safe, and the affected-entity diff (consumer.py WITH_INFO
-  * semantics) falls out of comparing consecutive assignment snapshots.
+  * State between batches is a [[SnapshotStore]]: `docs`,
+  * `features_raw`, `blocks`, `edges` (raw scores), `resolved`
+  * (post-suppression RESOLVED pairs), `assignments`. A batch STAGES
+  * each table once — the staged write is the stage boundary, and the
+  * rest of the batch reads it back — then publishes them all at its end
+  * in the order features_raw, blocks, edges, assignments, resolved,
+  * docs. A batch that fails before its publishes leaves the store
+  * unchanged; a crash between publishes leaves a prefix, which the
+  * redelivered batch repairs. The affected-entity diff (consumer.py
+  * WITH_INFO semantics) falls out of comparing consecutive assignment
+  * snapshots.
   * The snapshot rewrites here are sequential columnar IO over plain
   * parquet; in production each maps to an Iceberg row-level MERGE
   * (SURVEY.md §4.2), making the state update itself O(delta) too.
@@ -78,8 +84,19 @@ object IncrementalResolve {
       store: SnapshotStore,
       batch: DataFrame,
       cfg: ResolveJob.Config = ResolveJob.Config()): BatchResult =
+    // Whole-stage codegen is off for the whole batch, not only for
+    // scoring (see ResolveJob for the scoring reason). A 50-doc batch is
+    // ~60 small jobs, and every fused stage is its own generated class;
+    // per-operator classes repeat across stages instead. Measured on a
+    // steady-state batch of 2000 synthetic entities: 179 distinct
+    // classes with it on, 116 off. Spark's compiled-class cache holds
+    // 100 (a static conf of the caller's session), so a batch that
+    // needs more recompiles most of them every time, at ~20 ms each.
+    // At 20000 entities the window measured 13.5 s against 16.0 s per
+    // batch.
     graft.util.Confs.withConfs(spark)(
-      "spark.sql.constraintPropagation.enabled" -> "false") {
+      "spark.sql.constraintPropagation.enabled" -> "false",
+      "spark.sql.codegen.wholeStage" -> "false") {
       processBatchInner(spark, store, batch, cfg)
     }
 
@@ -112,16 +129,17 @@ object IncrementalResolve {
       val t = Materialize(newDocs0, "inc_touched", None)
       (t.df, t.df, t.rows)
     }
-    // NOTE: the docs snapshot is committed LAST (end of this method).
-    // The content-hash dedup above keys off the PREVIOUS docs snapshot,
-    // so committing docs only after every derived table makes a crashed
-    // batch re-runnable: redelivery sees the batch docs as touched and
-    // recomputes every derived row idempotently (each merge below is
-    // snapshot.anti-join(touched) + recomputed rows). Committing docs
-    // first would turn the redelivered batch into a content-hash no-op
-    // and silently drop it from features/edges/assignments.
-    val docsSnap = Materialize(allDocs, "inc_docs", None).df
-    val touchedIds = Materialize(touched.select("doc_id"), "inc_touched_ids", None).df
+    // Every table is STAGED here (written once, unpublished) and
+    // published only at the end of the batch, in a fixed order (see
+    // there). The content-hash dedup above keys off the PREVIOUS docs
+    // snapshot, so docs is published LAST: a crashed batch is then
+    // re-runnable, because redelivery sees the batch docs as touched
+    // and recomputes every derived row idempotently (each merge below
+    // is snapshot.anti-join(touched) + recomputed rows). Publishing
+    // docs first would turn the redelivered batch into a content-hash
+    // no-op and silently drop it from features/edges/assignments.
+    val docsStaged = store.stage(allDocs, "docs")
+    val touchedIds = touched.select("doc_id")
 
     // normalize ONLY the touched docs (the per-row CPU-heavy stage);
     // untouched docs' features come from the persisted snapshot
@@ -131,11 +149,10 @@ object IncrementalResolve {
         .join(touchedIds, Seq("doc_id"), "left_anti")
         .unionByName(featsNew)
     } else featsNew
-    val featsRawSnap = Materialize(featsRaw, "inc_features_raw", None).df
-    store.commit(featsRawSnap, "features_raw")
+    val featsRawStaged = store.stage(featsRaw, "features_raw")
     // generic flags: corpus-wide hot-value thresholds — one aggregate
-    // scan of the feature snapshot + per-family joins (no per-row CPU)
-    val feats = Materialize(Generic.withGenericFlags(featsRawSnap, cfg.generic),
+    // scan of the feature snapshot + one flag join (no per-row CPU)
+    val feats = Materialize(Generic.withGenericFlags(featsRawStaged.df, cfg.generic),
       "inc_features", None).df
 
     // blocking keys ONLY for touched docs, merged into the persisted
@@ -147,12 +164,11 @@ object IncrementalResolve {
         .join(touchedIds, Seq("doc_id"), "left_anti")
         .unionByName(keysNew)
     } else keysNew
-    val blocksSnap = Materialize(blocksMerged, "inc_blocks", None).df
-    store.commit(blocksSnap, "blocks")
+    val blocksStaged = store.stage(blocksMerged, "blocks")
 
     // candidate pairs restricted to those touching a new/changed doc;
     // mega-hot keys are down-sampled (never dropped) on the ALL side
-    val blocksAll = Blocking.cappedBlocks(blocksSnap, cfg.blocking)
+    val blocksAll = Blocking.cappedBlocks(blocksStaged.df, cfg.blocking)
     val blocksNew = blocksAll.join(touchedIds, "doc_id")
     val l = blocksAll.select(col("bkey"), col("doc_id").as("doc_a"))
     val r = blocksNew.select(col("bkey"), col("doc_id").as("doc_b"))
@@ -163,11 +179,8 @@ object IncrementalResolve {
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
       .distinct(), "inc_pairs", None).df
 
-    val newEdges = graft.util.Confs.withConfs(spark)(
-      "spark.sql.codegen.wholeStage" -> "false") {
-      Materialize(graft.score.Scoring.scorePairs(touchingPairs, feats, cfg.weights),
-        "inc_edges_new", None).df
-    }
+    val newEdges = Materialize(graft.score.Scoring.scorePairs(touchingPairs, feats, cfg.weights),
+      "inc_edges_new", None).df
 
     val edges = if (store.exists("edges")) {
       // old↔old edges not touching a changed doc stay valid; every edge
@@ -181,16 +194,16 @@ object IncrementalResolve {
         .join(touchedIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
       prev.unionByName(newEdges)
     } else newEdges
-    val edgesSnap = Materialize(edges, "inc_edges", None).df
-    store.commit(edgesSnap, "edges") // RAW scores; ambiguity re-derives
-    // per batch from the full merged edge set (a new doc can create or
-    // dissolve a conflict, and cascades cross POSSIBLY_SAME bridges),
-    // matching the batch job's semantics; cost is bounded by the sparse
-    // strong-edge set, not the corpus
-    val suppressed = graft.score.Ambiguity.suppress(edgesSnap, feats)
-    val currResolved = Materialize(suppressed.edges
+    val edgesStaged = store.stage(edges, "edges") // RAW scores; ambiguity
+    // re-derives per batch from the full merged edge set (a new doc can
+    // create or dissolve a conflict, and cascades cross POSSIBLY_SAME
+    // bridges), matching the batch job's semantics; cost is bounded by
+    // the sparse strong-edge set, not the corpus
+    val suppressed = graft.score.Ambiguity.suppress(edgesStaged.df, feats)
+    val resolvedStaged = store.stage(suppressed.edges
       .filter(col("level") === "RESOLVED")
-      .select("doc_a", "doc_b"), "inc_resolved", None).df
+      .select("doc_a", "doc_b"), "resolved")
+    val currResolved = resolvedStaged.df
 
     // connected components over ONLY the affected subgraph: components
     // (by previous labels) containing any endpoint of an added/removed
@@ -235,34 +248,36 @@ object IncrementalResolve {
           .select("doc_id", "entity_id")
         (carried.unionByName(sub.select("doc_id", "entity_id")), aff.rows)
       case None =>
-        val allIds = Materialize(docsSnap.select("doc_id"), "inc_all_ids", None)
+        val allIds = Materialize(docsStaged.df.select("doc_id"), "inc_all_ids", None)
         val (assign, _) = ConnectedComponents.assign(
           spark, allIds.df, currResolved, cfg.checkpointDir)
         (assign, allIds.rows)
     }
-    val assignSnap = Materialize(assignments, "inc_assignments", None).df
+    val assignStaged = store.stage(assignments, "assignments")
+    val assignSnap = assignStaged.df
 
     val affected = if (store.exists("assignments")) {
       // read() binds the snapshot PATH eagerly, so this lazy diff stays
-      // pinned to the pre-batch assignments even after the commit below
+      // pinned to the pre-batch assignments even after the publish below
       val prev = store.read(spark, "assignments")
       SnapshotDiff.affectedEntities(prev, assignSnap)
     } else assignSnap.select("entity_id").distinct()
-    // Commit ORDER is load-bearing: assignments BEFORE resolved. A crash
-    // between them leaves resolved=old, so the redelivered batch's
-    // resolved-diff is non-empty and the affected components (old AND
-    // new endpoints) are recomputed. The reverse order (resolved first)
-    // had a window where resolved=new/assignments=old made the diff
-    // empty, affLabels empty, and new docs that should merge into
-    // existing entities silently kept separate labels. Tradeoff: a
-    // crash AFTER the assignments commit makes the redelivered batch's
-    // affectedEntities diff empty (the notification is lost, the
-    // assignments themselves are correct) — wrong-labels was the worse
-    // failure. Pinned by IncrementalResolveSpec's per-window crash test.
-    store.commit(assignSnap, "assignments")
-    store.commit(currResolved, "resolved")
-    // docs commit LAST — the batch-atomicity marker (see note above)
-    store.commit(docsSnap, "docs")
+    // Publish ORDER is load-bearing: features_raw, blocks, edges, then
+    // assignments BEFORE resolved, and docs last. A crash mid-publish
+    // leaves a prefix of this sequence published. A crash between
+    // assignments and resolved leaves resolved=old, so the redelivered
+    // batch's resolved-diff is non-empty and the affected components
+    // (old AND new endpoints) are recomputed. The reverse order
+    // (resolved first) had a window where resolved=new/assignments=old
+    // made the diff empty, affLabels empty, and new docs that should
+    // merge into existing entities silently kept separate labels.
+    // Tradeoff: a crash AFTER the assignments publish makes the
+    // redelivered batch's affectedEntities diff empty (the notification
+    // is lost, the assignments themselves are correct) — wrong-labels
+    // was the worse failure. Pinned by IncrementalResolveSpec's
+    // per-window crash test.
+    Seq(featsRawStaged, blocksStaged, edgesStaged, assignStaged, resolvedStaged,
+      docsStaged).foreach(store.publish)
 
     BatchResult(assignSnap, affected, nTouched, nTouched, nCcVerts)
   }

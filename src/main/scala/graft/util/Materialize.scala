@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions.{count, lit}
   *    `Dataset.observe`, so counters cost no second action or scan;
   *  - it stores the frame: a parquet snapshot when `dir` is set, else
   *    `localCheckpoint(true)`, which keeps the physical plan's
-  *    outputPartitioning and lives in non-replicated executor storage.
+  *    outputPartitioning and lives in non-replicated executor storage;
+  *    [[into]] takes the store from the caller instead
+  *    (graft.io.SnapshotStore.stage writes the table's next snapshot).
   *
   * Snapshot paths are `<dir>/<applicationId>/<seq>_<tag>`. The per-app
   * subdir follows SparkContext.setCheckpointDir. The JVM-wide sequence
@@ -36,7 +38,24 @@ object Materialize {
   private val seq = new java.util.concurrent.atomic.AtomicLong(0)
 
   def apply(df: DataFrame, tag: String, dir: Option[String],
-      extras: (String, Column)*): Result = {
+      extras: (String, Column)*): Result =
+    into(df, tag, extras: _*) { observed =>
+      dir match {
+        case Some(d) =>
+          val sc = df.sparkSession.sparkContext
+          val path = s"$d/${sc.applicationId}/${seq.getAndIncrement}_$tag"
+          observed.write.parquet(path)
+          df.sparkSession.read.parquet(path)
+        case None => observed.localCheckpoint(true)
+      }
+    }
+
+  /** The same boundary with a caller-supplied store: `store` runs the
+    * one job that keeps the observed frame and returns the frame read
+    * back (e.g. a snapshot store's staged write).
+    */
+  def into(df: DataFrame, tag: String, extras: (String, Column)*)
+      (store: DataFrame => DataFrame): Result = {
     val sc = df.sparkSession.sparkContext
     // UUID name: the Observation registry matches metrics by name
     // session-wide, and concurrent runs must not cross-wire them
@@ -46,13 +65,7 @@ object Materialize {
     // restore, not clear: the caller may have set its own description
     val prior = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"graft:$tag")
-    val out = try dir match {
-      case Some(d) =>
-        val path = s"$d/${sc.applicationId}/${seq.getAndIncrement}_$tag"
-        observed.write.parquet(path)
-        df.sparkSession.read.parquet(path)
-      case None => observed.localCheckpoint(true)
-    } finally sc.setJobDescription(prior)
+    val out = try store(observed) finally sc.setJobDescription(prior)
     val row = obs.get
     Result(out, row("rows").asInstanceOf[Long],
       extras.map { case (k, _) => k -> row(k).asInstanceOf[Long] }.toMap)

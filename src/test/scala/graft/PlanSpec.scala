@@ -102,6 +102,19 @@ class PlanSpec extends AnyFunSuite {
     assert(phys.contains("BroadcastHashJoin"), phys.take(1500))
   }
 
+  test("withGenericFlags plans exactly one BroadcastExchange") {
+    import graft.normalize.Normalize
+    import graft.score.Generic
+    import graft.sources.DocCorpus
+    val docs = DocCorpus.synthetic(spark, 300).toDF().localCheckpoint(true)
+    val flagged = Generic.withGenericFlags(Normalize.features(docs).localCheckpoint(true))
+    flagged.write.mode("overwrite").format("noop").save()
+    // the hot frame is the only build side broadcast, for every family;
+    // the per-doc flags grow with the corpus and are joined by shuffle
+    val phys = flagged.queryExecution.executedPlan.toString
+    assert("BroadcastExchange".r.findAllMatchIn(phys).size == 1, phys)
+  }
+
   test("hot-key suppression anti-join broadcasts the small hot head at runtime (AQE)") {
     import graft.blocking.Blocking
     import graft.normalize.Normalize
