@@ -72,31 +72,6 @@ object Bench {
     s
   }
 
-  /** Pairwise F1 vs the synthetic corpus's known ground truth (doc ids
-    * encode the entity: truth = (record_id − 10^6) / 3). Computed from
-    * the (predicted, truth) contingency counts — Σ C(n,2) per cell /
-    * row / column — so no pair set is ever materialized; O(docs).
-    */
-  private def syntheticPairF1(assignments: org.apache.spark.sql.DataFrame): Double = {
-    import org.apache.spark.sql.functions._
-    val lab = assignments.select(col("entity_id"),
-      floor((split(col("doc_id"), ":").getItem(1).cast("long") - 1000000L) / 3)
-        .as("truth"))
-    def pairs(grouped: org.apache.spark.sql.DataFrame): Long =
-      grouped.agg(coalesce(sum((col("n") * (col("n") - 1) / 2).cast("long")), lit(0L)))
-        .head().getLong(0)
-    val cell = lab.groupBy("entity_id", "truth").agg(count(lit(1)).as("n"))
-    val tp = pairs(cell)
-    val predP = pairs(lab.groupBy("entity_id").agg(count(lit(1)).as("n")))
-    val trueP = pairs(lab.groupBy("truth").agg(count(lit(1)).as("n")))
-    if (predP == 0 || trueP == 0) 0.0
-    else {
-      val prec = tp.toDouble / predP
-      val rec = tp.toDouble / trueP
-      if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
-    }
-  }
-
   /** Session for one scaling level. Default topology is single-JVM
     * `local[N]`; `SPARK_GRAFT_SCALE_TOPOLOGY=multi-jvm` stands up a
     * real standalone cluster on this box instead —
@@ -174,7 +149,7 @@ object Bench {
           .asScala.map(_.getCollectionTime).sum / 1000.0
       }
       println(f"STAGEMS cpus=$cpus resolve=$tResolve%.1f write=$tWrite%.1f gc=$gcSec%.1f $stages")
-      (nDocs, secs, syntheticPairF1(result.assignments))
+      (nDocs, secs, DocCorpus.syntheticPairF1(result.assignments)._3)
     } finally spark.stop()
   }
 

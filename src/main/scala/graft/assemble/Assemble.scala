@@ -170,18 +170,6 @@ object Assemble {
 
   private def perDocMatchInfo(resolvedEdges: DataFrame,
       assignments: DataFrame): DataFrame = {
-    // edge frames without the Scoring export-key flags (slim test
-    // fixtures) fall back to plain term unioning
-    val xkCols = Seq("xk_name_add", "xk_name_pname", "xk_name_cmp")
-    val e1 = xkCols.foldLeft(resolvedEdges) { (df, c) =>
-      if (df.columns.contains(c)) df else df.withColumn(c, lit(false))
-    }
-    val e2 = if (e1.columns.contains("xk_name_lvl")) e1
-      else e1.withColumn("xk_name_lvl", lit(null).cast("string"))
-    val e3 = if (e2.columns.contains("xk_ssn_short")) e2
-      else e2.withColumn("xk_ssn_short", lit(false))
-    val e0 = if (e3.columns.contains("xk_nid_close")) e3
-      else e3.withColumn("xk_nid_close", lit(false))
     val terms0 = filter(split(col("match_key"), "(?=[+-])"), t => t =!= "")
     // edge-level name-term adjustments (see Scoring's xk flag doc): a
     // truncation given adds +NAME; a mid-band given against a strong
@@ -194,7 +182,7 @@ object Assemble {
     // edges are canonical doc_a < doc_b, so the seed is always doc_a):
     // its name class overrides the union's name slot — see
     // renderKeyUnion
-    val seedName = e0
+    val seedName = resolvedEdges
       .join(assignments.select(col("entity_id").as("doc_a"),
         col("doc_id").as("doc_b")), Seq("doc_a", "doc_b"), "left_semi")
       .filter(col("xk_name_cmp"))
@@ -207,7 +195,7 @@ object Assemble {
         col("xk_name_lvl").as("name_lvl"),
         col("xk_ssn_short").as("ssn_short"),
         col("xk_nid_close").as("nid_close"))
-    val unionKey = e0
+    val unionKey = resolvedEdges
       .select(col("doc_b").as("doc_id"), termsEdge.as("terms"))
       .groupBy("doc_id")
       .agg(array_distinct(flatten(collect_list(col("terms")))).as("terms"))
@@ -233,8 +221,9 @@ object Assemble {
     * @param features Normalize.features output
     * @param docsWithSpans (doc_id, spans)
     * @param assignments (doc_id, entity_id)
-    * @param edges scored edges with `level` (and optionally
-    *        `is_ambiguous` from graft.score.Ambiguity)
+    * @param edges scored edges as graft.score.Ambiguity emits them:
+    *        Scoring's columns (`level`, `score`, `match_key` and the
+    *        `xk_*` export-key flags) plus `is_ambiguous`
     * @param numberEntities dense ascending ENTITY_ID longs and dense
     *        LIB_FEAT_IDs (distributed range numbering); when false,
     *        ids are stable hashes/keys — no numbering pass at all.
@@ -266,10 +255,7 @@ object Assemble {
         */
       checkpointDir: Option[String] = None): DataFrame = {
 
-    val edgesA =
-      if (edges.columns.contains("is_ambiguous")) edges
-      else edges.withColumn("is_ambiguous", lit(false))
-    val resolved = edgesA.filter(col("level") === "RESOLVED")
+    val resolved = edges.filter(col("level") === "RESOLVED")
     val matchInfo = perDocMatchInfo(resolved, assignments)
 
     // dense ENTITY_IDs (distributed range numbering off the narrow
@@ -473,23 +459,17 @@ object Assemble {
     // then denials, with the name class from the best cross pair; the
     // level is POSSIBLY_SAME exactly when full name support (+NAME)
     // exists, POSSIBLY_RELATED otherwise. ----
-    val nonResolved = edgesA.filter(col("level") =!= "RESOLVED")
+    val nonResolved = edges.filter(col("level") =!= "RESOLVED")
     val relAssign = relatedAssignments.getOrElse(assignments)
     val aAssign = relAssign
       .select(col("doc_id").as("doc_a"), col("entity_id").as("entity_a"))
     val bAssign = relAssign
       .select(col("doc_id").as("doc_b"), col("entity_id").as("entity_b"))
-    val relCols = Seq("xk_rel_name", "xk_email_eq", "xk_phone_eq")
-    val nonResolvedX = relCols.foldLeft(nonResolved) { (df, c) =>
-      if (df.columns.contains(c)) df
-      else if (c == "xk_rel_name") df.withColumn(c, lit(null).cast("string"))
-      else df.withColumn(c, lit(false))
-    }
     val relTerms = filter(split(col("match_key"), "(?=[+-])"), t => t =!= "")
     val nameRank = when(col("xk_rel_name") === "NAME", 3)
       .when(col("xk_rel_name") === "PNAME", 2)
       .when(col("xk_rel_name") === "SURNAME", 1).otherwise(0)
-    val crossEdges = nonResolvedX
+    val crossEdges = nonResolved
       .join(aAssign, "doc_a").join(bAssign, "doc_b")
       .filter(col("entity_a") =!= col("entity_b"))
       // canonicalize the ENTITY pair: both edge orientations (a doc of

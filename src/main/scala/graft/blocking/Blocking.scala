@@ -4,8 +4,8 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Candidate generation: deterministic blocking keys + optional
-  * MinHash-LSH fuzzy-name bands, with explicit hot-key handling.
+/** Candidate generation: deterministic blocking keys + MinHash-LSH
+  * fuzzy-name bands, with explicit hot-key handling.
   *
   * The reference delegates candidate generation to Senzing ⬛; the
   * observable contract is that every merged pair in
@@ -33,21 +33,21 @@ import org.apache.spark.sql.functions._
   */
 object Blocking {
 
-  /** LSH banding: P(candidate) = 1-(1-J^rows)^bands — rows=6 keeps the
-    * low-similarity mass out (J=0.2 pairs: ~4e-4) while J≥0.8 name
-    * pairs still collide with p≈0.85.
-    */
   final case class Config(
       maxBlockSize: Int = 64,
       megaCap: Int = 128,
       salts: Int = 16,
-      useLsh: Boolean = true,
-      lshBands: Int = 6,
-      lshRows: Int = 6,
       /** Durable tier checkpoints for the candidate self-join — see
         * Dedup.BlockBounds.checkpointDir (executor-loss survival).
         */
       checkpointDir: Option[String] = None)
+
+  /** LSH banding: P(candidate) = 1-(1-J^rows)^bands — rows=6 keeps the
+    * low-similarity mass out (J=0.2 pairs: ~4e-4) while J≥0.8 name
+    * pairs still collide with p≈0.85.
+    */
+  private val LshBands = 6
+  private val LshRows = 6
 
   /** (doc_id, bkey) pairs, exploded and de-duplicated. */
   def blockingKeys(features: DataFrame, cfg: Config = Config()): DataFrame = {
@@ -72,36 +72,28 @@ object Blocking {
         col("dob.y").cast("string"), lit(":"), col("dob.m").cast("string")),
       concat(lit("ND:"), soundex(get(split(col("surname"), " "), lit(0))), lit(":"),
         col("dob.y").cast("string"), lit(":"), col("dob.d").cast("string")))
-    val allKeys =
-      if (cfg.useLsh)
-        concat(detKeys,
-          when(length(nameForLsh) >= 4,
-            transform(
-              GraftFunctions.minhash_band_keys(nameForLsh, 3, cfg.lshBands, cfg.lshRows),
-              b => concat(lit("L:"), b.cast("string"))))
-            .otherwise(array().cast("array<string>")))
-      else detKeys
+    val allKeys = concat(detKeys,
+      when(length(nameForLsh) >= 4,
+        transform(
+          GraftFunctions.minhash_band_keys(nameForLsh, 3, LshBands, LshRows),
+          b => concat(lit("L:"), b.cast("string"))))
+        .otherwise(array().cast("array<string>")))
     features
       .select(col("doc_id"), explode(allKeys).as("bkey"))
       .filter(col("bkey").isNotNull)
       .distinct()
   }
 
-  /** Hot keys with their block sizes (size > cfg.maxBlockSize). The
-    * Zipf head is small by construction → broadcast in
-    * [[candidatePairs]] / [[cappedBlocks]].
-    */
-  def hotKeys(blocks: DataFrame, cfg: Config): DataFrame =
-    blocks.groupBy("bkey").count().filter(col("count") > cfg.maxBlockSize)
-
   /** Blocks with mega keys (size > cfg.megaCap) deterministically
     * down-sampled to ~megaCap members (hash-mod of doc_id — stable
     * across runs and parallelism levels). Hot-but-not-mega keys keep
     * every member. Used by the incremental path, which joins new-doc
-    * blocks against all blocks rather than self-joining.
+    * blocks against all blocks rather than self-joining. The mega keys
+    * are the Zipf head, small by construction, hence the broadcast.
     */
   def cappedBlocks(blocks: DataFrame, cfg: Config = Config()): DataFrame = {
-    val mega = hotKeys(blocks, cfg).filter(col("count") > cfg.megaCap)
+    val mega = blocks.groupBy("bkey").count()
+      .filter(col("count") > cfg.maxBlockSize && col("count") > cfg.megaCap)
       .withColumn("keep_mod", ceil(col("count").cast("double") / cfg.megaCap).cast("long"))
       .select("bkey", "keep_mod")
     blocks.join(broadcast(mega), Seq("bkey"), "left")

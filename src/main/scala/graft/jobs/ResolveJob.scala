@@ -60,7 +60,7 @@ object ResolveJob {
       metrics: Map[String, Long],
       resumedStages: Seq[String],
       /** wall millis per materialized stage, insertion-ordered —
-        * feeds the scaling-profile decomposition in Bench */
+        * feeds the scaling-profile decomposition in Bench and ScaleEval */
       stageMillis: Seq[(String, Long)] = Seq.empty)
 
   def run(spark: SparkSession, docs: DataFrame, cfg: Config = Config()): Result =
@@ -78,7 +78,6 @@ object ResolveJob {
   private def runInner(spark: SparkSession, docs: DataFrame, cfg: Config): Result = {
     val store = cfg.snapshotRoot.map(new SnapshotStore(_))
     val resumed = scala.collection.mutable.ArrayBuffer[String]()
-    val stageRows = scala.collection.mutable.Map[String, Long]()
     val stageMs = scala.collection.mutable.ArrayBuffer[(String, Long)]()
     def timed[T](name: String)(body: => T): T = {
       val t0 = System.nanoTime()
@@ -93,27 +92,21 @@ object ResolveJob {
       * (graft.util.Materialize).
       */
     def stage(name: String, extras: (String, org.apache.spark.sql.Column)*)
-        (build: => DataFrame): DataFrame = timed(name) {
-      def record(m: Materialize.Result): DataFrame = {
-        stageRows(name) = m.rows
-        m.extras.foreach { case (k, v) => stageRows(s"$name.$k") = v }
-        m.df
-      }
+        (build: => DataFrame): Materialize.Result = timed(name) {
       store match {
         case Some(st) if st.exists(name) =>
           resumed += name
-          record(Materialize(st.read(spark, name), name, None, extras: _*))
+          Materialize(st.read(spark, name), name, None, extras: _*)
         case Some(st) =>
           val staged = st.stage(build, name, extras: _*)
           st.publish(staged)
-          val df = record(staged.written)
-          val lineage = df
+          val lineage = staged.df
             .groupBy(spark_partition_id().as("partition_id"))
             .agg(count(lit(1)).as("rows"))
             .withColumn("stage", lit(name))
           st.commit(lineage, s"_lineage_$name")
-          df
-        case None => record(Materialize(build, name, None, extras: _*))
+          staged.written
+        case None => Materialize(build, name, None, extras: _*)
       }
     }
 
@@ -135,12 +128,10 @@ object ResolveJob {
     def planNondeterministic(df: DataFrame): Boolean =
       df.queryExecution.analyzed.exists(
         _.expressions.exists(_.exists(!_.deterministic)))
-    val docsSnap = store match {
-      case Some(_) => stage("docs")(docs)
-      case None if planNondeterministic(docs) => stage("docs")(docs)
-      case None => docs
-    }
-    val featsRaw = stage("features_raw")(Normalize.features(docsSnap))
+    val docsSnap =
+      if (store.isDefined || planNondeterministic(docs)) stage("docs")(docs).df
+      else docs
+    val featsRaw = stage("features_raw")(Normalize.features(docsSnap)).df
     val feats = stage("features")(Generic.withGenericFlags(featsRaw, cfg.generic))
 
     val pairs = stage("pairs") {
@@ -148,7 +139,7 @@ object ResolveJob {
       // tier frames (durable snapshots, not executor-local blocks)
       val bcfg = cfg.blocking.copy(checkpointDir =
         cfg.blocking.checkpointDir.orElse(cfg.checkpointDir))
-      Blocking.candidatePairs(Blocking.blockingKeys(feats, bcfg), bcfg)
+      Blocking.candidatePairs(Blocking.blockingKeys(feats.df, bcfg), bcfg)
     }
 
     // Whole-stage codegen is disabled for the scoring action only: the
@@ -158,42 +149,36 @@ object ResolveJob {
     // methods fine and compiles. The stage is materialized eagerly
     // inside this conf window. The RESOLVED tally rides the same
     // observation (used directly when suppression fires nothing).
-    val nDocs = stageRows("features")
+    val resolvedTally = "resolved" -> count(when(col("level") === "RESOLVED", 1))
     val rawEdges = graft.util.Confs.withConfs(spark)(
       "spark.sql.codegen.wholeStage" -> "false") {
-      stage("edges_raw",
-        "resolved" -> count(when(col("level") === "RESOLVED", 1))) {
-        Scoring.scorePairs(pairs, feats, cfg.weights,
-          broadcastFeatures = cfg.broadcastFeatures.getOrElse(nDocs < 3000000))
+      stage("edges_raw", resolvedTally) {
+        Scoring.scorePairs(pairs.df, feats.df, cfg.weights,
+          broadcastFeatures = cfg.broadcastFeatures.getOrElse(feats.rows < 3000000))
       }
     }
     // ambiguous-match suppression (Senzing semantics): conflicting
     // comparable claims never merge — see graft.score.Ambiguity.
     // LAZY: a resumed run with committed edges/ambiguous_docs snapshots
     // never evaluates the suppression fixpoint at all.
-    lazy val amb = Ambiguity.suppress(rawEdges, feats)
-    val (edges, ambDocs, nResolved) =
-      if (store.isEmpty && amb.firedCount == 0) {
+    lazy val amb = Ambiguity.suppress(rawEdges.df, feats.df)
+    val (edges, ambDocs) =
+      if (store.isEmpty && amb.firedCount == 0)
         // nothing fired: the suppressed frame IS the raw frame plus a
-        // constant column — skip the second materialization entirely
-        stageRows("edges") = stageRows("edges_raw")
-        stageRows("ambiguous_docs") = 0L
-        (amb.edges, amb.ambiguousDocs, stageRows("edges_raw.resolved"))
-      } else {
-        val e = stage("edges", // on resume: amb never forced
-          "resolved" -> count(when(col("level") === "RESOLVED", 1)))(amb.edges)
-        val a = stage("ambiguous_docs")(amb.ambiguousDocs)
-        (e, a, stageRows("edges.resolved"))
-      }
+        // constant column, and no doc is ambiguous — skip the second
+        // materialization entirely
+        (rawEdges.copy(df = amb.edges), Materialize.Result(amb.ambiguousDocs, 0L, Map.empty))
+      else (stage("edges", resolvedTally)(amb.edges), // on resume: amb never forced
+        stage("ambiguous_docs")(amb.ambiguousDocs))
 
-    val resolved = edges.filter(col("level") === "RESOLVED")
+    val resolved = edges.df.filter(col("level") === "RESOLVED")
     var ccStats = ConnectedComponents.Stats(0, Seq.empty)
     val assignP = stage("assignments") {
       val (assignments, stats) = ConnectedComponents.assign(
-        spark, feats.select("doc_id"), resolved, cfg.checkpointDir)
+        spark, feats.df.select("doc_id"), resolved, cfg.checkpointDir)
       ccStats = stats
       assignments
-    }
+    }.df
 
     // the two intra-assembly localCheckpoints run eagerly here; the
     // final report query stays lazy (timed by the caller's action).
@@ -204,22 +189,21 @@ object ResolveJob {
     // inherits the docs checkpoint's hash(entity_id) layout directly.
     // Identical output either way (union with an empty frame).
     val entities = timed("assemble_eager") {
-      Assemble.entities(feats, docsSnap, assignP, edges,
+      Assemble.entities(feats.df, docsSnap, assignP, edges.df,
         cfg.numberEntities,
-        ambiguousDocs =
-          if (stageRows("ambiguous_docs") == 0L) None else Some(ambDocs),
+        ambiguousDocs = if (ambDocs.rows == 0L) None else Some(ambDocs.df),
         checkpointDir = cfg.checkpointDir)
     }
 
     val metrics = Map(
-      "docs" -> nDocs,
-      "pairs_generated" -> stageRows("pairs"),
-      "pairs_scored" -> stageRows("edges"),
-      "edges_resolved" -> nResolved,
-      "ambiguous_docs" -> stageRows("ambiguous_docs"),
+      "docs" -> feats.rows,
+      "pairs_generated" -> pairs.rows,
+      "pairs_scored" -> edges.rows,
+      "edges_resolved" -> edges.extras("resolved"),
+      "ambiguous_docs" -> ambDocs.rows,
       "cc_iterations" -> ccStats.iterations.toLong)
 
-    Result(docsSnap, feats, edges, assignP, entities, ambDocs, ccStats, metrics,
+    Result(docsSnap, feats.df, edges.df, assignP, entities, ambDocs.df, ccStats, metrics,
       resumed.toSeq, stageMs.toSeq)
   }
 }

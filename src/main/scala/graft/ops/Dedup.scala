@@ -168,6 +168,26 @@ object Dedup {
     }
   }
 
+  /** Exact Jaccard verify of candidate pairs: `pairs` carries the ids
+    * `a`, `b` and their shingle sets `sh_a`, `sh_b`; returns
+    * `(a, b, jaccard)` for the pairs with jaccard ≥ `threshold`.
+    *
+    * PRECONDITION: both sets come from [[wordShingles]], so neither
+    * holds a duplicate. Only then is |A∪B| = |A|+|B|−|A∩B|, which
+    * spares array_union's second hash-set pass per pair and keeps the
+    * quotient bit-identical (r6). The intersection is computed once,
+    * in its own projection.
+    */
+  private[graft] def jaccardAtLeast(pairs: DataFrame, a: String, b: String,
+      threshold: Double): DataFrame =
+    pairs
+      .select(col(a), col(b),
+        size(col("sh_a")).as("na"), size(col("sh_b")).as("nb"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).as("ni"))
+      .select(col(a), col(b),
+        (col("ni").cast("double") / (col("na") + col("nb") - col("ni"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
   /** Exact pairwise word-shingle Jaccard ≥ threshold within
     * (lang, length-bucket) blocks.
     *
@@ -322,20 +342,12 @@ object Dedup {
         lit(threshold) * col("sz_b") - lit(1e-9) <= col("sz_a"))
       .select("doc_a", "doc_b")
 
-    // |A∪B| = |A|+|B|−|A∩B| — exact for the distinct shingle sets, so
-    // the quotient is bit-identical while array_union's second
-    // hash-set pass per pair is dropped (r6; intersect computed once
-    // in its own projection)
     val sets = withSets.select(col("doc_id"), col("shingles"))
-    val repPairs = cand
+    val repPairs = jaccardAtLeast(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-      .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"),
-        size(col("sh_a")).as("na"), size(col("sh_b")).as("nb"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("ni"))
-      .select(col("rep_a"), col("rep_b"),
-        (col("ni").cast("double") / (col("na") + col("nb") - col("ni"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"), col("sh_a"), col("sh_b")),
+      "rep_a", "rep_b", threshold)
     NgramRep(docToRep, repPairs)
   }
 
@@ -371,17 +383,10 @@ object Dedup {
     // re-tokenization scans it saves — the repo's narrow-frames-only
     // checkpoint discipline.
     val sets = docs.select(col("doc_id"), wordShingles(lower(col("text")), 1).as("sh"))
-    cand
+    jaccardAtLeast(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      // |A∪B| = |A|+|B|−|A∩B| over distinct sets — bit-identical
-      // quotient, one set pass per pair instead of two (r6)
-      .select(col("doc_a"), col("doc_b"),
-        size(col("sh_a")).as("na"), size(col("sh_b")).as("nb"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("ni"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("ni").cast("double") / (col("na") + col("nb") - col("ni"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b"),
+      "doc_a", "doc_b", threshold)
   }
 
   /** Oracle-checkable MinHash-LSH twin of [[minhashNearDupPairs]]:
@@ -425,17 +430,10 @@ object Dedup {
     // kernel variant keeps the bounded scale behavior.
     val cand = boundedSelfJoinPairs(banded, Seq("band"), "doc_id",
       bounds.copy(megaCap = Int.MaxValue))
-    cand
+    jaccardAtLeast(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      // |A∪B| = |A|+|B|−|A∩B| over distinct sets — bit-identical
-      // quotient, one set pass per pair instead of two (r6)
-      .select(col("doc_a"), col("doc_b"),
-        size(col("sh_a")).as("na"), size(col("sh_b")).as("nb"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("ni"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("ni").cast("double") / (col("na") + col("nb") - col("ni"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b"),
+      "doc_a", "doc_b", threshold)
   }
 
   /** 64-bit SimHash per doc (codegen'd kernel; see

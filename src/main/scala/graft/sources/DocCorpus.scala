@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import graft.model.{Doc, Span}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sources producing the canonical interleaved-document table
@@ -217,6 +217,34 @@ object DocCorpus {
           }
         }
       }
+  }
+
+  /** Ground-truth entity of a [[synthetic]] doc id: `SYNTH:<record_id>`
+    * with record_id = 10^6 + 3·entity + variant.
+    */
+  def syntheticTruth(docId: Column): Column =
+    floor((split(docId, ":").getItem(1).cast("long") - 1000000L) / 3)
+
+  /** Pairwise (precision, recall, F1) of `assignments` (doc_id,
+    * entity_id) over a [[synthetic]] corpus against its ground truth.
+    * Computed from the (predicted, truth) contingency counts — Σ C(n,2)
+    * per cell / row / column — so no pair set is ever materialized;
+    * O(docs). With no predicted or no true pair all three are 0.
+    */
+  def syntheticPairF1(assignments: DataFrame): (Double, Double, Double) = {
+    val lab = assignments.select(col("entity_id"), syntheticTruth(col("doc_id")).as("truth"))
+    def pairs(grouped: DataFrame): Long =
+      grouped.agg(coalesce(sum((col("n") * (col("n") - 1) / 2).cast("long")), lit(0L)))
+        .head().getLong(0)
+    val tp = pairs(lab.groupBy("entity_id", "truth").agg(count(lit(1)).as("n")))
+    val predP = pairs(lab.groupBy("entity_id").agg(count(lit(1)).as("n")))
+    val trueP = pairs(lab.groupBy("truth").agg(count(lit(1)).as("n")))
+    if (predP == 0 || trueP == 0) (0.0, 0.0, 0.0)
+    else {
+      val prec = tp.toDouble / predP
+      val rec = tp.toDouble / trueP
+      (prec, rec, if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec))
+    }
   }
 
   /** Validation filter (reference P2): doc must have an id and ≥1 span. */

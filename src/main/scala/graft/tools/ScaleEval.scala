@@ -1,117 +1,66 @@
 package graft.tools
 
-import graft.blocking.Blocking
-import graft.cluster.ConnectedComponents
-import graft.normalize.Normalize
-import graft.score.{Ambiguity, Generic, Scoring}
+import graft.jobs.ResolveJob
 import graft.sources.DocCorpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Stage-level wall-clock + precision/recall breakdown on the 400k-doc
-  * synthetic corpus — the profiling harness behind the scaling bench's
-  * headline number.
+/** Stage-level wall-clock + precision/recall breakdown of the engine's
+  * batch resolve (ResolveJob.run, default Config) on the synthetic
+  * corpus — the profiling harness behind the scaling bench's headline
+  * number.
+  *
+  * Environment: `SCALE_EVAL_ENTITIES` (default 200000 entities, ~2 docs
+  * each) and `SCALE_EVAL_CORES` (default 16; local[N], N shuffle
+  * partitions).
   */
 object ScaleEval {
-
-  private def timed[T](name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    println(f"[stage] $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
-    r
-  }
-
-  def prf(assignments: DataFrame): (Double, Double, Double) = {
-    val lab = assignments.select(col("entity_id"),
-      floor((split(col("doc_id"), ":").getItem(1).cast("long") - 1000000L) / 3)
-        .as("truth"))
-    def pairs(g: DataFrame): Long =
-      g.agg(coalesce(sum((col("n") * (col("n") - 1) / 2).cast("long")), lit(0L)))
-        .head().getLong(0)
-    val tp = pairs(lab.groupBy("entity_id", "truth").agg(count(lit(1)).as("n")))
-    val pp = pairs(lab.groupBy("entity_id").agg(count(lit(1)).as("n")))
-    val ap = pairs(lab.groupBy("truth").agg(count(lit(1)).as("n")))
-    val p = tp.toDouble / pp; val r = tp.toDouble / ap
-    (p, r, 2 * p * r / (p + r))
-  }
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SCALE_EVAL_ENTITIES", "200000").toLong
     val cores = sys.env.getOrElse("SCALE_EVAL_CORES", "16").toInt
-    val suppress = !sys.env.contains("SCALE_EVAL_NO_AMBIGUITY")
     val spark = SparkSession.builder().master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    if (!sys.env.contains("SCALE_EVAL_NO_WARMUP")) {
-      // populate the JVM-wide generated-code cache (driver-serial janino
-      // compilation would otherwise pollute the stage timings)
-      val t0 = System.nanoTime()
-      graft.jobs.ResolveJob.run(spark,
-        DocCorpus.synthetic(spark, 2000, seed = 7L).toDF(),
-        graft.jobs.ResolveJob.Config(numberEntities = false))
-        .entities.write.mode("overwrite").format("noop").save()
-      println(f"[stage] warmup            ${(System.nanoTime() - t0) / 1e9}%8.1f s")
+    def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+    def resolve(docs: DataFrame): ResolveJob.Result = {
+      val r = ResolveJob.run(spark, docs)
+      // the final entity report is lazy: force every column of it
+      r.entities.write.mode("overwrite").format("noop").save()
+      r
     }
 
-    val gcfg = Generic.Config(
-      nameThreshold = sys.env.getOrElse("SCALE_EVAL_NAMETHRESH", "8").toInt)
-    val docs = timed("synthesize")(
-      DocCorpus.synthetic(spark, n).toDF().localCheckpoint(true))
-    val feats = timed("normalize+generic")(
-      Generic.withGenericFlags(Normalize.features(docs).localCheckpoint(true), gcfg)
-        .localCheckpoint(true))
-    val bcfg = Blocking.Config(
-      maxBlockSize = sys.env.getOrElse("SCALE_EVAL_MAXBLOCK", "64").toInt,
-      megaCap = sys.env.getOrElse("SCALE_EVAL_MEGACAP", "1024").toInt)
-    val pairs = timed("blocking+pairs")(
-      Blocking.candidatePairs(Blocking.blockingKeys(feats, bcfg), bcfg)
-        .localCheckpoint(true))
-    println(s"  pairs: ${pairs.count()}")
-    val rawEdges = timed("scoring") {
-      graft.util.Confs.withConfs(spark)("spark.sql.codegen.wholeStage" -> "false") {
-        Scoring.scorePairs(pairs, feats,
-          broadcastFeatures = !sys.env.contains("SCALE_EVAL_NO_BCAST"))
-          .localCheckpoint(true)
-      }
+    // populate the JVM-wide generated-code cache (driver-serial janino
+    // compilation would otherwise pollute the stage timings)
+    val tWarm = System.nanoTime()
+    resolve(DocCorpus.synthetic(spark, 2000, seed = 7L).toDF())
+    println(f"[stage] warmup             ${secs(tWarm)}%8.1f s")
+
+    val t0 = System.nanoTime()
+    val r = resolve(DocCorpus.synthetic(spark, n).toDF())
+    r.stageMillis.foreach { case (stage, ms) =>
+      println(f"[stage] $stage%-18s ${ms / 1e3}%8.1f s")
     }
-    println(s"  edges: ${rawEdges.count()} resolved: ${rawEdges.filter(col("level") === "RESOLVED").count()}")
-    if (sys.env.contains("SCALE_EVAL_EDGE_BREAKDOWN")) {
-      val truth = docs.select(col("doc_id"),
-        floor((split(col("doc_id"), ":").getItem(1).cast("long") - 1000000L) / 3)
-          .as("t"))
-      rawEdges.filter(col("level") === "RESOLVED")
-        .join(truth.select(col("doc_id").as("doc_a"), col("t").as("ta")), "doc_a")
-        .join(truth.select(col("doc_id").as("doc_b"), col("t").as("tb")), "doc_b")
-        .groupBy("match_key")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("ta") =!= col("tb"), 1).otherwise(0)).as("false_n"))
-        .orderBy(col("false_n").desc)
-        .show(25, truncate = false)
-    }
-    val (edges, ambDocs) = if (suppress) timed("ambiguity") {
-      val a = Ambiguity.suppress(rawEdges, feats)
-      val e = a.edges.localCheckpoint(true)
-      val d = a.ambiguousDocs.localCheckpoint(true)
-      (e, d)
-    } else (rawEdges.withColumn("is_ambiguous", lit(false)), null)
-    if (suppress) println(s"  ambiguous docs: ${ambDocs.count()}")
-    val (assign, stats) = timed("cc") {
-      val (a, s) = ConnectedComponents.assign(spark, feats.select("doc_id"),
-        edges.filter(col("level") === "RESOLVED"))
-      (a.localCheckpoint(true), s)
-    }
-    println(s"  cc iterations: ${stats.iterations}")
-    val entities = timed("assemble") {
-      graft.assemble.Assemble.entities(feats, docs, assign, edges,
-        numberEntities = false,
-        ambiguousDocs = Option(ambDocs)).localCheckpoint(true)
-    }
-    println(s"  entities: ${entities.count()}")
-    val (p, r, f1) = prf(assign)
-    println(f"precision=$p%.4f recall=$r%.4f f1=$f1%.4f suppress=$suppress")
+    println(f"[stage] total              ${secs(t0)}%8.1f s")
+    r.metrics.toSeq.sortBy(_._1).foreach { case (k, v) => println(s"  $k: $v") }
+    println(s"  cc per-iteration edges: ${r.ccStats.perIterationEdges.mkString(",")}")
+
+    // false merges per MATCH_KEY: RESOLVED edges whose two docs belong
+    // to different ground-truth entities
+    val truth = r.docs.select(col("doc_id"), DocCorpus.syntheticTruth(col("doc_id")).as("t"))
+    r.edges.filter(col("level") === "RESOLVED")
+      .join(truth.select(col("doc_id").as("doc_a"), col("t").as("ta")), "doc_a")
+      .join(truth.select(col("doc_id").as("doc_b"), col("t").as("tb")), "doc_b")
+      .groupBy("match_key")
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("ta") =!= col("tb"), 1).otherwise(0)).as("false_n"))
+      .orderBy(col("false_n").desc)
+      .show(25, truncate = false)
+
+    val (p, rec, f1) = DocCorpus.syntheticPairF1(r.assignments)
+    println(f"precision=$p%.4f recall=$rec%.4f f1=$f1%.4f")
     spark.stop()
   }
 }

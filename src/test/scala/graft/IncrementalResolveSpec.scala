@@ -6,6 +6,7 @@ import graft.model.Doc
 import graft.sources.DocCorpus
 import graft.streaming.IncrementalResolve
 import graft.tools.FixtureEval
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,20 +23,34 @@ class IncrementalResolveSpec extends AnyFunSuite {
     df.select("doc_id", "entity_id").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
-  test("two incremental batches == one batch resolve (order-insensitive)") {
-    val docs = DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).collect().toSeq
-    val (b1, b2) = docs.splitAt(70)
+  private def fixture = DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath)
+  /** Needs no external fixture: ~300 docs with known ground truth. */
+  private def synthetic = DocCorpus.synthetic(spark, 150, seed = 42L)
+
+  /** Delivers `source` in two batches split after `firstBatch` docs and
+    * checks the result against one batch resolve of all of it.
+    */
+  private def assertTwoBatchesEqualBatch(source: => Dataset[Doc], firstBatch: Int): Unit = {
+    val docs = source.collect().toSeq
+    val (b1, b2) = docs.splitAt(firstBatch)
     val tmp = java.nio.file.Files.createTempDirectory("incstore").toString
     val store = new SnapshotStore(tmp)
 
     val r1 = IncrementalResolve.processBatch(spark, store, b1.toDF())
-    assert(r1.newDocs == 70)
+    assert(r1.newDocs == b1.size)
     val r2 = IncrementalResolve.processBatch(spark, store, b2.toDF())
-    assert(r2.newDocs == 50)
+    assert(r2.newDocs == b2.size)
 
-    val batchRun = ResolveJob.run(spark,
-      DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).toDF())
+    val batchRun = ResolveJob.run(spark, source.toDF())
     assert(assignMap(r2.assignments) == assignMap(batchRun.assignments))
+  }
+
+  test("two incremental batches == one batch resolve (order-insensitive)") {
+    assertTwoBatchesEqualBatch(fixture, 70)
+  }
+
+  test("two incremental batches == one batch resolve on the synthetic corpus") {
+    assertTwoBatchesEqualBatch(synthetic, 175)
   }
 
   test("redelivered (duplicate) docs are idempotent") {
@@ -126,7 +141,11 @@ class IncrementalResolveSpec extends AnyFunSuite {
     assert(m == assignMap(batchRun.assignments))
   }
 
-  test("crashed batch is repaired by redelivery — EVERY crash window in the commit order") {
+  /** Delivers `source` in two batches split after `firstBatch` docs,
+    * fabricates every crash state of the second batch and checks that
+    * redelivering it converges to the clean result.
+    */
+  private def assertEveryCrashWindowRepaired(source: => Dataset[Doc], firstBatch: Int): Unit = {
     // The per-batch commit order is features_raw, blocks, edges,
     // assignments, resolved, docs. A crash leaves exactly a PREFIX of
     // that sequence committed; fabricate each possible crash state by
@@ -138,8 +157,8 @@ class IncrementalResolveSpec extends AnyFunSuite {
     // resolved-diff empty and silently mislabeled merging docs.
     val commitOrder =
       Seq("features_raw", "blocks", "edges", "assignments", "resolved", "docs")
-    val docs = DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).collect().toSeq
-    val (b1, b2) = docs.splitAt(90)
+    val docs = source.collect().toSeq
+    val (b1, b2) = docs.splitAt(firstBatch)
     val cleanDir = java.nio.file.Files.createTempDirectory("incstore6_clean")
     val cleanStore = new SnapshotStore(cleanDir.toString)
     IncrementalResolve.processBatch(spark, cleanStore, b1.toDF())
@@ -173,6 +192,14 @@ class IncrementalResolveSpec extends AnyFunSuite {
       assert(assignMap(store.read(spark, "assignments")) == assignMap(clean.assignments),
         s"rollback of $rollback: committed assignments must match the clean result")
     }
+  }
+
+  test("crashed batch is repaired by redelivery — EVERY crash window in the commit order") {
+    assertEveryCrashWindowRepaired(fixture, 90)
+  }
+
+  test("crashed batch is repaired by redelivery — EVERY crash window, synthetic corpus") {
+    assertEveryCrashWindowRepaired(synthetic, 225)
   }
 
   test("documented drift: carried old↔old edges are NOT rescored when a generic flag flips") {

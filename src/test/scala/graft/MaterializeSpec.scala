@@ -55,9 +55,7 @@ class MaterializeSpec extends AnyFunSuite {
     val allowed = Map(
       "graft/util/Materialize.scala" -> "", // the helper itself
       // harness frame shared by the ANN queries, never released (ROADMAP 5b)
-      "graft/SparkEntry.scala" -> "plantedEmbeddings(",
-      // kept evaluator main: it stages its own timed pipeline
-      "graft/tools/ScaleEval.scala" -> "")
+      "graft/SparkEntry.scala" -> "plantedEmbeddings(")
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"tests must run from the repository root: $root")
     val pattern = """\blocalCheckpoint\(|\bObservation\(""".r

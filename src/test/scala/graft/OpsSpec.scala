@@ -159,6 +159,30 @@ class OpsSpec extends AnyFunSuite {
     assert(java.lang.Long.bitCount(fp(1L) ^ fp(4L)) > 16)
   }
 
+  test("jaccardAtLeast over wordShingles equals the set Jaccard on texts with repeated tokens") {
+    // the |A|+|B|−|A∩B| union is exact only for duplicate-free sets
+    val texts = Seq(
+      "a a b c" -> "a b b d d",
+      "x y x y x" -> "x x y",
+      "the cat the cat sat" -> "the the dog sat sat",
+      "p q r" -> "s t t",
+      "one one" -> "one one one")
+    for (n <- Seq(1, 2)) {
+      val pairs = texts.zipWithIndex.map { case ((l, r), i) => (i.toLong, i + 100L, l, r) }
+        .toDF("doc_a", "doc_b", "ta", "tb")
+        .select(col("doc_a"), col("doc_b"),
+          Dedup.wordShingles(col("ta"), n).as("sh_a"), Dedup.wordShingles(col("tb"), n).as("sh_b"))
+      val got = Dedup.jaccardAtLeast(pairs, "doc_a", "doc_b", 0.0).collect()
+        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      def shingles(t: String) = t.split(" ").sliding(n).map(_.mkString(" ")).toSet
+      val want = texts.zipWithIndex.map { case ((l, r), i) =>
+        val (a, b) = (shingles(l), shingles(r))
+        i.toLong -> a.intersect(b).size.toDouble / a.union(b).size
+      }.toMap
+      assert(got == want, s"n=$n")
+    }
+  }
+
   test("ngram jaccard: identical docs in same block score 1.0") {
     val planted = docs.limit(2).withColumn("doc_id", col("doc_id") + 3000000)
     val pairs = Dedup.ngramJaccard(docs.unionByName(planted), threshold = 0.99)
