@@ -3,6 +3,7 @@ package graft
 import graft.functions.GraftFunctions
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.DocCorpus
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -314,7 +315,7 @@ object SparkEntry {
       // just be re-scanned (cheaper than copying at scale); this input
       // is COMPUTED, so one materialization beats three evaluations.
       Dedup.embeddingNearDupPairs(
-        plantedEmbeddings(t(dir, "embeddings")).localCheckpoint(true),
+        Materialize(plantedEmbeddings(t(dir, "embeddings")), "planted_embeddings", None).df,
         tables = 6, planes = 8, threshold = 0.95, quantized = true,
         bounds = Dedup.BlockBounds(megaCap = Int.MaxValue))
     }),

@@ -4,6 +4,7 @@ import graft.normalize.Normalize.spanText
 import graft.score.ErRule
 import graft.util.{Confs, Materialize}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Entity assembly: cluster assignments + per-doc features → resolved
@@ -32,14 +33,13 @@ object Assemble {
 
   /** Per-doc feature entries: (ftype, desc, canon, usage) — raw
     * description from the spans, grouping key from the normalized
-    * feature columns (the docs frame carries both). Reads the
-    * offset-SORTED spans out of the export-shaped RECORD struct:
-    * extraction is then independent of the array's physical order
-    * (the span-sequence contract is offset order), and the assembly
-    * checkpoint only has to carry ONE copy of the span data.
+    * feature columns (the docs frame carries both), plus the
+    * AMBIGUOUS_ENTITY entry of a doc with a `conflict_desc`. Reads the
+    * offset-SORTED spans `sp` that RECORDS carries: extraction is then
+    * independent of the array's physical order (the span-sequence
+    * contract is offset order).
     */
-  private def docFeatureEntries: Column = {
-    val sp = col("record_struct.SPANS")
+  private def docFeatureEntries(sp: Column): Column = {
     def f(ftype: String, value: Column, canon: Column, usage: Column = lit(null)): Column =
       when(value.isNotNull, struct(lit(ftype).as("ftype"), value.as("desc"),
         coalesce(canon.cast("string"), lower(value)).as("canon"), usage.as("usage")))
@@ -91,7 +91,8 @@ object Assemble {
       f("DRLIC", spanText(sp, "drivers_license_number"), col("drlic")),
       f("NATIONAL_ID", spanText(sp, "national_id_number"), col("national_id")),
       f("GENDER", spanText(sp, "gender"), col("gender")),
-      f("RECORD_TYPE", spanText(sp, "record_type"), upper(trim(spanText(sp, "record_type"))))
+      f("RECORD_TYPE", spanText(sp, "record_type"), upper(trim(spanText(sp, "record_type")))),
+      f("AMBIGUOUS_ENTITY", col("conflict_desc"), col("conflict_desc"))
     ), e => e.isNotNull)
   }
 
@@ -132,16 +133,6 @@ object Assemble {
     concat((nameTerm +: mids) ++ tail: _*)
   }
 
-  /** Per-doc MATCH_KEY with ingest-order emulation. In the reference a
-    * record resolves INTO the growing entity, so its key reflects every
-    * feature that matched the records already loaded — not one edge.
-    * Docs arrive in doc_id order (pairs are canonical doc_a < doc_b):
-    * a doc's key is the union of matched features over all its RESOLVED
-    * edges to EARLIER docs. A doc with no earlier edge (it was merged
-    * by later arrivals) keeps its best edge's key. The cluster seed
-    * (min doc_id = entity_id) reports an empty MATCH_KEY like the
-    * reference's first record of each entity.
-    */
   /** Render a relationship (entity-vs-entity) match key: the name term
     * (from the cross-pair name rank), every agreeing feature in
     * canonical family order, then every denial — the reference's
@@ -168,8 +159,23 @@ object Assemble {
     concat(nameTerm +: (pos ++ neg): _*)
   }
 
-  private def perDocMatchInfo(resolvedEdges: DataFrame,
-      assignments: DataFrame): DataFrame = {
+  /** Per-doc MATCH_KEY inputs with ingest-order emulation. In the
+    * reference a record resolves INTO the growing entity, so its key
+    * reflects every feature that matched the records already loaded —
+    * not one edge. Docs arrive in doc_id order (pairs are canonical
+    * doc_a < doc_b): a doc's key is the union of matched features over
+    * all its RESOLVED edges to EARLIER docs. A doc with no earlier edge
+    * (it was merged by later arrivals) keeps its best edge's key. The
+    * cluster seed (min doc_id = entity_id) reports an empty MATCH_KEY
+    * like the reference's first record of each entity.
+    *
+    * One aggregation over both endpoints of every RESOLVED edge: per
+    * doc the best edge key (`mk_best`), the union of its later-endpoint
+    * terms (`terms`, `n_later` edges) and, per earlier neighbour, the
+    * name class of that edge (`seeds`) — the docs projection picks the
+    * one whose neighbour is the doc's entity seed ([[matchKeyColumns]]).
+    */
+  private def perDocMatchInfo(resolvedEdges: DataFrame): DataFrame = {
     val terms0 = filter(split(col("match_key"), "(?=[+-])"), t => t =!= "")
     // edge-level name-term adjustments (see Scoring's xk flag doc): a
     // truncation given adds +NAME; a mid-band given against a strong
@@ -178,45 +184,207 @@ object Assemble {
       when(col("xk_name_add"), concat(terms0, array(lit("+NAME"))))
         .when(col("xk_name_pname"), concat(terms0, array(lit("+PNAME"))))
         .otherwise(terms0)
-    // the doc's edge to its entity SEED (entity_id = min member doc_id;
-    // edges are canonical doc_a < doc_b, so the seed is always doc_a):
-    // its name class overrides the union's name slot — see
-    // renderKeyUnion
-    val seedName = resolvedEdges
-      .join(assignments.select(col("entity_id").as("doc_a"),
-        col("doc_id").as("doc_b")), Seq("doc_a", "doc_b"), "left_semi")
-      .filter(col("xk_name_cmp"))
-      .select(col("doc_b").as("doc_id"),
-        when(array_contains(termsEdge, "+NAME"), "+NAME")
-          .when(array_contains(termsEdge, "+SURNAME"), "+SURNAME")
-          .when(array_contains(termsEdge, "-NAME"), "-NAME")
-          .when(array_contains(termsEdge, "+PNAME"), "+PNAME")
-          .otherwise("").as("seed_name"),
-        col("xk_name_lvl").as("name_lvl"),
-        col("xk_ssn_short").as("ssn_short"),
-        col("xk_nid_close").as("nid_close"))
-    val unionKey = resolvedEdges
-      .select(col("doc_b").as("doc_id"), termsEdge.as("terms"))
+    val seedName = when(array_contains(termsEdge, "+NAME"), "+NAME")
+      .when(array_contains(termsEdge, "+SURNAME"), "+SURNAME")
+      .when(array_contains(termsEdge, "-NAME"), "-NAME")
+      .when(array_contains(termsEdge, "+PNAME"), "+PNAME")
+      .otherwise("")
+    val later = col("pos") === 1
+    resolvedEdges
+      .select(col("doc_a"), col("doc_b"),
+        struct(col("score"), col("match_key")).as("best"),
+        termsEdge.as("terms"),
+        when(col("xk_name_cmp"), struct(col("doc_a").as("other"),
+          seedName.as("seed_name"), col("xk_name_lvl").as("name_lvl"),
+          col("xk_ssn_short").as("ssn_short"), col("xk_nid_close").as("nid_close")))
+          .as("seed"))
+      .select(posexplode(array(col("doc_a"), col("doc_b"))).as(Seq("pos", "doc_id")),
+        col("best"), col("terms"), col("seed"))
       .groupBy("doc_id")
-      .agg(array_distinct(flatten(collect_list(col("terms")))).as("terms"))
-      .join(seedName, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        renderKeyUnion(col("terms"), col("seed_name")).as("mk_union"),
-        col("name_lvl"), coalesce(col("ssn_short"), lit(false)).as("ssn_short"),
-        coalesce(col("nid_close"), lit(false)).as("nid_close"))
-    val both = resolvedEdges
-      .select(col("doc_a").as("doc_id"), col("score"), col("match_key"))
-      .unionAll(resolvedEdges.select(col("doc_b").as("doc_id"), col("score"), col("match_key")))
-    val best = both.groupBy("doc_id")
-      .agg(max_by(col("match_key"), struct(col("score"), col("match_key"))).as("mk_best"))
-    best.join(unionKey, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("mk_union"), col("mk_best")).as("match_key"),
-        col("name_lvl"), coalesce(col("ssn_short"), lit(false)).as("ssn_short"),
-        coalesce(col("nid_close"), lit(false)).as("nid_close"))
+      .agg(max(col("best")).getField("match_key").as("mk_best"),
+        array_distinct(flatten(collect_list(when(later, col("terms"))))).as("terms"),
+        count(when(later, 1)).as("n_later"),
+        collect_list(when(later, col("seed"))).as("seeds"))
   }
 
+  /** MATCH_KEY and the ERRULE inputs of a doc joined to its
+    * [[perDocMatchInfo]] row and its `entity_id`. The seed edge (to
+    * entity_id = min member doc_id; edges are canonical, so the seed is
+    * always doc_a) overrides the union's name slot — see
+    * renderKeyUnion.
+    */
+  private def matchKeyColumns(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("seed", get(filter(col("seeds"),
+        s => s.getField("other") === col("entity_id")), lit(0)))
+      .withColumn("match_key", coalesce(
+        when(col("n_later") > 0,
+          renderKeyUnion(col("terms"), col("seed").getField("seed_name"))),
+        col("mk_best")))
+      .withColumn("name_lvl", col("seed").getField("name_lvl"))
+      .withColumn("ssn_short", coalesce(col("seed").getField("ssn_short"), lit(false)))
+      .withColumn("nid_close", coalesce(col("seed").getField("nid_close"), lit(false)))
+
+  /** `body(v)` with `v` evaluated once: a lambda binding. Inside a
+    * lambda, Catalyst re-evaluates a non-attribute argument at every
+    * use, once per array element.
+    */
+  private def let(v: Column)(body: Column => Column): Column =
+    get(transform(array(v), body), lit(0))
+
+  /** Contiguous runs of equal `key` in the sorted array `arr`, as an
+    * array of slices in order — a groupBy inside one row, linear after
+    * the sort. Null keys compare equal, as in groupBy.
+    */
+  private def runs(arr: Column, key: Column => Column): Column = let(arr) { a =>
+    val n = size(a)
+    val indices = when(n > 0, sequence(lit(0), n - 1)).otherwise(array().cast("array<int>"))
+    let(filter(indices, i => i === 0 || !(key(get(a, i)) <=> key(get(a, i - 1))))) { starts =>
+      transform(starts, (s, j) => slice(a, s + 1, coalesce(get(starts, j + 1), n) - s))
+    }
+  }
+
+  /** FEATURES from an entity's feature entries (ftype, canon, usage,
+    * desc, doc_id, lib_id): one description per (ftype, canon, usage,
+    * desc) with the earliest doc carrying it, variant groups per
+    * (ftype, canon, usage) whose representative is the FIRST of the
+    * (first_doc, desc) ordered variants, grouped per ftype into a map.
+    * Null when the entity has no feature.
+    */
+  private def featuresOf(entries: Column): Column = {
+    val perDesc = transform(runs(array_sort(entries), e => struct(e.getField("ftype"),
+        e.getField("canon"), e.getField("usage"), e.getField("desc"))),
+      r => let(get(r, lit(0)))(e => struct(e.getField("ftype").as("ftype"),
+        e.getField("canon").as("canon"), e.getField("usage").as("usage"),
+        e.getField("doc_id").as("first_doc"), e.getField("desc").as("desc"),
+        e.getField("lib_id").as("lib_id"))))
+    val groups = runs(array_sort(perDesc),
+      d => struct(d.getField("ftype"), d.getField("canon"), d.getField("usage")))
+    val byType = runs(transform(groups, g => let(get(g, lit(0))) { rep =>
+      struct(rep.getField("ftype").as("ftype"), struct(
+        rep.getField("desc").as("FEAT_DESC"),
+        rep.getField("lib_id").as("LIB_FEAT_ID"),
+        rep.getField("usage").as("USAGE_TYPE"),
+        transform(g, v => struct(v.getField("desc").as("FEAT_DESC"),
+          v.getField("lib_id").as("LIB_FEAT_ID"))).as("FEAT_DESC_VALUES")).as("feat"))
+    }), _.getField("ftype"))
+    when(size(entries) > 0, map_from_entries(transform(byType, t => struct(
+      get(t, lit(0)).getField("ftype").as("ftype"),
+      array_sort(transform(t, _.getField("feat"))).as("arr")))))
+  }
+
+  /** Per-doc display-name candidate for [[entityNameOf]]: the doc's
+    * NAME entry with its normalized form and tie-break keys.
+    */
+  private def nameCandidate(fe: Column): Column =
+    let(get(filter(fe, e => e.getField("ftype") === "NAME"), lit(0)).getField("desc")) { desc =>
+      when(desc.isNotNull, struct(
+        regexp_replace(lower(desc), "[^a-z ]", "").as("nnorm"),
+        length(regexp_replace(lower(desc), "[^a-z]", "")).as("alen"),
+        (-length(regexp_replace(desc, "[a-zA-Z ]", ""))).as("npunct"),
+        col("doc_id").as("doc_id"),
+        desc.as("desc")))
+    }
+
+  /** ENTITY_NAME: approximation of Senzing's display-name pick,
+    * calibrated on the fixture: most frequent exact normalized name,
+    * then longest alphabetic form, then least punctuation, then the
+    * latest record's value. The 3 residual misses (Daniella Shaw /
+    * Anna Maria Aguilar / Mark Miller) want the EARLIEST record, but 5
+    * other ties (Robbie Smith / Magdalena Jones / Morrie Klempsky /
+    * George Weest / Candace Kellar) want the LATEST, and no observable
+    * feature separates the groups (golden picks the less-generic
+    * surname in one tie and the more-common given-name spelling in
+    * another) — the pick is GNR-internal; latest is the best simple
+    * fit at 71/74. The max over (run size, alen, npunct, doc_id) of the
+    * runs of equal normalized names; doc_id is unique per candidate,
+    * so there are no ties. Null without candidates.
+    */
+  private def entityNameOf(candidates: Column): Column =
+    when(size(candidates) > 0, array_max(transform(
+      runs(array_sort(candidates), _.getField("nnorm")),
+      r => struct(size(r).as("freq"), array_max(transform(r, c => struct(
+        c.getField("alen"), c.getField("npunct"), c.getField("doc_id"),
+        c.getField("desc").as("desc")))).as("best"))))
+      .getField("best").getField("desc"))
+
+  /** RECORD_SUMMARY of an entity's collected RECORDS: records per
+    * DATA_SOURCE, in DATA_SOURCE order.
+    */
+  private def summaryOfRecords(records: Column): Column =
+    array_sort(transform(
+      array_distinct(transform(records, r => r.getField("DATA_SOURCE"))),
+      ds => struct(
+        ds.as("DATA_SOURCE"),
+        size(filter(records, r => r.getField("DATA_SOURCE") === ds))
+          .cast("long").as("RECORD_COUNT"))))
+
+  /** The RECORD_SUMMARY that RELATED_ENTITIES carry, from the entity's
+    * collected `struct(ds)` rows: a null DATA_SOURCE is counted as its
+    * own source here (groupBy semantics).
+    */
+  private def sourceCounts(sources: Column): Column =
+    array_sort(transform(runs(array_sort(sources), _.getField("ds")),
+      r => struct(get(r, lit(0)).getField("ds").as("DATA_SOURCE"),
+        size(r).cast("long").as("RECORD_COUNT"))))
+
+  /** RELATED_ENTITIES from an entity's cross-entity edges (other,
+    * other_eid, other_name, other_summary, terms, nrank, email_eq,
+    * phone_eq, amb): one band per other entity. The reference compares
+    * the two entities' accumulated feature sets, so a band's key is
+    * the UNION of agreements across its edges (a + anywhere wins over a
+    * − elsewhere; generic-value suppression applies to scoring, not to
+    * the key — a household-shared email still renders +EMAIL),
+    * positives first then denials, with the name class from the best
+    * edge; the level is POSSIBLY_SAME exactly when full name support
+    * (+NAME) exists, POSSIBLY_RELATED otherwise.
+    */
+  private def relatedOf(edges: Column): Column =
+    array_sort(transform(runs(array_sort(edges), _.getField("other")), band =>
+      let(struct(
+        get(band, lit(0)).as("first"),
+        array_distinct(flatten(transform(band, _.getField("terms")))).as("terms"),
+        array_max(transform(band, _.getField("nrank"))).as("nrank"),
+        array_max(transform(band, _.getField("email_eq"))).as("email_eq"),
+        array_max(transform(band, _.getField("phone_eq"))).as("phone_eq"),
+        array_max(transform(band, _.getField("amb"))).as("amb"))) { b =>
+        val amb = b.getField("amb")
+        let(struct(
+          renderRelKey(b.getField("terms"), b.getField("nrank"), b.getField("email_eq"),
+            b.getField("phone_eq"), amb).as("key"),
+          when(b.getField("nrank") === 3, "POSSIBLY_SAME").otherwise("POSSIBLY_RELATED")
+            .as("level"))) { k =>
+          val first = b.getField("first")
+          struct(
+            first.getField("other").as("RELATED_ENTITY_KEY"),
+            first.getField("other_eid").as("ENTITY_ID"),
+            k.getField("level").as("MATCH_LEVEL_CODE"),
+            concat(k.getField("key"), when(amb, " (Ambiguous)").otherwise("")).as("MATCH_KEY"),
+            ErRule.code(k.getField("key"), k.getField("level")).as("ERRULE_CODE"),
+            when(amb, 1).otherwise(0).as("IS_AMBIGUOUS"),
+            lit(0).as("IS_DISCLOSED"),
+            first.getField("other_name").as("ENTITY_NAME"),
+            first.getField("other_summary").as("RECORD_SUMMARY"))
+        }
+      }))
+
+  private def hashId(key: Column): Column = pmod(xxhash64(key), lit(Long.MaxValue))
+
   /** Assemble resolved entities.
+    *
+    * Eager passes, then one lazy report query:
+    *  - `dense_ids` (numbered mode): the assignments with dense
+    *    ENTITY_IDs;
+    *  - `asm_docs`: one row per doc — its ENTITY_ID, the export-shaped
+    *    RECORD struct, its feature entries and display-name candidate;
+    *  - `dense_ids` (numbered mode): the feature entries with dense
+    *    corpus-level LIB_FEAT_IDs over their distinct (ftype, desc);
+    *  - the returned frame: the report's input rows — records, feature
+    *    entries, cross-entity edges — range-partitioned by ENTITY_ID in
+    *    one exchange, then ONE aggregation per entity whose arrays are
+    *    shaped into RECORDS, FEATURES, ENTITY_NAME and RELATED_ENTITIES
+    *    by projections. The aggregation and [[toExportJson]]'s ENTITY_ID
+    *    sort reuse the range layout: no further exchange.
     *
     * @param features Normalize.features output
     * @param docsWithSpans (doc_id, spans)
@@ -227,8 +395,8 @@ object Assemble {
     * @param numberEntities dense ascending ENTITY_ID longs and dense
     *        LIB_FEAT_IDs (distributed range numbering); when false,
     *        ids are stable hashes/keys — no numbering pass at all.
-    * @param ambiguousDocs (doc_id, conflict_desc) from Ambiguity —
-    *        holders of the AMBIGUOUS_ENTITY feature.
+    * @param ambiguousDocs (doc_id, conflict_desc) from Ambiguity, one
+    *        row per doc — holders of the AMBIGUOUS_ENTITY feature.
     * @param relatedAssignments assignment frame used to resolve the
     *        OTHER endpoint of related-entity edges; defaults to
     *        `assignments`. Delta export passes the full assignment
@@ -245,367 +413,181 @@ object Assemble {
       numberEntities: Boolean = true,
       ambiguousDocs: Option[DataFrame] = None,
       relatedAssignments: Option[DataFrame] = None,
-      /** Durable parquet snapshots for the two intra-assembly
-        * materializations (docs, entries) — executor-loss survival;
-        * localCheckpoint otherwise. NOTE: a parquet round-trip does
-        * not preserve the hash(entity_id) outputPartitioning that the
-        * in-memory path exploits, so the durable path re-shuffles the
-        * downstream rollups — byte-identical output, slower
-        * (FixtureResolveSpec pins the equality).
+      /** Durable parquet snapshot for the `asm_docs` materialization
+        * — executor-loss survival; localCheckpoint otherwise
+        * (MaterializeSpec pins that both give the same export).
         */
       checkpointDir: Option[String] = None): DataFrame = {
-
-    val resolved = edges.filter(col("level") === "RESOLVED")
-    val matchInfo = perDocMatchInfo(resolved, assignments)
-
-    // dense ENTITY_IDs (distributed range numbering off the narrow
-    // assignment frame); needed early so RELATED_ENTITIES can carry the
-    // other side's numeric id like the reference
-    val entityIds =
-      if (numberEntities)
-        Some(denseIds(assignments.select(col("entity_id").as("entity_key")), "entity_key"))
-      else None
-
-    // the export-shaped RECORD struct is built HERE, in the single
-    // checkpoint-write pass — the ERRULE case-when tree and the span
-    // sort run once per doc at materialization instead of inside the
-    // downstream aggregation's read, and consumers that don't touch
-    // RECORDS (entries, the related-entities summary) prune the fat
-    // struct column at the parquet/block scan
-    val seedKey = coalesce(
-      when(col("doc_id") === col("entity_id"), lit("")), col("match_key"), lit(""))
-    val docs = features
-      .join(docsWithSpans.select("doc_id", "spans"), "doc_id")
-      .join(assignments, "doc_id")
-      .join(matchInfo, Seq("doc_id"), "left")
-      .withColumn("record_struct", struct(
-        col("doc_id").as("DOC_ID"),
-        col("data_source").as("DATA_SOURCE"),
-        col("record_id").as("RECORD_ID"),
-        seedKey.as("MATCH_KEY"),
-        when(col("doc_id") === col("entity_id"), lit(""))
-          .otherwise(lit("RESOLVED")).as("MATCH_LEVEL_CODE"),
-        when(seedKey === "", lit(""))
-          .otherwise(ErRule.code(seedKey, lit("RESOLVED"),
-            col("name_lvl"), col("ssn_short"), col("nid_close"))).as("ERRULE_CODE"),
-        array_sort(col("spans"),
-          (l, r) => when(l.getField("offset") < r.getField("offset"), -1)
-            .when(l.getField("offset") > r.getField("offset"), 1).otherwise(0))
-          .as("SPANS")))
-      // spans are the fattest bytes in this frame and the checkpoint
-      // fans into 3 scans — carry the one sorted copy inside the
-      // RECORD struct ONLY (raw order is recoverable from offsets;
-      // nothing downstream reads it)
-      .drop("spans")
-      // lay the checkpoint out hash(entity_id) — every downstream
-      // aggregation and join in this assembly keys on entity_id (or an
-      // entity_id-prefixed tuple, which hash(entity_id) also satisfies)
-      // and localCheckpoint preserves outputPartitioning, so RECORDS,
-      // RECORD_SUMMARY and the final entity joins all run exchange-free
-      // off this one shuffle. Explicit partition count: a user-numbered
-      // repartition is exempt from AQE coalescing, so the downstream
-      // aggs keep full width instead of whatever advisory size the
-      // checkpoint bytes suggest
-      .transform(d => d.repartition(
-        d.sparkSession.sessionState.conf.numShufflePartitions, col("entity_id")))
-      // AQE scoped OFF for the materialization only: localCheckpoint
-      // captures the physical plan's outputPartitioning into the
-      // LogicalRDD, and AdaptiveSparkPlanExec reports Unknown — with
-      // AQE on, the hash(entity_id) layout would be invisible and every
-      // downstream agg would re-shuffle (BASELINE.md, "Assembly exchange
-      // elimination": 1 exchange with AQE on vs 0 off on the identical
-      // query). The joins feeding this frame are uniform doc_id-keyed;
-      // skipping AQE here costs nothing
-      .transform(d => Confs.withConfs(d.sparkSession)(
-        "spark.sql.adaptive.enabled" -> "false")(
-        // fanned into 3 aggregations below
-        Materialize(d, "asm_docs", checkpointDir).df))
-
-    // ---- FEATURES: variant groups per (entity, ftype, canon, usage) ----
-    val baseEntries = docs
-      .select(col("entity_id"), col("doc_id"), explode(docFeatureEntries).as("fe"))
-      .select(col("entity_id"), col("doc_id"), col("fe.ftype").as("ftype"),
-        col("fe.desc").as("desc"), col("fe.canon").as("canon"), col("fe.usage").as("usage"))
-    val ambEntries = ambiguousDocs.map(_.join(assignments, "doc_id")
-      .select(col("entity_id"), col("doc_id"), lit("AMBIGUOUS_ENTITY").as("ftype"),
-        col("conflict_desc").as("desc"), col("conflict_desc").as("canon"),
-        lit(null).cast("string").as("usage")))
-    // materialized: feeds three aggregations (FEATURES, ENTITY_NAME, lib
-    // ids) — also sidesteps an AQE attribute-resolution bug when the
-    // Generate(explode) branch is reused across them
-    // the union with the (doc_id-partitioned) ambiguous branch drops the
-    // hash(entity_id) layout inherited from the docs checkpoint — restore
-    // it (only then: without the union baseEntries inherits it narrowly)
-    // so the whole perDesc → groups → featMap → ENTITY_NAME rollup chain
-    // (every grouping is entity_id-prefixed) aggregates without exchanges
-    val entries = ambEntries.fold(baseEntries)(amb =>
-        baseEntries.unionByName(amb).transform(d => d.repartition(
-          d.sparkSession.sessionState.conf.numShufflePartitions, col("entity_id"))))
-      // AQE off for the same partitioning-capture reason as assemble_docs
-      .transform(d => Confs.withConfs(d.sparkSession)(
-        "spark.sql.adaptive.enabled" -> "false")(
-        Materialize(d, "asm_entries", checkpointDir).df))
-
-    val perDesc = entries
-      .groupBy("entity_id", "ftype", "canon", "usage", "desc")
-      .agg(min("doc_id").as("first_doc"))
-      .withColumn("lib_key", concat_ws("", col("ftype"), col("desc")))
-    // LIB_FEAT_ID: dense corpus-level id per distinct (ftype, desc) in
-    // numbered (report-parity) mode; stable hash otherwise
-    val withLib =
-      if (numberEntities)
-        perDesc.join(
-          denseIds(perDesc.select("lib_key"), "lib_key", outCol = "lib_id"), "lib_key")
-      else perDesc.withColumn("lib_id", pmod(xxhash64(col("lib_key")), lit(Long.MaxValue)))
-
-    // rep = FIRST element of the (first_doc, desc)-sorted variant list
-    // (r6): the former min_by over the same ordering key computed an
-    // identical value (within one group equal (first_doc, desc) implies
-    // equal lib_id), but a struct-buffered min_by forces the whole
-    // aggregation into SortAggregate — sort included; collect_list
-    // alone stays ObjectHashAggregate, and the sorted list was being
-    // built anyway.
-    val groups = withLib
-      .groupBy("entity_id", "ftype", "canon", "usage")
-      .agg(array_sort(collect_list(
-        struct(col("first_doc"), col("desc"), col("lib_id")))).as("sorted"))
-      .select(col("entity_id"), col("ftype"), col("canon"), col("usage"),
-        struct(get(col("sorted"), lit(0)).getField("desc").as("desc"),
-          get(col("sorted"), lit(0)).getField("lib_id").as("lib_id")).as("rep"),
-        transform(col("sorted"),
-          v => struct(v.getField("desc").as("FEAT_DESC"),
-            v.getField("lib_id").as("LIB_FEAT_ID"))).as("FEAT_DESC_VALUES"))
-    val featMap = groups
-      .groupBy("entity_id", "ftype")
-      .agg(array_sort(collect_list(struct(
-        col("rep.desc").as("FEAT_DESC"),
-        col("rep.lib_id").as("LIB_FEAT_ID"),
-        col("usage").as("USAGE_TYPE"),
-        col("FEAT_DESC_VALUES")))).as("arr"))
-      .groupBy("entity_id")
-      .agg(map_from_entries(array_sort(collect_list(struct(col("ftype"), col("arr")))))
-        .as("FEATURES"))
-
-    // ---- ENTITY_NAME: approximation of Senzing's display-name pick,
-    // calibrated on the fixture: most frequent exact normalized name,
-    // then longest alphabetic form, then least punctuation, then the
-    // latest record's value. The 3 residual misses (Daniella Shaw /
-    // Anna Maria Aguilar / Mark Miller) want the EARLIEST record, but
-    // 5 other ties (Robbie Smith / Magdalena Jones / Morrie Klempsky /
-    // George Weest / Candace Kellar) want the LATEST, and no observable
-    // feature separates the groups (golden picks the less-generic
-    // surname in one tie and the more-common given-name spelling in
-    // another) — the pick is GNR-internal; latest is the best simple
-    // fit at 71/74. ----
-    // two chained aggregations, NOT candidates⋈freq + one aggregation:
-    // within one nnorm group freq is constant, so the global
-    // lexicographic max over (freq, alpha-len, -punct, doc_id) equals
-    // the max over per-group maxes of (alpha-len, -punct, doc_id) —
-    // same pick, one fewer scan, and (unlike the join, which demands
-    // all-key co-partitioning) both groupBys are entity_id-prefixed so
-    // they run exchange-free off the entries checkpoint's layout
-    val nameCand = entries.filter(col("ftype") === "NAME")
-      .withColumn("nnorm", regexp_replace(lower(col("desc")), "[^a-z ]", ""))
-    val nameAlpha = length(regexp_replace(lower(col("desc")), "[^a-z]", ""))
-    val namePunct = -length(regexp_replace(col("desc"), "[a-zA-Z ]", ""))
-    val perNorm = nameCand.groupBy("entity_id", "nnorm").agg(
-      count(lit(1)).as("freq"),
-      max_by(
-        struct(nameAlpha.as("alen"), namePunct.as("npunct"),
-          col("doc_id").as("doc_id"), col("desc").as("desc")),
-        struct(nameAlpha, namePunct, col("doc_id"))).as("best"))
-    val entityName = perNorm
-      .groupBy("entity_id")
-      .agg(max_by(col("best.desc"), struct(
-        col("freq"), col("best.alen"), col("best.npunct"), col("best.doc_id")))
-        .as("ENTITY_NAME"))
-
-    // ---- RECORDS + RECORD_SUMMARY ----
-    // one aggregation over the pre-built structs; RECORD_SUMMARY is a
-    // PROJECTION of the collected RECORDS (per-entity arrays are small
-    // — group sizes are bounded by the blocking caps), replacing the
-    // former second groupBy + join on the base path: one fewer
-    // shuffle, one fewer scan of the fat docs checkpoint
-    val recordsAgg = docs.groupBy("entity_id").agg(
-      array_sort(collect_list(col("record_struct"))).as("RECORDS"),
-      count(lit(1)).as("RECORD_COUNT"))
-    def summaryOfRecords(records: Column): Column =
-      array_sort(transform(
-        array_distinct(transform(records, r => r.getField("DATA_SOURCE"))),
-        ds => struct(
-          ds.as("DATA_SOURCE"),
-          size(filter(records, r => r.getField("DATA_SOURCE") === ds))
-            .cast("long").as("RECORD_COUNT"))))
-    val recordsWithSummary = recordsAgg
-      .withColumn("RECORD_SUMMARY", summaryOfRecords(col("RECORDS")))
-
-    // narrow twin of RECORD_SUMMARY for the related-entities
-    // enrichment join (otherCore): aggregated from two pruned columns
-    // of the checkpoint rather than re-running the fat RECORDS
-    // aggregation a second time
-    val summary = docs.groupBy("entity_id", "data_source")
-      .agg(count(lit(1)).as("RECORD_COUNT"))
-      .groupBy("entity_id")
-      .agg(array_sort(collect_list(struct(
-        col("data_source").as("DATA_SOURCE"),
-        col("RECORD_COUNT")))).as("RECORD_SUMMARY"))
-
-    // ---- RELATED_ENTITIES: entity-vs-entity relationship bands.
-    // The reference compares the two entities' accumulated feature
-    // sets, so the relationship key is the UNION of agreements across
-    // every cross-entity edge (a + anywhere wins over a − elsewhere;
-    // generic-value suppression applies to scoring, not to the key —
-    // a household-shared email still renders +EMAIL), positives first
-    // then denials, with the name class from the best cross pair; the
-    // level is POSSIBLY_SAME exactly when full name support (+NAME)
-    // exists, POSSIBLY_RELATED otherwise. ----
-    val nonResolved = edges.filter(col("level") =!= "RESOLVED")
-    val relAssign = relatedAssignments.getOrElse(assignments)
-    val aAssign = relAssign
-      .select(col("doc_id").as("doc_a"), col("entity_id").as("entity_a"))
-    val bAssign = relAssign
-      .select(col("doc_id").as("doc_b"), col("entity_id").as("entity_b"))
-    val relTerms = filter(split(col("match_key"), "(?=[+-])"), t => t =!= "")
-    val nameRank = when(col("xk_rel_name") === "NAME", 3)
-      .when(col("xk_rel_name") === "PNAME", 2)
-      .when(col("xk_rel_name") === "SURNAME", 1).otherwise(0)
-    val crossEdges = nonResolved
-      .join(aAssign, "doc_a").join(bAssign, "doc_b")
-      .filter(col("entity_a") =!= col("entity_b"))
-      // canonicalize the ENTITY pair: both edge orientations (a doc of
-      // A below a doc of B and vice versa) contribute to ONE band
-      .select(
-        least(col("entity_a"), col("entity_b")).as("entity_a"),
-        greatest(col("entity_a"), col("entity_b")).as("entity_b"),
-        relTerms.as("terms"), nameRank.as("nrank"),
-        col("xk_email_eq"), col("xk_phone_eq"), col("is_ambiguous"))
-      .groupBy("entity_a", "entity_b")
-      .agg(
-        array_distinct(flatten(collect_list(col("terms")))).as("terms"),
-        max(col("nrank")).as("nrank"),
-        max(col("xk_email_eq")).as("email_eq"),
-        max(col("xk_phone_eq")).as("phone_eq"),
-        max(col("is_ambiguous")).as("amb"))
-      .select(col("entity_a"), col("entity_b"),
-        renderRelKey(col("terms"), col("nrank"), col("email_eq"), col("phone_eq"),
-          col("amb")).as("match_key"),
-        when(col("nrank") === 3, "POSSIBLY_SAME").otherwise("POSSIBLY_RELATED")
-          .as("level"),
-        col("amb"))
-    // both orientations from ONE pass over crossEdges: a unionAll of two
-    // selects re-executes the whole (edges ⋈ assignments ⋈ assignments →
-    // groupBy) subtree twice; exploding a 2-element array is narrow
-    val relatedBoth = crossEdges
-      .select(explode(array(
-        struct(col("entity_a").as("entity_id"), col("entity_b").as("other"),
-          col("match_key"), col("level"), col("amb")),
-        struct(col("entity_b").as("entity_id"), col("entity_a").as("other"),
-          col("match_key"), col("level"), col("amb")))).as("r"))
-      .select(col("r.entity_id").as("entity_id"), col("r.other").as("other"),
-        col("r.match_key").as("match_key"), col("r.level").as("level"),
-        col("r.amb").as("amb"))
-    // SHUFFLE_HASH hints: same sort-skipping rationale as the final
-    // entity joins below — these narrow maps hash-build cheaply
-    val otherCore = entityName
-      .join(summary.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")
-      .join(entityIds.fold(
-        entityName.select(col("entity_id"),
-          pmod(xxhash64(col("entity_id")), lit(Long.MaxValue)).as("other_eid")))(ids =>
-        ids.select(col("entity_key").as("entity_id"), col("ENTITY_ID").as("other_eid")))
-        .hint("SHUFFLE_HASH"),
-        Seq("entity_id"), "left")
-      .select(col("entity_id").as("other"), col("other_eid"),
-        col("ENTITY_NAME").as("other_name"),
-        col("RECORD_SUMMARY").as("other_summary"))
-    val related = relatedBoth
-      .join(otherCore.hint("SHUFFLE_HASH"), Seq("other"), "left")
-      .groupBy("entity_id")
-      .agg(array_sort(collect_list(struct(
-        col("other").as("RELATED_ENTITY_KEY"),
-        col("other_eid").as("ENTITY_ID"),
-        col("level").as("MATCH_LEVEL_CODE"),
-        concat(col("match_key"), when(col("amb"), " (Ambiguous)").otherwise(""))
-          .as("MATCH_KEY"),
-        ErRule.code(col("match_key"), col("level")).as("ERRULE_CODE"),
-        when(col("amb"), 1).otherwise(0).as("IS_AMBIGUOUS"),
-        lit(0).as("IS_DISCLOSED"),
-        col("other_name").as("ENTITY_NAME"),
-        col("other_summary").as("RECORD_SUMMARY")))).as("RELATED_ENTITIES"))
-
-    // SHUFFLE_HASH hints (r6): all four frames share the
-    // hash(entity_id) layout, so these joins are already exchange-free
-    // — but as sort-merge joins each one SORTED its inputs by the
-    // 19-char entity key, including the fat collected-RECORDS side
-    // (the dominant time in the final query's per-operator SQL
-    // metrics, OPTIMIZATION_r06.md "Assembly"). A shuffled-hash join
-    // builds the narrow aggregate side and streams the fat side
-    // unsorted; join results are strategy-invariant.
-    val base = recordsWithSummary
-      .join(entityName.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")
-      .join(featMap.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")
-      .join(related.hint("SHUFFLE_HASH"), Seq("entity_id"), "left")
-      .withColumn("RELATED_ENTITIES", coalesce(col("RELATED_ENTITIES"),
-        array().cast(
-          "array<struct<RELATED_ENTITY_KEY:string,ENTITY_ID:bigint," +
-            "MATCH_LEVEL_CODE:string," +
-            "MATCH_KEY:string,ERRULE_CODE:string,IS_AMBIGUOUS:int,IS_DISCLOSED:int," +
-            "ENTITY_NAME:string," +
-            "RECORD_SUMMARY:array<struct<DATA_SOURCE:string,RECORD_COUNT:bigint>>>>")))
-
+    val spark = features.sparkSession
     // `entity_key` stays the canonical (string, min-doc-id) id; ENTITY_ID
-    // is the reference-parity dense ascending long. Numbering is fully
-    // distributed (no single-partition window): range-partition the key
-    // set, row_number within each range, add per-partition offsets.
-    // In the unnumbered (delta-export) path the top-level ENTITY_ID uses
-    // the SAME hash id that RELATED_ENTITIES.ENTITY_ID carries (see
-    // otherCore above), so relationship ids cross-reference within one
-    // export; entity_key remains the stable string id. pmod (not abs):
+    // (`eid` until the report) is the reference-parity dense ascending
+    // long. In the unnumbered (delta-export) path it is a stable hash,
+    // the SAME id RELATED_ENTITIES.ENTITY_ID carries, so relationship
+    // ids cross-reference within one export. pmod (not abs):
     // abs(Long.MinValue) is still negative in Java semantics. Collision
     // stance: a 64-bit-hash collision between two entity_keys in one
     // export would alias their cross-references — accepted (p < 1e-9
-    // below ~10^5 entities per delta export); entity_key is the
-    // collision-free stable id and numbered mode has no hash at all.
-    val keyed = base.withColumnRenamed("entity_id", "entity_key")
-    entityIds.fold(
-      keyed.withColumn("ENTITY_ID", pmod(xxhash64(col("entity_key")), lit(Long.MaxValue))))(ids =>
-      keyed.join(ids, "entity_key"))
+    // below ~10^5 entities per delta export); the report groups by
+    // (ENTITY_ID, entity_key), so colliding entities stay separate.
+    def hashEid(df: DataFrame): DataFrame = df.withColumn("eid", hashId(col("entity_id")))
+    val assignE =
+      if (numberEntities) withDenseIds(assignments, "entity_id", "eid") else hashEid(assignments)
+
+    // ---- asm_docs: the export-shaped RECORD struct is built HERE, in
+    // the single checkpoint-write pass — the ERRULE case-when tree and
+    // the span sort run once per doc — next to the doc's feature
+    // entries (the AMBIGUOUS_ENTITY entry included), so nothing
+    // downstream re-reads the spans or the normalized columns ----
+    val matched = matchKeyColumns(features
+      .join(docsWithSpans.select("doc_id", "spans"), "doc_id")
+      .join(assignE, "doc_id")
+      .join(perDocMatchInfo(edges.filter(col("level") === "RESOLVED")).hint("SHUFFLE_HASH"),
+        Seq("doc_id"), "left"))
+    val withAmb = ambiguousDocs.fold(matched.withColumn("conflict_desc", lit(null).cast("string")))(
+      amb => matched.join(amb.select("doc_id", "conflict_desc").hint("SHUFFLE_HASH"),
+        Seq("doc_id"), "left"))
+    val seedKey = coalesce(
+      when(col("doc_id") === col("entity_id"), lit("")), col("match_key"), lit(""))
+    val docs = materialize(withAmb
+      .withColumn("sspans", array_sort(col("spans"),
+        (l, r) => when(l.getField("offset") < r.getField("offset"), -1)
+          .when(l.getField("offset") > r.getField("offset"), 1).otherwise(0)))
+      .withColumn("fe", docFeatureEntries(col("sspans")))
+      .select(col("eid"), col("entity_id"), col("doc_id"), col("data_source"),
+        struct(
+          col("doc_id").as("DOC_ID"),
+          col("data_source").as("DATA_SOURCE"),
+          col("record_id").as("RECORD_ID"),
+          seedKey.as("MATCH_KEY"),
+          when(col("doc_id") === col("entity_id"), lit(""))
+            .otherwise(lit("RESOLVED")).as("MATCH_LEVEL_CODE"),
+          when(seedKey === "", lit(""))
+            .otherwise(ErRule.code(seedKey, lit("RESOLVED"),
+              col("name_lvl"), col("ssn_short"), col("nid_close"))).as("ERRULE_CODE"),
+          col("sspans").as("SPANS")).as("record_struct"),
+        col("fe"), nameCandidate(col("fe")).as("name")), "asm_docs", checkpointDir)
+
+    // ---- feature entries with LIB_FEAT_ID: dense over the corpus's
+    // distinct (ftype, desc) keys in numbered (report-parity) mode, a
+    // stable hash otherwise. U+0001 separates the two parts, so no
+    // (ftype, desc) pair can spell another's key ----
+    val entries = docs
+      .select(col("eid"), col("entity_id"), col("doc_id"), explode(col("fe")).as("e"))
+      .select(col("eid"), col("entity_id"), col("doc_id"), col("e.*"))
+      .withColumn("lib_key", concat_ws("\u0001", col("ftype"), col("desc")))
+    val withLib = if (numberEntities) withDenseIds(entries, "lib_key", "lib_id")
+      else entries.withColumn("lib_id", hashId(col("lib_key")))
+
+    // ---- RELATED_ENTITIES rows: the non-RESOLVED edges between two
+    // entities, with the other entity's id and enrichment ----
+    val relAssign = relatedAssignments.fold(assignE)(all =>
+      if (numberEntities)
+        all.join(assignE.select("entity_id", "eid").distinct(), Seq("entity_id"), "left")
+      else hashEid(all))
+    def endpoint(side: String): DataFrame = relAssign.select(col("doc_id").as(s"doc_$side"),
+      col("entity_id").as(s"entity_$side"), col("eid").as(s"eid_$side")).hint("SHUFFLE_HASH")
+    val crossEdges = edges.filter(col("level") =!= "RESOLVED")
+      .join(endpoint("a"), "doc_a").join(endpoint("b"), "doc_b")
+      .filter(col("entity_a") =!= col("entity_b"))
+      .withColumn("terms", filter(split(col("match_key"), "(?=[+-])"), t => t =!= ""))
+      .withColumn("nrank", when(col("xk_rel_name") === "NAME", 3)
+        .when(col("xk_rel_name") === "PNAME", 2)
+        .when(col("xk_rel_name") === "SURNAME", 1).otherwise(0))
+    // every cross edge seen from both of its entities; the report folds
+    // an entity's edges into one band per other entity (relatedOf)
+    def seenFrom(self: String, other: String): Column = struct(
+      col(s"entity_$self").as("entity_id"), col(s"eid_$self").as("eid"),
+      col(s"entity_$other").as("other"), col("terms"), col("nrank"),
+      col("xk_email_eq").as("email_eq"), col("xk_phone_eq").as("phone_eq"),
+      col("is_ambiguous").as("amb"))
+    val relatedBoth = crossEdges
+      .select(explode(array(seenFrom("a", "b"), seenFrom("b", "a"))).as("r"))
+      .select(col("r.*"))
+    // the other side's ENTITY_ID, ENTITY_NAME and RECORD_SUMMARY, for
+    // the assembled entities that have a display name (others keep a
+    // bare band)
+    val otherCore = docs
+      .groupBy("eid", "entity_id")
+      .agg(collect_list(col("name")).as("names"),
+        collect_list(struct(col("data_source").as("ds"))).as("sources"))
+      .filter(size(col("names")) > 0)
+      .select(col("entity_id").as("other"), col("eid").as("other_eid"),
+        entityNameOf(col("names")).as("other_name"),
+        sourceCounts(col("sources")).as("other_summary"))
+    val relRows = relatedBoth
+      .join(otherCore.hint("SHUFFLE_HASH"), Seq("other"), "left")
+      .select(col("eid"), col("entity_id"), struct(col("other"), col("other_eid"),
+        col("other_name"), col("other_summary"), col("terms"), col("nrank"),
+        col("email_eq"), col("phone_eq"), col("amb")).as("rel"))
+
+    // ---- the report: every input row, range-laid-out by ENTITY_ID
+    // (the export order) in one exchange, then ONE aggregation per
+    // entity; rows of entities outside `assignments` (bands of
+    // unaffected delta entities) carry no record and are dropped ----
+    docs
+      .select(col("eid"), col("entity_id"), col("record_struct").as("rec"), col("name"))
+      .unionByName(withLib.select(col("eid"), col("entity_id"), struct(
+        col("ftype"), col("canon"), col("usage"), col("desc"), col("doc_id"),
+        col("lib_id")).as("entry")), allowMissingColumns = true)
+      .unionByName(relRows, allowMissingColumns = true)
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("eid"))
+      .groupBy("eid", "entity_id")
+      .agg(
+        array_sort(collect_list(col("rec"))).as("RECORDS"),
+        collect_list(col("name")).as("names"),
+        collect_list(col("entry")).as("entries"),
+        collect_list(col("rel")).as("rels"))
+      .filter(size(col("RECORDS")) > 0)
+      .select(col("entity_id").as("entity_key"), col("RECORDS"),
+        size(col("RECORDS")).cast("long").as("RECORD_COUNT"),
+        summaryOfRecords(col("RECORDS")).as("RECORD_SUMMARY"),
+        entityNameOf(col("names")).as("ENTITY_NAME"),
+        featuresOf(col("entries")).as("FEATURES"),
+        relatedOf(col("rels")).as("RELATED_ENTITIES"), col("eid").as("ENTITY_ID"))
   }
 
-  /** Dense ascending 1-based long ids over the distinct values of
-    * `keyCol`, without funnelling the data through one partition:
-    * range-repartition on the key, row_number per partition (ranges are
-    * disjoint and ordered), then add the cumulative partition offsets —
-    * the only driver-side state is one count per partition. Equivalent
-    * to `dense_rank().over(Window.orderBy(keyCol))` on distinct keys.
+  /** Materialize with AQE scoped OFF, so the materialization runs as
+    * one job: with AQE on, every exchange inside it is a job of its own.
     */
-  def denseIds(keys: DataFrame, keyCol: String, partitions: Int = 0,
-      outCol: String = "ENTITY_ID"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // partitions scale with the session's shuffle parallelism (cluster
+  private def materialize(df: DataFrame, tag: String, dir: Option[String]): DataFrame =
+    Confs.withConfs(df.sparkSession)("spark.sql.adaptive.enabled" -> "false")(
+      Materialize(df, tag, dir).df)
+
+  /** `rows` plus `outCol`: the dense ascending 1-based rank of `keyCol`
+    * over the distinct keys of `rows`, materialized, without funnelling
+    * the data through one partition: range-repartition on the key,
+    * dense_rank inside each range, then add the key counts of the
+    * earlier ranges. The only driver-side state is one count per range.
+    * Equivalent to `dense_rank().over(Window.orderBy(keyCol))`.
+    */
+  private def withDenseIds(rows: DataFrame, keyCol: String, outCol: String): DataFrame = {
+    // ranges scale with the session's shuffle parallelism (cluster
     // deployments set spark.sql.shuffle.partitions to 1000s; a fixed 64
-    // would mean 64 single-task range sorts at 10^9 entities).
-    val nPart = if (partitions > 0) partitions
-      else math.max(64, keys.sparkSession.sessionState.conf.numShufflePartitions)
-    val ranged = keys.select(keyCol).distinct()
+    // would mean 64 single-task range sorts at 10^9 keys).
+    val nPart = math.max(64, rows.sparkSession.sessionState.conf.numShufflePartitions)
+    // pins the (sampled) range boundaries and the in-range ranks
+    val ranked = materialize(rows
       .repartitionByRange(nPart, col(keyCol))
-      .withColumn("_pid", spark_partition_id())
-      .transform(Materialize(_, "dense_ids", None).df) // pin the (sampled) range boundaries
-    val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nPart).scanLeft(0L) {
-      case (acc, pid) => acc + counts.getOrElse(pid, 0L)
-    }
+      .withColumn("_range", spark_partition_id())
+      .withColumn("_rank", dense_rank().over(Window.partitionBy("_range").orderBy(keyCol))),
+      "dense_ids", None)
+    // keys per range: the top rank, from one pass over the checkpoint
+    val keys = ranked.select("_range", "_rank").queryExecution.toRdd
+      .mapPartitions(_.foldLeft(Map.empty[Int, Int]) { (m, r) =>
+        m.updated(r.getInt(0), math.max(m.getOrElse(r.getInt(0), 0), r.getInt(1)))
+      }.iterator)
+      .collect().groupMapReduce(_._1)(_._2)(math.max)
+    val offsets = (0 until nPart).scanLeft(0L)((acc, p) => acc + keys.getOrElse(p, 0))
     val offMap = typedlit((0 until nPart).map(p => p -> offsets(p)).toMap)
-    val w = Window.partitionBy("_pid").orderBy(col(keyCol))
-    ranged.withColumn(outCol,
-        row_number().over(w).cast("long") + element_at(offMap, col("_pid")))
-      .drop("_pid")
+    ranked.withColumn(outCol, col("_rank") + element_at(offMap, col("_range")))
+      .drop("_range", "_rank")
   }
 
   /** Render entities to the reference's JSONL export shape, ordered by
-    * ENTITY_ID (the fixture's ids ascend; a range-sorted export makes
-    * re-export bytes reproducible run-to-run — the sort is one range
-    * shuffle over already-assembled rows, cheap relative to assembly).
+    * ENTITY_ID (the fixture's ids ascend; a sorted export makes
+    * re-export bytes reproducible run-to-run). Assembled entities are
+    * already range-laid-out by ENTITY_ID, so the sort is local to each
+    * partition.
     */
   def toExportJson(entities: DataFrame): DataFrame =
     entities.orderBy("ENTITY_ID").select(to_json(struct(

@@ -26,16 +26,6 @@ object GraftFunctions {
   def surname_sim(l: Column, r: Column): Column =
     GraftSqlBridge.column(SurnameSim(GraftSqlBridge.expression(l), GraftSqlBridge.expression(r)))
 
-  /** k independent MinHash values over a token array, built purely
-    * from Catalyst built-ins (stays in whole-stage codegen):
-    * minhash_i(tokens) = min over t of xxhash64(t, i).
-    */
-  def minhash_signature(tokens: Column, k: Int): Column =
-    array((0 until k).map { i =>
-      aggregate(tokens, lit(Long.MaxValue),
-        (acc, t) => least(acc, xxhash64(t, lit(i))))
-    }: _*)
-
   /** LSH band keys over a string's character shingles: `bands` keys,
     * each collapsing `rowsPerBand` consecutive minhashes. Two strings
     * share a band key iff that band's minhashes all agree — the
@@ -77,15 +67,6 @@ object GraftFunctions {
   def cosine_sim(a: Column, b: Column): Column =
     GraftSqlBridge.column(
       CosineSim(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  /** Character n-grams of a string as an array (for MinHash shingling). */
-  def char_ngrams(s: Column, n: Int): Column = {
-    val padded = s
-    filter(
-      transform(sequence(lit(0), greatest(length(padded) - n, lit(0))),
-        i => substring(padded, lit(1) + i, lit(n))),
-      g => length(g) === n)
-  }
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

@@ -246,8 +246,4 @@ object DocCorpus {
       (prec, rec, if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec))
     }
   }
-
-  /** Validation filter (reference P2): doc must have an id and ≥1 span. */
-  def validDocs(docs: DataFrame): DataFrame =
-    docs.filter(col("doc_id").isNotNull && size(col("spans")) > 0)
 }

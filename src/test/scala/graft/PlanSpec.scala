@@ -67,11 +67,10 @@ class PlanSpec extends AnyFunSuite {
     val result = ResolveJob.run(spark, docs, cfg)
     result.entities.write.mode("overwrite").format("noop").save()
     val plan = result.entities.queryExecution.executedPlan.toString
-    // the docs/entries checkpoints are laid out hash(entity_id) with AQE
-    // scoped off at materialization, so EVERY entity_id-prefixed groupBy
-    // and every entity_id equi-join downstream must reuse that layout;
-    // the only shuffles left are the related-entities band (doc-pair and
-    // (entity_a, entity_b) keys) and its final per-entity fold
+    // the report's rows are laid out range(ENTITY_ID) in one exchange,
+    // and its one per-entity aggregation reuses that layout; the only
+    // hash shuffles left are the related-entities edges (doc keys, the
+    // other entity's key) and the enrichment's per-entity aggregation
     val exchanges = "Exchange hashpartitioning\\(([a-z_]+)#".r
       .findAllMatchIn(plan).map(_.group(1)).toSeq
     val entityKeyed = exchanges.count(_ == "entity_id")
@@ -81,6 +80,24 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges.size <= 8,
       s"assembly exchange count regressed (${exchanges.size}): " +
         plan.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
+  }
+
+  test("the export query stays within its aggregate and exchange budget") {
+    import graft.assemble.Assemble
+    import graft.jobs.ResolveJob
+    import graft.sources.DocCorpus
+    val docs = DocCorpus.synthetic(spark, 300, seed = 5L).toDF()
+    val report = Assemble.toExportJson(ResolveJob.run(spark, docs).entities)
+    report.write.mode("overwrite").format("noop").save()
+    // one aggregation per entity for the report and one for the
+    // related-entity enrichment, each a partial/final pair; every
+    // operator here is compiled and scheduled on each export (the
+    // assembly before this rebuild planned 26 aggregates, 16 exchanges)
+    val plan = report.queryExecution.executedPlan.toString
+    val aggs = """\b(HashAggregate|ObjectHashAggregate|SortAggregate)\(""".r.findAllMatchIn(plan).size
+    val exchanges = """\b(Exchange|BroadcastExchange|ReusedExchange)\b""".r.findAllMatchIn(plan).size
+    assert(aggs <= 4, s"aggregate operators regressed ($aggs):\n$plan")
+    assert(exchanges <= 8, s"exchanges regressed ($exchanges):\n$plan")
   }
 
   test("generic flags are joins against the hot frame — no driver-collected literal sets") {
