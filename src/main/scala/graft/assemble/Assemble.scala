@@ -562,9 +562,9 @@ object Assemble {
     */
   private def withDenseIds(rows: DataFrame, keyCol: String, outCol: String): DataFrame = {
     // ranges scale with the session's shuffle parallelism (cluster
-    // deployments set spark.sql.shuffle.partitions to 1000s; a fixed 64
-    // would mean 64 single-task range sorts at 10^9 keys).
-    val nPart = math.max(64, rows.sparkSession.sessionState.conf.numShufflePartitions)
+    // deployments set spark.sql.shuffle.partitions to 1000s), with no
+    // floor: a small input at a small setting gets few, small tasks
+    val nPart = rows.sparkSession.sessionState.conf.numShufflePartitions
     // pins the (sampled) range boundaries and the in-range ranks
     val ranked = materialize(rows
       .repartitionByRange(nPart, col(keyCol))

@@ -1,6 +1,7 @@
 package graft.blocking
 
 import graft.functions.GraftFunctions
+import graft.ops.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -85,20 +86,20 @@ object Blocking {
   }
 
   /** Blocks with mega keys (size > cfg.megaCap) deterministically
-    * down-sampled to ~megaCap members (hash-mod of doc_id — stable
-    * across runs and parallelism levels). Hot-but-not-mega keys keep
-    * every member. Used by the incremental path, which joins new-doc
-    * blocks against all blocks rather than self-joining. The mega keys
-    * are the Zipf head, small by construction, hence the broadcast.
+    * down-sampled by the one rule in graft.ops.Dedup (megaKeepMod /
+    * megaKeeps); hot-but-not-mega keys keep every member. The engine
+    * does not call it: [[candidatePairs]] applies the same rule inside
+    * its self-join. It is kept for erbench's traced incremental
+    * composition (erbench/src/main/scala/erbench/IncrementalIngest.scala)
+    * and BlockingSpec. The mega keys are the Zipf head, small by
+    * construction, hence the broadcast.
     */
   def cappedBlocks(blocks: DataFrame, cfg: Config = Config()): DataFrame = {
     val mega = blocks.groupBy("bkey").count()
-      .filter(col("count") > cfg.maxBlockSize && col("count") > cfg.megaCap)
-      .withColumn("keep_mod", ceil(col("count").cast("double") / cfg.megaCap).cast("long"))
-      .select("bkey", "keep_mod")
+      .select(col("bkey"), Dedup.megaKeepMod(col("count"), bounds(cfg)).as("keep_mod"))
+      .filter(col("keep_mod").isNotNull)
     blocks.join(broadcast(mega), Seq("bkey"), "left")
-      .filter(col("keep_mod").isNull ||
-        pmod(xxhash64(col("doc_id")), col("keep_mod")) === 0)
+      .filter(Dedup.megaKeeps(col("doc_id"), col("keep_mod")))
       .drop("keep_mod")
   }
 
@@ -108,7 +109,17 @@ object Blocking {
     * down-sampled first) — see the tier design in the object doc.
     * Returns (doc_a, doc_b) distinct.
     */
-  def candidatePairs(blocks0: DataFrame, cfg: Config = Config()): DataFrame = {
+  def candidatePairs(blocks0: DataFrame, cfg: Config = Config()): DataFrame =
+    candidatePairs(blocks0, cfg, None)
+
+  /** [[candidatePairs]] restricted to the pairs with at least one
+    * endpoint in `touched` (distinct doc_ids); `None` keeps every pair.
+    * The block table is restricted to the KEYS that have a touched
+    * member, never to rows: each surviving key keeps its corpus-wide
+    * size, so the tier and down-sampling decisions, and hence the pairs,
+    * are exactly the unrestricted self-join's.
+    */
+  def candidatePairs(blocks0: DataFrame, cfg: Config, touched: Option[DataFrame]): DataFrame = {
     // the self-join + distinct move every block row twice; hash the key
     // strings (LSH bands, soundex×dob composites) to 64-bit longs first
     // so the shuffles carry 8 bytes, not ~20-40-char strings. A hash
@@ -124,13 +135,21 @@ object Blocking {
     // independent of the caller.
     val blocks = blocks0.filter(col("bkey").isNotNull)
       .select(xxhash64(col("bkey")).as("bkey"), col("doc_id"))
+    val ids = touched.map(_.select("doc_id"))
+    val keyed = ids.fold(blocks)(t => blocks.join(
+      blocks.join(t, Seq("doc_id"), "left_semi").select("bkey"), Seq("bkey"), "left_semi"))
     // ONE implementation of the three-tier discipline, shared with the
-    // dedup/ANN candidate joins — expression-identical to the inlined
-    // round-2 body (same xxhash64 salting and keep_mod arithmetic), so
-    // the emitted pair set is unchanged; the shared path also logs
-    // mega-key down-sampling (never silent).
-    graft.ops.Dedup.boundedSelfJoinPairs(blocks, Seq("bkey"), "doc_id",
-      graft.ops.Dedup.BlockBounds(cfg.maxBlockSize, cfg.megaCap, cfg.salts,
-        cfg.checkpointDir))
+    // dedup/ANN candidate joins; it also logs mega-key down-sampling
+    // (never silent).
+    val pairs = Dedup.boundedSelfJoinPairs(keyed, Seq("bkey"), "doc_id", bounds(cfg))
+    ids.fold(pairs) { t =>
+      def mark(end: String) = t.select(col("doc_id").as(end), lit(true).as(s"t_$end"))
+      pairs.join(mark("doc_a"), Seq("doc_a"), "left").join(mark("doc_b"), Seq("doc_b"), "left")
+        .filter(col("t_doc_a").isNotNull || col("t_doc_b").isNotNull)
+        .select("doc_a", "doc_b")
+    }
   }
+
+  private def bounds(cfg: Config): Dedup.BlockBounds =
+    Dedup.BlockBounds(cfg.maxBlockSize, cfg.megaCap, cfg.salts, cfg.checkpointDir)
 }

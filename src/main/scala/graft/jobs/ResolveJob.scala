@@ -6,8 +6,8 @@ import graft.cluster.ConnectedComponents
 import graft.io.SnapshotStore
 import graft.normalize.Normalize
 import graft.score.{Ambiguity, Generic, Scoring}
-import graft.util.Materialize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.{Confs, Materialize}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end batch resolve: the Spark-native equivalent of the
@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
   *   docs → normalize/extract → blocking → candidate join → score →
   *   edges → connected components (iterate, checkpoint) → assignments
   *   → entity assembly
+  *
+  * Everything up to the assignments is [[resolveDelta]], the one ER
+  * composition, which graft.streaming.IncrementalResolve runs too: a
+  * batch resolve is a delta over an empty prior with every doc touched.
   *
   * Stage boundaries are materialized eagerly — this truncates the
   * LOGICAL plan (the normalize projection is a ~10^4-node expression
@@ -70,7 +74,7 @@ object ResolveJob {
     // pipeline's joins/filters are explicit, so inferred constraints
     // buy nothing here. Scoped: the caller's setting is restored on exit
     // (every stage inside is materialized eagerly, so nothing escapes).
-    graft.util.Confs.withConfs(spark)(
+    Confs.withConfs(spark)(
       "spark.sql.constraintPropagation.enabled" -> "false") {
       runInner(spark, docs, cfg)
     }
@@ -91,7 +95,7 @@ object ResolveJob {
       * aggregates — ride the materialization job as observed metrics
       * (graft.util.Materialize).
       */
-    def stage(name: String, extras: (String, org.apache.spark.sql.Column)*)
+    def stage(name: String, extras: (String, Column)*)
         (build: => DataFrame): Materialize.Result = timed(name) {
       store match {
         case Some(st) if st.exists(name) =>
@@ -131,15 +135,107 @@ object ResolveJob {
     val docsSnap =
       if (store.isDefined || planNondeterministic(docs)) stage("docs")(docs).df
       else docs
-    val featsRaw = stage("features_raw")(Normalize.features(docsSnap)).df
+
+    // a batch resolve is the core over an empty prior, every doc touched
+    val d = resolveDelta(spark, docsSnap, None, cfg, new Stages {
+      def apply(name: String, extras: (String, Column)*)(build: => DataFrame) =
+        stage(name, extras: _*)(build)
+      def state(name: String)(df: DataFrame): DataFrame = df
+      def resumable: Boolean = store.isDefined
+    })
+
+    // the intra-assembly materializations run eagerly here; the final
+    // report query stays lazy (timed by the caller's action).
+    // ambiguousDocs is passed ONLY when suppression actually fired: a
+    // Some(empty-frame) would merge zero rows at the cost of a join.
+    val entities = timed("assemble_eager") {
+      Assemble.entities(d.features.df, docsSnap, d.assignments, d.edges.df,
+        cfg.numberEntities,
+        ambiguousDocs = if (d.ambiguousDocs.rows == 0L) None else Some(d.ambiguousDocs.df),
+        checkpointDir = cfg.checkpointDir)
+    }
+
+    val metrics = Map(
+      "docs" -> d.features.rows,
+      "pairs_generated" -> d.pairs.rows,
+      "pairs_scored" -> d.edges.rows,
+      "edges_resolved" -> d.edges.extras("resolved"),
+      "ambiguous_docs" -> d.ambiguousDocs.rows,
+      "cc_iterations" -> d.ccStats.iterations.toLong)
+
+    Result(docsSnap, d.features.df, d.edges.df, d.assignments, entities, d.ambiguousDocs.df,
+      d.ccStats, metrics, resumed.toSeq, stageMs.toSeq)
+  }
+
+  /** The state an incremental batch resolves against: the previous
+    * batch's tables (graft.streaming.IncrementalResolve's snapshot store).
+    * `edges` holds raw scores, `resolved` the post-suppression RESOLVED
+    * pairs.
+    */
+  private[graft] final case class Prior(featuresRaw: DataFrame, blocks: DataFrame,
+      edges: DataFrame, resolved: DataFrame, assignments: DataFrame)
+
+  /** Where [[resolveDelta]] puts its stage outputs. */
+  private[graft] trait Stages {
+    /** Materializes the stage `name` eagerly. */
+    def apply(name: String, extras: (String, Column)*)(build: => DataFrame): Materialize.Result
+    /** Keeps the table `name` that only a later incremental batch reads
+      * (`blocks`, `resolved`), or returns `df` as it is.
+      */
+    def state(name: String)(df: DataFrame): DataFrame
+    /** Stages are committed snapshots a restarted run resumes from. */
+    def resumable: Boolean
+  }
+
+  /** What [[resolveDelta]] produced. `edges` are post-suppression;
+    * `ccVertices` counts the docs handed to connected components.
+    */
+  private[graft] final case class Delta(features: Materialize.Result,
+      pairs: Materialize.Result, edges: Materialize.Result,
+      ambiguousDocs: Materialize.Result, assignments: DataFrame,
+      ccStats: ConnectedComponents.Stats, ccVertices: Long)
+
+  /** The one ER composition: normalize → generic flags → blocking keys →
+    * candidate pairs → scoring → ambiguity suppression → connected
+    * components, for the `touched` docs (doc_id, spans; each doc_id
+    * once).
+    *
+    * `prior = None` is a resolve from scratch: every doc is touched and
+    * CC runs over all docs. With a prior, untouched docs keep their
+    * `features_raw`, `blocks` and `edges` rows (prior anti-join touched
+    * ∪ new), only pairs with a touched endpoint are scored, and CC runs
+    * over the affected subgraph: the components (by prior labels) that
+    * hold a touched doc or an endpoint of an added or removed RESOLVED
+    * edge, plus brand-new docs. Labels are the min member doc_id, so an
+    * untouched component's carried label is what a full rerun gives;
+    * a merge between components needs a changed edge between them,
+    * which pulls both in, so carried labels never conflict.
+    */
+  private[graft] def resolveDelta(spark: SparkSession, touched: DataFrame,
+      prior: Option[Prior], cfg: Config, stage: Stages): Delta = {
+    val touchedIds = touched.select("doc_id")
+    def carry(prev: DataFrame, fresh: DataFrame): DataFrame =
+      prev.join(touchedIds, Seq("doc_id"), "left_anti").unionByName(fresh)
+
+    // normalization, the per-row CPU-heavy stage, runs on touched docs
+    // only; with a prior its output is cut before the union, whose plan
+    // would otherwise carry the normalize expression tree
+    val featsNew = stage(if (prior.isEmpty) "features_raw" else "features_new")(
+      Normalize.features(touched)).df
+    val featsRaw = prior.fold(featsNew)(p => stage("features_raw")(carry(p.featuresRaw, featsNew)).df)
     val feats = stage("features")(Generic.withGenericFlags(featsRaw, cfg.generic))
 
+    // blocking keys read no flag column, so either feature frame gives
+    // the same keys: a resolve from scratch keys the flagged frame, a
+    // delta only its touched docs
+    val keysNew = Blocking.blockingKeys(prior.fold(feats.df)(_ => featsNew), cfg.blocking)
+    val blocks = stage.state("blocks")(prior.fold(keysNew)(p => carry(p.blocks, keysNew)))
     val pairs = stage("pairs") {
       // the job-level checkpointDir also hardens the candidate join's
       // tier frames (durable snapshots, not executor-local blocks)
       val bcfg = cfg.blocking.copy(checkpointDir =
         cfg.blocking.checkpointDir.orElse(cfg.checkpointDir))
-      Blocking.candidatePairs(Blocking.blockingKeys(feats.df, bcfg), bcfg)
+      Blocking.candidatePairs(blocks, bcfg, prior.map(_ => touchedIds))
     }
 
     // Whole-stage codegen is disabled for the scoring action only: the
@@ -150,60 +246,71 @@ object ResolveJob {
     // inside this conf window. The RESOLVED tally rides the same
     // observation (used directly when suppression fires nothing).
     val resolvedTally = "resolved" -> count(when(col("level") === "RESOLVED", 1))
-    val rawEdges = graft.util.Confs.withConfs(spark)(
-      "spark.sql.codegen.wholeStage" -> "false") {
+    val rawEdges = Confs.withConfs(spark)("spark.sql.codegen.wholeStage" -> "false") {
       stage("edges_raw", resolvedTally) {
-        Scoring.scorePairs(pairs.df, feats.df, cfg.weights,
+        val scored = Scoring.scorePairs(pairs.df, feats.df, cfg.weights,
           broadcastFeatures = cfg.broadcastFeatures.getOrElse(feats.rows < 3000000))
+        // every scored edge touches a touched doc and every carried one
+        // does not, so the union needs no dedup
+        prior.fold(scored)(p => p.edges
+          .join(touchedIds.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
+          .join(touchedIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
+          .unionByName(scored))
       }
     }
+
     // ambiguous-match suppression (Senzing semantics): conflicting
-    // comparable claims never merge — see graft.score.Ambiguity.
+    // comparable claims never merge — see graft.score.Ambiguity. It
+    // re-derives from the whole edge set, because suppression cascades
+    // cross components through POSSIBLY_SAME bridges.
     // LAZY: a resumed run with committed edges/ambiguous_docs snapshots
     // never evaluates the suppression fixpoint at all.
     lazy val amb = Ambiguity.suppress(rawEdges.df, feats.df)
     val (edges, ambDocs) =
-      if (store.isEmpty && amb.firedCount == 0)
+      if (!stage.resumable && amb.firedCount == 0)
         // nothing fired: the suppressed frame IS the raw frame plus a
         // constant column, and no doc is ambiguous — skip the second
         // materialization entirely
         (rawEdges.copy(df = amb.edges), Materialize.Result(amb.ambiguousDocs, 0L, Map.empty))
       else (stage("edges", resolvedTally)(amb.edges), // on resume: amb never forced
         stage("ambiguous_docs")(amb.ambiguousDocs))
+    val resolved = stage.state("resolved")(
+      edges.df.filter(col("level") === "RESOLVED").select("doc_a", "doc_b"))
 
-    val resolved = edges.df.filter(col("level") === "RESOLVED")
-    var ccStats = ConnectedComponents.Stats(0, Seq.empty)
-    val assignP = stage("assignments") {
-      val (assignments, stats) = ConnectedComponents.assign(
-        spark, feats.df.select("doc_id"), resolved, cfg.checkpointDir)
-      ccStats = stats
-      assignments
-    }.df
-
-    // the two intra-assembly localCheckpoints run eagerly here; the
-    // final report query stays lazy (timed by the caller's action).
-    // ambiguousDocs is passed ONLY when suppression actually fired
-    // (r6): a Some(empty-frame) forced Assemble's entries union +
-    // repartition — a full exchange of the exploded feature-entry
-    // frame — to merge zero rows; with None the entries checkpoint
-    // inherits the docs checkpoint's hash(entity_id) layout directly.
-    // Identical output either way (union with an empty frame).
-    val entities = timed("assemble_eager") {
-      Assemble.entities(feats.df, docsSnap, assignP, edges.df,
-        cfg.numberEntities,
-        ambiguousDocs = if (ambDocs.rows == 0L) None else Some(ambDocs.df),
-        checkpointDir = cfg.checkpointDir)
+    // connected components over every doc or, with a prior, over the
+    // affected subgraph while every other doc keeps its prior label
+    val (ccDocs, ccEdges, carried) = prior.fold((feats, resolved, Option.empty[DataFrame])) { p =>
+      // the RESOLVED edges in exactly one of the prior and current sets
+      // (each set holds a pair once)
+      val changed = resolved.unionByName(p.resolved)
+        .groupBy("doc_a", "doc_b").count().filter(col("count") === 1)
+      val touchedVerts = changed.select(col("doc_a").as("doc_id"))
+        .unionByName(changed.select(col("doc_b").as("doc_id")))
+        .unionByName(touchedIds)
+      // labels feed semi/anti joins only, so repeats are harmless
+      val affLabels = stage("aff_labels")(p.assignments
+        .join(touchedVerts, Seq("doc_id"), "left_semi").select("entity_id")).df
+      val freshDocs = touchedIds
+        .join(p.assignments.select("doc_id"), Seq("doc_id"), "left_anti")
+      // a disjoint union of distinct doc_ids: prior assignments hold one
+      // row per doc, and fresh docs have none
+      val aff = stage("aff_docs")(
+        p.assignments.join(affLabels, Seq("entity_id"), "left_semi")
+          .select("doc_id")
+          .unionByName(freshDocs))
+      // an unchanged edge has both endpoints in the same prior
+      // component; a changed edge's endpoints are both in touchedVerts
+      // — so a doc_a-side semi-join keeps every affected-subgraph edge
+      (aff, resolved.join(aff.df.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi"),
+        Some(p.assignments.join(affLabels, Seq("entity_id"), "left_anti")))
     }
-
-    val metrics = Map(
-      "docs" -> feats.rows,
-      "pairs_generated" -> pairs.rows,
-      "pairs_scored" -> edges.rows,
-      "edges_resolved" -> edges.extras("resolved"),
-      "ambiguous_docs" -> ambDocs.rows,
-      "cc_iterations" -> ccStats.iterations.toLong)
-
-    Result(docsSnap, feats.df, edges.df, assignP, entities, ambDocs.df, ccStats, metrics,
-      resumed.toSeq, stageMs.toSeq)
+    var ccStats = ConnectedComponents.Stats(0, Seq.empty)
+    val assignments = stage("assignments") {
+      val (a, stats) = ConnectedComponents.assign(
+        spark, ccDocs.df.select("doc_id"), ccEdges, cfg.checkpointDir)
+      ccStats = stats
+      carried.fold(a)(_.select("doc_id", "entity_id").unionByName(a.select("doc_id", "entity_id")))
+    }.df
+    Delta(feats, pairs, edges, ambDocs, assignments, ccStats, ccDocs.rows)
   }
 }

@@ -41,6 +41,21 @@ object Dedup {
   final case class BlockBounds(maxBlockSize: Int = 64, megaCap: Int = 4096,
       salts: Int = 8, checkpointDir: Option[String] = None)
 
+  /** The one mega-key down-sampling rule. A key whose member `count`
+    * exceeds both bounds gets keep_mod = ⌈count / megaCap⌉ and keeps
+    * ~megaCap members; every other key gets null and keeps them all.
+    */
+  private[graft] def megaKeepMod(count: Column, bounds: BlockBounds): Column =
+    when(count > bounds.maxBlockSize && count > bounds.megaCap,
+      ceil(count.cast("double") / bounds.megaCap).cast("long"))
+
+  /** Whether member `id` of a key with [[megaKeepMod]] `keepMod`
+    * survives: pmod(xxhash64(id), keepMod) = 0, deterministic across
+    * runs and parallelism levels.
+    */
+  private[graft] def megaKeeps(id: Column, keepMod: Column): Column =
+    keepMod.isNull || pmod(xxhash64(id), keepMod) === 0
+
   /** Self-join `keyed` on `keyCols`, emitting distinct id pairs
     * (a < b) with the three-tier bounded-block discipline (object
     * doc). `keyed` must have one row per (key, id); ids only —
@@ -78,9 +93,7 @@ object Dedup {
     // one-box efficiency measurements keep naming.
     val hot0 = Materialize(
       k.groupBy("_k").count().filter(col("count") > bounds.maxBlockSize)
-        .withColumn("keep_mod",
-          when(col("count") > bounds.megaCap,
-            ceil(col("count").cast("double") / bounds.megaCap).cast("long")))
+        .withColumn("keep_mod", megaKeepMod(col("count"), bounds))
         .select("_k", "keep_mod", "count"),
       "bsj_hot", bounds.checkpointDir,
       "mega" -> count(when(col("keep_mod").isNotNull, 1)),
@@ -103,8 +116,7 @@ object Dedup {
     // replicated to ALL buckets, so every pair appears exactly once
     // while the per-key work spreads over `salts` tasks.
     val hotRows = k.join(hot, Seq("_k"))
-      .filter(col("keep_mod").isNull ||
-        pmod(xxhash64(col("_id")), col("keep_mod")) === 0)
+      .filter(megaKeeps(col("_id"), col("keep_mod")))
       .select("_k", "_id")
     // salt hash MUST be independent of the mega-sampling hash above
     // (xxhash64(_id) mod keep_mod == 0): with the same hash, the

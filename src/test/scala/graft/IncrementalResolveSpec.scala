@@ -43,6 +43,11 @@ class IncrementalResolveSpec extends AnyFunSuite {
 
     val batchRun = ResolveJob.run(spark, source.toDF())
     assert(assignMap(r2.assignments) == assignMap(batchRun.assignments))
+    // the same RESOLVED edges, not only the same clusters
+    def edgeSet(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+      df.select("doc_a", "doc_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(edgeSet(store.read(spark, "resolved")) ==
+      edgeSet(batchRun.edges.filter($"level" === "RESOLVED")))
   }
 
   test("two incremental batches == one batch resolve (order-insensitive)") {
@@ -53,8 +58,9 @@ class IncrementalResolveSpec extends AnyFunSuite {
     assertTwoBatchesEqualBatch(synthetic, 175)
   }
 
-  test("redelivered (duplicate) docs are idempotent") {
-    val docs = DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).collect().toSeq
+  /** Delivers `source` once, then redelivers its first 30 docs. */
+  private def assertRedeliveryIdempotent(source: => Dataset[Doc]): Unit = {
+    val docs = source.collect().toSeq
     val tmp = java.nio.file.Files.createTempDirectory("incstore2").toString
     val store = new SnapshotStore(tmp)
     val r1 = IncrementalResolve.processBatch(spark, store, docs.toDF())
@@ -67,13 +73,22 @@ class IncrementalResolveSpec extends AnyFunSuite {
     assert(assignMap(r2.assignments) == assignMap(r1.assignments))
   }
 
-  test("batch cost is delta-proportional: +1 unrelated doc → 1 featurized doc, 1 CC vertex") {
+  test("redelivered (duplicate) docs are idempotent") {
+    assertRedeliveryIdempotent(fixture)
+  }
+
+  test("redelivered (duplicate) docs are idempotent on the synthetic corpus") {
+    assertRedeliveryIdempotent(synthetic)
+  }
+
+  /** Delivers `source`, then one doc that matches nothing in it. */
+  private def assertDeltaProportional(source: => Dataset[Doc]): Unit = {
     import graft.model.Span
-    val docs = DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).collect().toSeq
+    val docs = source.collect().toSeq
     val tmp = java.nio.file.Files.createTempDirectory("incstore5").toString
     val store = new SnapshotStore(tmp)
     val r1 = IncrementalResolve.processBatch(spark, store, docs.toDF())
-    assert(r1.featurizedDocs == 120 && r1.ccVertices == 120)
+    assert(r1.featurizedDocs == docs.size && r1.ccVertices == docs.size)
     val extra = Doc("TEST:1", Seq(
       Span("data_source", "TEST", null, 0), Span("record_id", "1", null, 1),
       Span("name_first", "ERNEST", null, 2), Span("name_last", "HEMINGWAY", null, 3),
@@ -82,9 +97,17 @@ class IncrementalResolveSpec extends AnyFunSuite {
     assert(r2.featurizedDocs == 1, "only the delta goes through normalization")
     assert(r2.ccVertices == 1,
       s"CC must see only affected components + new docs, got ${r2.ccVertices}")
-    assert(r2.assignments.count() == 121)
+    assert(r2.assignments.count() == docs.size + 1)
     assert(assignMap(r2.assignments).view.filterKeys(_ != "TEST:1").toMap ==
       assignMap(r1.assignments), "untouched docs carry their labels verbatim")
+  }
+
+  test("batch cost is delta-proportional: +1 unrelated doc → 1 featurized doc, 1 CC vertex") {
+    assertDeltaProportional(fixture)
+  }
+
+  test("batch cost is delta-proportional on the synthetic corpus") {
+    assertDeltaProportional(synthetic)
   }
 
   test("changed-content redelivery is an UPSERT: new spans take effect") {
