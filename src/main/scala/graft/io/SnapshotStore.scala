@@ -67,17 +67,18 @@ final class SnapshotStore(root: String) {
 
   /** Write `df` as the table's next snapshot without publishing it. The
     * write is one job through [[graft.util.Materialize.into]] (tagged
-    * `graft:<table>`, rows and `extras` observed on it). Writing
-    * overwrites `snap=<id>`, which only an unpublished earlier attempt
-    * can have left behind. Stage at most one snapshot per table before
-    * publishing it: a second stage reuses the id.
+    * `graft:<table>`, rows and `extras` observed on it; `df` is built
+    * under that tag). Writing overwrites `snap=<id>`, which only an
+    * unpublished earlier attempt can have left behind. Stage at most one
+    * snapshot per table before publishing it: a second stage reuses the
+    * id.
     */
-  def stage(df: DataFrame, table: String, extras: (String, Column)*): Staged = {
+  def stage(df: => DataFrame, table: String, extras: (String, Column)*): Staged = {
     val id = latestSnapshot(table).getOrElse(0L) + 1L
     val path = dataPath(table, id).toString
     val written = Materialize.into(df, table, extras: _*) { observed =>
       observed.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.schema(df.schema).parquet(path)
+      observed.sparkSession.read.schema(observed.schema).parquet(path)
     }
     Staged(table, id, written)
   }

@@ -23,12 +23,13 @@ import org.apache.spark.sql.functions._
   * batch resolve is a delta over an empty prior with every doc touched.
   *
   * Stage boundaries are materialized eagerly — this truncates the
-  * LOGICAL plan (the normalize projection is a ~10^4-node expression
-  * tree; letting downstream stages carry N copies of it costs minutes
-  * of driver CPU in Catalyst transforms) and is the resumability story:
-  * with `snapshotRoot` set, each boundary is an atomic snapshot commit
-  * with per-partition lineage rows, and a restarted run resumes from
-  * the last committed stage.
+  * LOGICAL plan, so no stage re-plans the joins and aggregations of the
+  * stages before it, and is the resumability story: with `snapshotRoot`
+  * set, each boundary is an atomic snapshot commit with per-partition
+  * lineage rows, and a restarted run resumes from the last committed
+  * stage. The two large expression trees, normalize (~10^4 nodes) and
+  * the pair comparators, are prepared projections (graft.util.Prepared):
+  * planned once per JVM and a leaf in every plan that reads them.
   */
 object ResolveJob {
 
@@ -218,16 +219,17 @@ object ResolveJob {
       prev.join(touchedIds, Seq("doc_id"), "left_anti").unionByName(fresh)
 
     // normalization, the per-row CPU-heavy stage, runs on touched docs
-    // only; with a prior its output is cut before the union, whose plan
-    // would otherwise carry the normalize expression tree
-    val featsNew = stage(if (prior.isEmpty) "features_raw" else "features_new")(
-      Normalize.features(touched)).df
-    val featsRaw = prior.fold(featsNew)(p => stage("features_raw")(carry(p.featuresRaw, featsNew)).df)
+    // only. It is a prepared projection (graft.util.Prepared): a leaf in
+    // the plan of whatever reads it, so the union with the prior's rows
+    // is the same stage. Lazy: built under the stage's job tag.
+    lazy val featsNew = Normalize.features(touched)
+    val featsRaw = stage("features_raw")(
+      prior.fold(featsNew)(p => carry(p.featuresRaw, featsNew))).df
     val feats = stage("features")(Generic.withGenericFlags(featsRaw, cfg.generic))
 
     // blocking keys read no flag column, so either feature frame gives
     // the same keys: a resolve from scratch keys the flagged frame, a
-    // delta only its touched docs
+    // delta only its touched docs (re-projected: a few rows)
     val keysNew = Blocking.blockingKeys(prior.fold(feats.df)(_ => featsNew), cfg.blocking)
     val blocks = stage.state("blocks")(prior.fold(keysNew)(p => carry(p.blocks, keysNew)))
     val pairs = stage("pairs") {
@@ -238,25 +240,18 @@ object ResolveJob {
       Blocking.candidatePairs(blocks, bcfg, prior.map(_ => touchedIds))
     }
 
-    // Whole-stage codegen is disabled for the scoring action only: the
-    // comparator tree fused into the nested broadcast joins re-emits
-    // deferred column extractions at every use site (>64 KB method →
-    // janino failure → interpreted eval). Per-operator codegen splits
-    // methods fine and compiles. The stage is materialized eagerly
-    // inside this conf window. The RESOLVED tally rides the same
-    // observation (used directly when suppression fires nothing).
+    // The RESOLVED tally rides the stage's observation (used directly
+    // when suppression fires nothing).
     val resolvedTally = "resolved" -> count(when(col("level") === "RESOLVED", 1))
-    val rawEdges = Confs.withConfs(spark)("spark.sql.codegen.wholeStage" -> "false") {
-      stage("edges_raw", resolvedTally) {
-        val scored = Scoring.scorePairs(pairs.df, feats.df, cfg.weights,
-          broadcastFeatures = cfg.broadcastFeatures.getOrElse(feats.rows < 3000000))
-        // every scored edge touches a touched doc and every carried one
-        // does not, so the union needs no dedup
-        prior.fold(scored)(p => p.edges
-          .join(touchedIds.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
-          .join(touchedIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
-          .unionByName(scored))
-      }
+    val rawEdges = stage("edges_raw", resolvedTally) {
+      val scored = Scoring.scorePairs(pairs.df, feats.df, cfg.weights,
+        broadcastFeatures = cfg.broadcastFeatures.getOrElse(feats.rows < 3000000))
+      // every scored edge touches a touched doc and every carried one
+      // does not, so the union needs no dedup
+      prior.fold(scored)(p => p.edges
+        .join(touchedIds.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
+        .join(touchedIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
+        .unionByName(scored))
     }
 
     // ambiguous-match suppression (Senzing semantics): conflicting

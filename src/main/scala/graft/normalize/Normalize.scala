@@ -268,10 +268,16 @@ object Normalize {
   }
 
   /** Full feature-extraction projection over the canonical doc table.
-    * Input: (doc_id, spans); output carries spans untouched (span-
-    * sequence invariant) plus one column per typed feature.
+    * Input: (doc_id, spans); output is doc_id plus one column per typed
+    * feature. Planned and compiled once per JVM (graft.util.Prepared);
+    * [[featureProjection]] is its one definition.
     */
-  def features(docs: DataFrame): DataFrame = {
+  def features(docs: DataFrame): DataFrame = prepared(docs.select("doc_id", "spans"), ())
+
+  private val prepared = graft.util.Prepared[Unit]("normalize")((d, _) => featureProjection(d))
+
+  /** [[features]] as a plain Catalyst build. */
+  private[graft] def featureProjection(docs: DataFrame): DataFrame = {
     val sp = col("spans")
     val first = alphaNorm(coalesce(spanText(sp, "primary_name_first"), spanText(sp, "name_first")))
     val middle = alphaNorm(coalesce(spanText(sp, "primary_name_middle"), spanText(sp, "name_middle")))

@@ -6,25 +6,21 @@ import org.apache.spark.sql.functions._
 
 /** Pairwise scoring: per-feature comparators combined by a
   * Fellegi–Sunter-style weighted sum, all expressed as Catalyst
-  * columns (whole-stage codegen end to end; the only non-built-in
-  * kernels are the codegen'd name-similarity expressions).
+  * columns (the only non-built-in kernels are the codegen'd
+  * name-similarity expressions).
   *
   * Physical shape (matters at 10^12 pairs): the plan joins the
-  * candidate pairs to the feature table twice (broadcast when the
+  * candidate pairs to the feature table twice (one broadcast when the
   * feature side is small, SMJ otherwise), reduces every comparator to
   * a NARROW scalar (two name sims + boolean/int agreement codes,
   * ~60 bytes/row), then folds the scalars into points, score,
   * MATCH_KEY, and level.
   *
-  * Codegen caveat: when this whole tree fuses into one whole-stage-
-  * codegen stage with the joins, the generated method cannot be split
-  * (no INPUT_ROW inside join output) and exceeds janino's 64 KB limit →
-  * silent interpreted fallback, ~50× slower. A repartition barrier does
-  * NOT fix it (the optimizer pushes the projection back below the
-  * exchange). Callers must materialize the result under
-  * `spark.sql.codegen.wholeStage=false` — scoped via
-  * [[graft.util.Confs.withConfs]] as ResolveJob/IncrementalResolve do —
-  * which keeps per-operator codegen (that splits fine) and compiles.
+  * The comparator chain after the joins is a prepared projection
+  * (graft.util.Prepared): planned and compiled once per JVM and
+  * `Weights`, evaluated once per pair, and never fused into the joins'
+  * codegen (fused, the tree's generated method cannot be split and
+  * exceeds janino's 64 KB limit, falling back to interpreted eval).
   *
   * Weights/thresholds are calibrated against the reference's golden
   * clustering (/root/reference/test/fixtures/flow-output.jsonl):
@@ -95,7 +91,18 @@ object Scoring {
     * pair with score, MATCH_KEY, and level.
     */
   def scorePairs(pairs: DataFrame, features: DataFrame, w: Weights = Weights(),
-      broadcastFeatures: Boolean = false): DataFrame = {
+      broadcastFeatures: Boolean = false): DataFrame =
+    // the level filter runs on the prepared output, so Catalyst cannot
+    // push it (and the whole comparator tree with it) into the second
+    // join's condition, where every pair evaluated the tree twice
+    comparators(pairFeatures(pairs, features, broadcastFeatures), w)
+      .filter(col("level").isNotNull)
+
+  /** Every candidate pair with both sides' scoring columns, `a_<col>`
+    * and `b_<col>`: the input of [[comparators]].
+    */
+  private[graft] def pairFeatures(pairs: DataFrame, features: DataFrame,
+      broadcastFeatures: Boolean): DataFrame = {
     // The candidate-pair side is ~an order of magnitude wider than the
     // feature side; broadcasting features avoids shuffling+sorting the
     // pair table twice. Callers enable it when the feature table fits
@@ -110,19 +117,27 @@ object Scoring {
       case c => col(c)
     }: _*)
     val f = if (broadcastFeatures) broadcast(f0) else f0
-    // Fan-out join + a plain column passthrough, then comparators.
-    // Fusing the comparator projection into the nested broadcast joins
-    // makes codegen re-extract the build-side columns inside every
-    // conditional branch (observed: 25k-line stage, janino 64 KB
-    // failure, interpreted fallback) — see the object doc for the
-    // required caller-side codegen conf.
-    val joined = pairs
+    // Fan-out join + a plain column passthrough. Both sides keep every
+    // scoring column, flags the comparators read from one side only
+    // included: identical build sides are one broadcast, which the
+    // second join reuses.
+    pairs
       .join(f.as("a"), col("doc_a") === a("doc_id"))
       .join(f.as("b"), col("doc_b") === b("doc_id"))
       .select((Seq(col("doc_a"), col("doc_b")) ++
         scoringColumns.filterNot(_ == "doc_id").map(c => a(c).as(s"a_$c")) ++
         scoringColumns.filterNot(_ == "doc_id").map(c => b(c).as(s"b_$c"))): _*)
+  }
 
+  /** The comparator chain over [[pairFeatures]]: one row per pair with
+    * score, MATCH_KEY, level (null below every band) and the export-key
+    * flags. A pure projection, planned and compiled once per JVM for
+    * each `Weights` (graft.util.Prepared).
+    */
+  private val comparators = graft.util.Prepared[Weights]("scoring")(compare)
+
+  /** [[comparators]] as a plain Catalyst build. */
+  private[graft] def compare(joined: DataFrame, w: Weights): DataFrame = {
     def a2(c: String): Column = col(s"a_$c")
     def b2(c: String): Column = col(s"b_$c")
 
@@ -414,6 +429,5 @@ object Scoring {
       col("xk_name_add"), col("xk_name_pname"), col("xk_name_cmp"),
       col("xk_name_lvl"), col("xk_ssn_short"), col("xk_nid_close"),
       col("xk_rel_name"), col("xk_email_eq"), col("xk_phone_eq"))
-      .filter(col("level").isNotNull)
   }
 }

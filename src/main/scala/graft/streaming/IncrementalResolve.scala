@@ -90,9 +90,8 @@ object IncrementalResolve {
       store: SnapshotStore,
       batch: DataFrame,
       cfg: ResolveJob.Config = ResolveJob.Config()): BatchResult =
-    // Whole-stage codegen is off for the whole batch, not only for
-    // scoring (see ResolveJob for the scoring reason). A 50-doc batch is
-    // ~60 small jobs, and every fused stage is its own generated class;
+    // Whole-stage codegen is off for the whole batch. A 50-doc batch is
+    // ~55 small jobs, and every fused stage is its own generated class;
     // per-operator classes repeat across stages instead. Measured on a
     // steady-state batch of 2000 synthetic entities: 179 distinct
     // classes with it on, 116 off. Spark's compiled-class cache holds

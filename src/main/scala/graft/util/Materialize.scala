@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The engine's one way to materialize a frame eagerly at a stage
@@ -37,35 +37,38 @@ object Materialize {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def apply(df: DataFrame, tag: String, dir: Option[String],
+  def apply(df: => DataFrame, tag: String, dir: Option[String],
       extras: (String, Column)*): Result =
     into(df, tag, extras: _*) { observed =>
       dir match {
         case Some(d) =>
-          val sc = df.sparkSession.sparkContext
-          val path = s"$d/${sc.applicationId}/${seq.getAndIncrement}_$tag"
+          val spark = observed.sparkSession
+          val path = s"$d/${spark.sparkContext.applicationId}/${seq.getAndIncrement}_$tag"
           observed.write.parquet(path)
-          df.sparkSession.read.parquet(path)
+          spark.read.parquet(path)
         case None => observed.localCheckpoint(true)
       }
     }
 
   /** The same boundary with a caller-supplied store: `store` runs the
     * one job that keeps the observed frame and returns the frame read
-    * back (e.g. a snapshot store's staged write).
+    * back (e.g. a snapshot store's staged write). `df` is evaluated
+    * once, after the job description is set: building a frame can
+    * already run jobs (a graft.util.Prepared application executes its
+    * input's query stages), and those carry the tag too.
     */
-  def into(df: DataFrame, tag: String, extras: (String, Column)*)
+  def into(df: => DataFrame, tag: String, extras: (String, Column)*)
       (store: DataFrame => DataFrame): Result = {
-    val sc = df.sparkSession.sparkContext
+    val sc = SparkSession.active.sparkContext
     // UUID name: the Observation registry matches metrics by name
     // session-wide, and concurrent runs must not cross-wire them
     val obs = Observation(s"${tag}_${java.util.UUID.randomUUID}")
     val aggs = count(lit(1)).as("rows") +: extras.map { case (k, c) => c.as(k) }
-    val observed = df.observe(obs, aggs.head, aggs.tail: _*)
     // restore, not clear: the caller may have set its own description
     val prior = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"graft:$tag")
-    val out = try store(observed) finally sc.setJobDescription(prior)
+    val out = try store(df.observe(obs, aggs.head, aggs.tail: _*))
+      finally sc.setJobDescription(prior)
     val row = obs.get
     Result(out, row("rows").asInstanceOf[Long],
       extras.map { case (k, _) => k -> row(k).asInstanceOf[Long] }.toMap)

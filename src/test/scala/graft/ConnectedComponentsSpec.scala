@@ -121,8 +121,13 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       try {
         val runs = Seq("a", "b").map { p =>
           Future {
+            // a session per run: CC scopes SQL confs (graft.util.Confs),
+            // and two runs on one session can restore each other's
+            // values, leaving the shared test session with AQE off
+            val s = spark.newSession()
+            val edges = s.createDataFrame(graph(p)).toDF("src", "dst")
             start.await()
-            ConnectedComponents.run(spark, graph(p).toDF("src", "dst"),
+            ConnectedComponents.run(s, edges,
               checkpointDir = Some(dir), localFinishEdges = 0L,
               materializeAssignments = materialize)
           }

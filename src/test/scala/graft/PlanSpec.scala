@@ -132,6 +132,40 @@ class PlanSpec extends AnyFunSuite {
     assert("BroadcastExchange".r.findAllMatchIn(phys).size == 1, phys)
   }
 
+  test("pair scoring broadcasts the features once and filters on no comparator") {
+    import graft.blocking.Blocking
+    import graft.normalize.Normalize
+    import graft.score.{Generic, Scoring}
+    import graft.sources.DocCorpus
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val docs = DocCorpus.synthetic(spark, 300, seed = 5L).toDF().localCheckpoint(true)
+    val feats = Generic.withGenericFlags(Normalize.features(docs)).localCheckpoint(true)
+    val pairs = Blocking.candidatePairs(Blocking.blockingKeys(feats)).localCheckpoint(true)
+    // every executed operator, inside adaptive plans and query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val joined = Scoring.pairFeatures(pairs, feats, broadcastFeatures = true)
+    val scored = Scoring.scorePairs(pairs, feats, broadcastFeatures = true)
+    // execute THESE plans, so AQE reaches its final form
+    Seq(joined, scored).foreach(_.collect())
+    val ops = Seq(joined, scored).flatMap(df => nodes(df.queryExecution.executedPlan))
+    val joinOps = nodes(joined.queryExecution.executedPlan)
+    assert(joinOps.count(_.isInstanceOf[BroadcastHashJoinExec]) == 2, joined.queryExecution)
+    assert(joinOps.count(_.isInstanceOf[BroadcastExchangeExec]) == 1,
+      s"the two feature sides are not one broadcast:\n${joined.queryExecution.executedPlan}")
+    val conditions = ops.collect {
+      case f: FilterExec => f.condition.sql
+      case j: BaseJoinExec if j.condition.isDefined => j.condition.get.sql
+    }
+    assert(!conditions.exists(_.contains("given_name_sim")), conditions.mkString("\n"))
+  }
+
   test("hot-key suppression anti-join broadcasts the small hot head at runtime (AQE)") {
     import graft.blocking.Blocking
     import graft.normalize.Normalize
