@@ -572,11 +572,11 @@ object Assemble {
       .withColumn("_rank", dense_rank().over(Window.partitionBy("_range").orderBy(keyCol))),
       "dense_ids", None)
     // keys per range: the top rank, from one pass over the checkpoint
-    val keys = ranked.select("_range", "_rank").queryExecution.toRdd
+    val tops = ranked.select("_range", "_rank").queryExecution.toRdd
       .mapPartitions(_.foldLeft(Map.empty[Int, Int]) { (m, r) =>
         m.updated(r.getInt(0), math.max(m.getOrElse(r.getInt(0), 0), r.getInt(1)))
       }.iterator)
-      .collect().groupMapReduce(_._1)(_._2)(math.max)
+    val keys = Materialize.tagged("dense_ids")(tops.collect()).groupMapReduce(_._1)(_._2)(math.max)
     val offsets = (0 until nPart).scanLeft(0L)((acc, p) => acc + keys.getOrElse(p, 0))
     val offMap = typedlit((0 until nPart).map(p => p -> offsets(p)).toMap)
     ranked.withColumn(outCol, col("_rank") + element_at(offMap, col("_range")))

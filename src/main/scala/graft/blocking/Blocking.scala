@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * deterministic keys below.
   *
   * Scale design (SURVEY.md §7.4 #1): blocking keys are Zipfian. Three
-  * tiers, detected with one cheap aggregate whose head is broadcast:
+  * tiers, detected with one cheap aggregate whose head is materialized,
+  * are a policy over ONE salted self-join (Dedup.boundedSelfJoinPairs):
   *
-  *  - cold  (size ≤ maxBlockSize): plain self-equi-join.
+  *  - cold  (size ≤ maxBlockSize): one salt bucket, a plain self-join.
   *  - hot   (maxBlockSize < size ≤ megaCap): ALL pairs are still
   *    emitted — the self-join is salted one-sided (left side hashed
   *    into `salts` buckets, right side replicated to every bucket) so
@@ -104,22 +105,16 @@ object Blocking {
   }
 
   /** Candidate pairs: self-equi-join of the block table on bkey with
-    * doc_a < doc_b (each unordered pair exactly once). Cold keys join
-    * directly; hot keys go through the salted join (mega keys
-    * down-sampled first) — see the tier design in the object doc.
-    * Returns (doc_a, doc_b) distinct.
+    * doc_a < doc_b (each unordered pair exactly once), salted per tier
+    * (object doc). Returns (doc_a, doc_b) distinct; with `touched`
+    * (distinct doc_ids), only the pairs with an endpoint in it. The block
+    * table is then restricted to the KEYS that have a touched member,
+    * never to rows: each surviving key keeps its corpus-wide size, so the
+    * tier and down-sampling decisions, and hence the pairs, are exactly
+    * the unrestricted self-join's.
     */
-  def candidatePairs(blocks0: DataFrame, cfg: Config = Config()): DataFrame =
-    candidatePairs(blocks0, cfg, None)
-
-  /** [[candidatePairs]] restricted to the pairs with at least one
-    * endpoint in `touched` (distinct doc_ids); `None` keeps every pair.
-    * The block table is restricted to the KEYS that have a touched
-    * member, never to rows: each surviving key keeps its corpus-wide
-    * size, so the tier and down-sampling decisions, and hence the pairs,
-    * are exactly the unrestricted self-join's.
-    */
-  def candidatePairs(blocks0: DataFrame, cfg: Config, touched: Option[DataFrame]): DataFrame = {
+  def candidatePairs(blocks0: DataFrame, cfg: Config = Config(),
+      touched: Option[DataFrame] = None): DataFrame = {
     // the self-join + distinct move every block row twice; hash the key
     // strings (LSH bands, soundex×dob composites) to 64-bit longs first
     // so the shuffles carry 8 bytes, not ~20-40-char strings. A hash

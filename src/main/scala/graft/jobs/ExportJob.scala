@@ -2,6 +2,7 @@ package graft.jobs
 
 import graft.assemble.Assemble
 import graft.io.{SnapshotDiff, SnapshotStore}
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,9 +68,9 @@ object ExportJob {
       maxRecordsPerFile: Int = 100000): String = {
     val modeName = mode match { case Full => "full"; case _: Delta => "delta" }
     val path = s"$outDir/$exportId-exporter-output-$modeName"
-    df.write.mode("overwrite")
+    Materialize.tagged("export")(df.write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      .text(path)
+      .text(path))
     path
   }
 }

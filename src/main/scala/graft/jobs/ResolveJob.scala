@@ -49,7 +49,8 @@ object ResolveJob {
       /** When set, every stage output is committed as an atomic
         * snapshot (Iceberg semantics, graft.io.SnapshotStore) together
         * with per-partition lineage rows, and `run` RESUMES from the
-        * last committed stage in that store. When unset, stages are
+        * last committed stage in that store (of the same docs input,
+        * else it throws). When unset, stages are
         * localCheckpoint'd (fast, in-memory).
         */
       snapshotRoot: Option[String] = None)
@@ -133,6 +134,15 @@ object ResolveJob {
     def planNondeterministic(df: DataFrame): Boolean =
       df.queryExecution.analyzed.exists(
         _.expressions.exists(_.exists(!_.deterministic)))
+    // a store resumes only the docs input it was written from (an
+    // order-free fingerprint); a fresh root has no docs and pays nothing
+    for (st <- store if st.exists("docs")) {
+      def fingerprint(df: DataFrame) = Materialize.tagged("docs_fingerprint")(df.agg(count(lit(1)),
+        coalesce(bit_xor(xxhash64(col("doc_id"), to_json(col("spans")))), lit(0L))).head())
+      if (fingerprint(docs) != fingerprint(st.read(spark, "docs")))
+        throw new IllegalStateException(s"snapshot root ${cfg.snapshotRoot.get} holds the " +
+          "stages of a different docs input; resolve it under a fresh root")
+    }
     val docsSnap =
       if (store.isDefined || planNondeterministic(docs)) stage("docs")(docs).df
       else docs

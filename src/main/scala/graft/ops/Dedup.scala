@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: every variant is a groupBy/join on a compact derived
   * key (hash, band, bucket) — no all-pairs stage ever materializes
   * outside a BOUNDED block: every candidate self-join goes through
-  * [[Dedup.boundedSelfJoinPairs]], which applies the same three-tier
-  * discipline as graft.blocking.Blocking (cold keys join plainly; hot
-  * keys are salted one-sided so a hot block's quadratic work spreads
-  * over `salts` tasks with NO pair loss; mega keys — the 10M-doc
+  * [[Dedup.boundedSelfJoinPairs]], which applies graft.blocking.Blocking's
+  * three-tier policy in ONE salted self-join (cold keys get one salt
+  * bucket; hot keys `salts`, one-sided, so a hot block's quadratic work
+  * spreads over `salts` tasks with NO pair loss; mega keys — the 10M-doc
   * boilerplate cluster sharing one band, exactly what 100 TB dedup
   * exists to find — are deterministically down-sampled to ~megaCap
   * members and the decision is logged). Keys are computed in
@@ -57,7 +57,7 @@ object Dedup {
     keepMod.isNull || pmod(xxhash64(id), keepMod) === 0
 
   /** Self-join `keyed` on `keyCols`, emitting distinct id pairs
-    * (a < b) with the three-tier bounded-block discipline (object
+    * (a < b) in one salted self-join with the three-tier policy (object
     * doc). `keyed` must have one row per (key, id); ids only —
     * callers re-join payloads (texts, shingles, vectors) AFTER the
     * pair set is deduplicated.
@@ -70,8 +70,8 @@ object Dedup {
     // NULL keys never join in a plain equi-join (and never match in a
     // SQL oracle) — but struct equality treats NULL FIELDS as equal,
     // so they must be dropped explicitly or null-keyed rows would
-    // silently block together. Checkpointed: the tier scans below read
-    // this frame ~5× (hot aggregate, cold l/r, hot l/r), and callers
+    // silently block together. Checkpointed: the scans below read this
+    // frame 3× (hot aggregate, both join sides), and callers
     // pass expensive upstreams (minhash kernels, prefix sorts) that
     // must not be recomputed per scan.
     val k = Materialize(keyed
@@ -93,8 +93,7 @@ object Dedup {
     // one-box efficiency measurements keep naming.
     val hot0 = Materialize(
       k.groupBy("_k").count().filter(col("count") > bounds.maxBlockSize)
-        .withColumn("keep_mod", megaKeepMod(col("count"), bounds))
-        .select("_k", "keep_mod", "count"),
+        .withColumn("keep_mod", megaKeepMod(col("count"), bounds)),
       "bsj_hot", bounds.checkpointDir,
       "mega" -> count(when(col("keep_mod").isNotNull, 1)),
       "members" -> coalesce(sum(when(col("keep_mod").isNotNull, col("count"))), lit(0L)))
@@ -103,39 +102,28 @@ object Dedup {
       log.warn(s"boundedSelfJoinPairs: $megaN mega block(s) " +
         s"totalling ${hot0.extras("members")} members down-sampled to ~${bounds.megaCap} " +
         "members each (deterministic hash-mod)")
-    val hot = hot0.df.select("_k", "keep_mod")
 
-    val cold = k.join(hot, Seq("_k"), "left_anti")
-    val coldPairs = cold.select(col("_k"), col("_id").as("doc_a"))
-      .join(cold.select(col("_k"), col("_id").as("doc_b")), Seq("_k"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-
-    // hot tier: mega keys down-sampled, then a one-sided salted
-    // self-join — left row lands in ONE salt bucket, right row is
-    // replicated to ALL buckets, so every pair appears exactly once
-    // while the per-key work spreads over `salts` tasks.
-    val hotRows = k.join(hot, Seq("_k"))
+    // ONE self-join on (key, salt): a member lands in one of its key's
+    // `_n` salt buckets on the left and in all of them on the right, so
+    // each pair appears once; cold keys have one bucket, hot `salts`.
+    val rows = k.join(hot0.df, Seq("_k"), "left")
       .filter(megaKeeps(col("_id"), col("keep_mod")))
-      .select("_k", "_id")
+      .select(col("_k"), col("_id"),
+        when(col("count").isNull, 1L).otherwise(bounds.salts.toLong).as("_n"))
     // salt hash MUST be independent of the mega-sampling hash above
     // (xxhash64(_id) mod keep_mod == 0): with the same hash, the
     // retained members of a down-sampled block all collapse into
     // salts/gcd(keep_mod, salts) buckets — one straggler task doing
     // ~megaCap²/2 pairs for exactly the blocks salting exists to
-    // spread. The extra lit(1) column changes the hash stream; pair
-    // coverage is unchanged (left lands in ONE bucket, right in ALL).
-    val hl = hotRows.select(col("_k"),
-      pmod(xxhash64(col("_id"), lit(1)), lit(bounds.salts.toLong)).as("_salt"),
+    // spread. The extra lit(1) column changes the hash stream.
+    val l = rows.select(col("_k"), pmod(xxhash64(col("_id"), lit(1)), col("_n")).as("_salt"),
       col("_id").as("doc_a"))
-    val hr = hotRows.select(col("_k"),
-      explode(typedlit((0L until bounds.salts.toLong).toArray)).as("_salt"),
+    val r = rows.select(col("_k"), explode(sequence(lit(0L), col("_n") - 1)).as("_salt"),
       col("_id").as("doc_b"))
-    val hotPairs = hl.join(hr, Seq("_k", "_salt"))
+    l.join(r, Seq("_k", "_salt"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
-
-    coldPairs.unionAll(hotPairs).distinct()
+      .distinct()
   }
 
   /** Exact dedup by content hash (after whitespace/case normalization):
@@ -330,7 +318,7 @@ object Dedup {
       .select(col("doc_id"), col("lang"), col("len_bucket"), col("sz"),
         explode(col("prefix.t")).as("t"))
 
-    // the prefix self-join goes through the shared three-tier join in
+    // the prefix self-join goes through the shared bounded self-join in
     // SALT-ONLY mode (megaCap = MaxValue → no down-sampling, exactness
     // preserved): a hot-but-not-identical prefix token — distinct sets
     // that are mostly common vocabulary, the one shape the identical-
@@ -551,7 +539,7 @@ object Dedup {
     * 16-bit slices but defaulted maxHamming = 8, silently missing
     * pairs whose 4–8 differing bits spread across all four slices).
     * The tradeoff is explicit: larger maxHamming → narrower slices →
-    * bigger blocks (bounded by the three-tier join). Verified by exact
+    * bigger blocks (bounded by the salted self-join). Verified by exact
     * hamming distance ≤ maxHamming.
     */
   def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 3,

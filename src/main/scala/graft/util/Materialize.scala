@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * Materializing truncates the LOGICAL plan. `persist()` would keep it,
   * and downstream branches would then re-transform the full upstream
   * tree in Catalyst on the driver. One job does three things:
-  *  - it carries the job description `graft:<tag>` (UI, listeners);
+  *  - it carries the job description `graft:<tag>` ([[tagged]]);
   *  - it observes `count(1)` plus the caller's extra aggregates through
   *    `Dataset.observe`, so counters cost no second action or scan;
   *  - it stores the frame: a parquet snapshot when `dir` is set, else
@@ -59,18 +59,23 @@ object Materialize {
     */
   def into(df: => DataFrame, tag: String, extras: (String, Column)*)
       (store: DataFrame => DataFrame): Result = {
-    val sc = SparkSession.active.sparkContext
     // UUID name: the Observation registry matches metrics by name
     // session-wide, and concurrent runs must not cross-wire them
     val obs = Observation(s"${tag}_${java.util.UUID.randomUUID}")
     val aggs = count(lit(1)).as("rows") +: extras.map { case (k, c) => c.as(k) }
-    // restore, not clear: the caller may have set its own description
-    val prior = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft:$tag")
-    val out = try store(df.observe(obs, aggs.head, aggs.tail: _*))
-      finally sc.setJobDescription(prior)
+    val out = tagged(tag)(store(df.observe(obs, aggs.head, aggs.tail: _*)))
     val row = obs.get
     Result(out, row("rows").asInstanceOf[Long],
       extras.map { case (k, _) => k -> row(k).asInstanceOf[Long] }.toMap)
+  }
+
+  /** Runs `body`, and every job it starts, under the job description
+    * `graft:<tag>` (UI, listeners); restores the caller's description.
+    */
+  def tagged[T](tag: String)(body: => T): T = {
+    val sc = SparkSession.active.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft:$tag")
+    try body finally sc.setJobDescription(prior)
   }
 }

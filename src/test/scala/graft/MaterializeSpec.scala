@@ -54,6 +54,23 @@ class MaterializeSpec extends AnyFunSuite {
     assert(lines == inMemory._2, "export lines differ between 2 and 8 shuffle partitions")
   }
 
+  test("a snapshot root resumes only the docs input it was written from") {
+    val root = Files.createTempDirectory("resumeroot").toString
+    val cfg = ResolveJob.Config(snapshotRoot = Some(root))
+    val docs1 = DocCorpus.synthetic(spark, 150, seed = 1L).toDF()
+    def assignments(r: ResolveJob.Result) =
+      r.assignments.collect().map(x => (x.getString(0), x.getString(1))).toSet
+    val first = ResolveJob.run(spark, docs1, cfg)
+    val err = intercept[IllegalStateException](
+      ResolveJob.run(spark, DocCorpus.synthetic(spark, 150, seed = 2L).toDF(), cfg))
+    assert(err.getMessage.contains(root), err.getMessage)
+    val again = ResolveJob.run(spark, docs1, cfg)
+    val stages = first.stageMillis.map(_._1).filter(n => Files.isDirectory(Paths.get(root, n)))
+    assert(stages.contains("docs") && stages.contains("assignments"), stages)
+    assert(again.resumedStages == stages)
+    assert(assignments(again) == assignments(first))
+  }
+
   test("localCheckpoint and Observation appear only in Materialize and documented exceptions") {
     // file -> a fragment every matching line in it must contain
     val allowed = Map(

@@ -78,26 +78,40 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("boundedSelfJoinPairs (salt-only) == plain self-join on random inputs, nulls included") {
-    // randomized equivalence oracle for the shared three-tier join:
-    // Zipfian keys force cold AND hot tiers; null keys must behave
-    // like a plain column equi-join (never match)
-    for (seed <- Seq(1, 2, 3)) {
+  test("boundedSelfJoinPairs == plain self-join of kept members: cold, hot, mega, null keys") {
+    // randomized equivalence oracle for the shared salted self-join:
+    // Zipfian keys force cold, hot and (at a finite megaCap) mega keys;
+    // null keys must behave like a plain column equi-join (never match);
+    // a mega key joins only the members the one down-sampling rule keeps
+    var cold, hot, mega = 0
+    for (seed <- Seq(1, 2, 3); megaCap <- Seq(Int.MaxValue, 24)) {
+      val bounds = Dedup.BlockBounds(maxBlockSize = 16, megaCap = megaCap, salts = 4)
       val rnd = new scala.util.Random(seed)
       val rows = (0 until 400).map { i =>
         val key = if (rnd.nextInt(10) == 0) null
-          else s"k${(math.pow(rnd.nextDouble(), 3) * 8).toInt}" // Zipf-ish: k0 hot
+          else s"k${(math.pow(rnd.nextDouble(), 3) * 16).toInt}" // Zipf-ish: k0 hot
         (i.toLong, key)
       }
       val keyed = rows.toDF("doc_id", "bkey")
+      val hash = keyed.select(col("doc_id"), xxhash64(col("doc_id")))
+        .as[(Long, Long)].collect().toMap
       val expected = rows.filter(_._2 != null).groupBy(_._2).values.flatMap { g =>
-        for (a <- g; b <- g if a._1 < b._1) yield (a._1, b._1)
+        val kept =
+          if (g.size > bounds.maxBlockSize && g.size > megaCap) {
+            mega += 1
+            val keepMod = math.ceil(g.size.toDouble / megaCap).toLong
+            g.filter(r => Math.floorMod(hash(r._1), keepMod) == 0)
+          } else {
+            if (g.size > bounds.maxBlockSize) hot += 1 else cold += 1
+            g
+          }
+        for (a <- kept; b <- kept if a._1 < b._1) yield (a._1, b._1)
       }.toSet
-      val got = Dedup.boundedSelfJoinPairs(keyed, Seq("bkey"), "doc_id",
-          Dedup.BlockBounds(maxBlockSize = 16, megaCap = Int.MaxValue, salts = 4))
+      val got = Dedup.boundedSelfJoinPairs(keyed, Seq("bkey"), "doc_id", bounds)
         .as[(Long, Long)].collect().toSet
-      assert(got == expected, s"seed $seed: ${got.size} vs ${expected.size}")
+      assert(got == expected, s"seed $seed, megaCap $megaCap: ${got.size} vs ${expected.size}")
     }
+    assert(cold > 0 && hot > 0 && mega > 0, s"key coverage: cold=$cold hot=$hot mega=$mega")
   }
 
   test("boundedSelfJoinPairs with a durable checkpointDir emits the identical pair set") {

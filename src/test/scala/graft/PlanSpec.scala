@@ -1,5 +1,13 @@
 package graft
 
+import graft.blocking.Blocking
+import graft.normalize.Normalize
+import graft.sources.DocCorpus
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan quality gates: the plans the engine produces must be
@@ -13,6 +21,13 @@ class PlanSpec extends AnyFunSuite {
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** Every executed operator, inside adaptive plans and query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
 
   test("column pruning reaches the parquet scan (er_normalize)") {
     val plan = planOf("er_normalize")
@@ -133,23 +148,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pair scoring broadcasts the features once and filters on no comparator") {
-    import graft.blocking.Blocking
-    import graft.normalize.Normalize
     import graft.score.{Generic, Scoring}
-    import graft.sources.DocCorpus
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     val docs = DocCorpus.synthetic(spark, 300, seed = 5L).toDF().localCheckpoint(true)
     val feats = Generic.withGenericFlags(Normalize.features(docs)).localCheckpoint(true)
     val pairs = Blocking.candidatePairs(Blocking.blockingKeys(feats)).localCheckpoint(true)
-    // every executed operator, inside adaptive plans and query stages
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => s +: nodes(s.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     val joined = Scoring.pairFeatures(pairs, feats, broadcastFeatures = true)
     val scored = Scoring.scorePairs(pairs, feats, broadcastFeatures = true)
     // execute THESE plans, so AQE reaches its final form
@@ -166,21 +170,35 @@ class PlanSpec extends AnyFunSuite {
     assert(!conditions.exists(_.contains("given_name_sim")), conditions.mkString("\n"))
   }
 
-  test("hot-key suppression anti-join broadcasts the small hot head at runtime (AQE)") {
-    import graft.blocking.Blocking
-    import graft.normalize.Normalize
-    import graft.score.Generic
-    import graft.sources.DocCorpus
-    val docs = DocCorpus.synthetic(spark, 500).toDF().localCheckpoint(true)
-    val feats = Generic.withGenericFlags(Normalize.features(docs)).localCheckpoint(true)
-    // no static broadcast hint anymore (a prefix-token caller can have
-    // a LARGE hot head — see Dedup.boundedSelfJoinPairs); both sides
-    // are checkpointed with exact sizes, so AQE must still pick a
-    // broadcast for this tiny hot head at runtime
-    val df = Blocking.candidatePairs(Blocking.blockingKeys(feats))
-    df.collect() // execute THIS plan so AQE reaches its final form
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftAnti"), plan.take(1500))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
+  /** The executed operators of the candidate-pair query, run so AQE
+    * reaches its final form, at toy bounds under which the synthetic
+    * corpus has cold, hot and mega keys.
+    */
+  private lazy val tieredPairPlan: Seq[SparkPlan] = {
+    val docs = DocCorpus.synthetic(spark, 2000, seed = 13L).toDF().localCheckpoint(true)
+    val df = Blocking.candidatePairs(
+      Blocking.blockingKeys(Normalize.features(docs)).localCheckpoint(true),
+      Blocking.Config(maxBlockSize = 4, megaCap = 16, salts = 16))
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
+
+  test("the hot head is broadcast into the salt-count left outer join at runtime (AQE)") {
+    // no static broadcast hint (a prefix-token caller can have a LARGE
+    // hot head — see Dedup.boundedSelfJoinPairs); both sides are
+    // checkpointed with exact sizes, so AQE must still pick a broadcast
+    // for this small hot head at runtime
+    assert(tieredPairPlan.exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftOuter && j.buildSide == BuildRight
+      case _ => false
+    }, tieredPairPlan.head.toString)
+  }
+
+  test("one self-join generates the candidate pairs of every tier") {
+    val selfJoins = tieredPairPlan.collect {
+      case j: BaseJoinExec if j.left.output.exists(_.name == "doc_a") &&
+          j.right.output.exists(_.name == "doc_b") => j
+    }
+    assert(selfJoins.size == 1, tieredPairPlan.head.toString)
   }
 }
