@@ -45,6 +45,15 @@ import org.apache.spark.sql.functions._
   * post-suppression RESOLVED set then catches every flip, wherever it
   * happened, and routes exactly those components back through CC.
   *
+  * A batch compiles nothing. Its code is compiled once per JVM or not
+  * at all: normalize and the pair comparator chain are
+  * graft.util.Prepared projections, compiled on their first use and
+  * pooled; every other operator expression of the batch runs
+  * interpreted (whole-stage codegen off, codegen factory in
+  * `NO_CODEGEN` mode), because over a delta of a few thousand rows a
+  * Janino compile costs more than interpreting does, and the batch's
+  * classes outnumbered Spark's 100-entry class cache.
+  *
   * State between batches is a [[SnapshotStore]]: `docs`,
   * `features_raw`, `blocks`, `edges` (raw scores), `resolved`
   * (post-suppression RESOLVED pairs), `assignments`. A batch STAGES
@@ -84,26 +93,41 @@ object IncrementalResolve {
         */
       ccVertices: Long)
 
-  /** Merge one batch of new docs and re-resolve incrementally. */
+  /** Spark's internal switch between generated and interpreted
+    * expression objects: projections, predicates, orderings and
+    * aggregation buffers built outside whole-stage codegen.
+    */
+  private[graft] val CodegenFactoryMode = "spark.sql.codegen.factoryMode"
+
+  /** Merge one batch of new docs and re-resolve incrementally. `batch`
+    * must belong to `spark`: the batch's conf window is set on `spark`,
+    * and a plan built from another session's frame does not see it (in
+    * `foreachBatch` the frame belongs to the stream's cloned session).
+    */
   def processBatch(
       spark: SparkSession,
       store: SnapshotStore,
       batch: DataFrame,
-      cfg: ResolveJob.Config = ResolveJob.Config()): BatchResult =
-    // Whole-stage codegen is off for the whole batch. A 50-doc batch is
-    // ~55 small jobs, and every fused stage is its own generated class;
-    // per-operator classes repeat across stages instead. Measured on a
-    // steady-state batch of 2000 synthetic entities: 179 distinct
-    // classes with it on, 116 off. Spark's compiled-class cache holds
-    // 100 (a static conf of the caller's session), so a batch that
-    // needs more recompiles most of them every time, at ~20 ms each.
-    // At 20000 entities the window measured 13.5 s against 16.0 s per
-    // batch.
+      cfg: ResolveJob.Config = ResolveJob.Config()): BatchResult = {
+    require(batch.sparkSession eq spark,
+      "processBatch: the batch belongs to another SparkSession; pass batch.sparkSession")
+    // A 50-doc batch is ~50-60 small jobs over a few thousand rows, so
+    // every operator expression runs interpreted: whole-stage codegen
+    // is off (fused stages do not go through the factory) and the
+    // factory builds Spark's interpreted projections, predicates,
+    // orderings and aggregation buffers. Normalize and the comparator
+    // chain stay compiled, once per JVM (graft.util.Prepared). Measured
+    // on steady-state batches of 2000 synthetic entities, 4 cores: 108
+    // classes compiled per batch before (Spark's class cache holds 100,
+    // so each batch recompiled most of its own), 0 after; wall
+    // 4.0-5.2 s before, 2.8-4.3 s after, identical assignments.
     graft.util.Confs.withConfs(spark)(
       "spark.sql.constraintPropagation.enabled" -> "false",
-      "spark.sql.codegen.wholeStage" -> "false") {
+      "spark.sql.codegen.wholeStage" -> "false",
+      CodegenFactoryMode -> "NO_CODEGEN") {
       processBatchInner(spark, store, batch, cfg)
     }
+  }
 
   private def processBatchInner(
       spark: SparkSession,
@@ -206,7 +230,7 @@ object IncrementalResolve {
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(spark, store, batch, cfg): Unit
+        processBatch(batch.sparkSession, store, batch, cfg): Unit
       }
     checkpointLocation.fold(writer)(c => writer.option("checkpointLocation", c)).start()
   }

@@ -35,8 +35,9 @@ object ScaleEval {
     // warm-up: JIT, class loading and the session's first-job costs.
     // It does not leave the timed run's generated code compiled: the
     // JVM-wide codegen cache holds 100 classes by default
-    // (spark.sql.codegen.cache.maxEntries) and a resolve compiles ~250,
-    // so the timed run recompiles its classes as it goes
+    // (spark.sql.codegen.cache.maxEntries) and a resolve compiles ~230
+    // (224 classes at 2000 entities, 234 at 20000, 4 cores), so the
+    // timed run recompiles its classes as it goes
     val tWarm = System.nanoTime()
     resolve(DocCorpus.synthetic(spark, 2000, seed = 7L).toDF())
     println(f"[stage] warmup             ${secs(tWarm)}%8.1f s")

@@ -2,14 +2,18 @@ package graft.util
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression,
-  SubqueryExpression, UnsafeProjection}
+  InterpretedUnsafeProjection, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** A pure projection (`DataFrame => DataFrame`, row in, row out) that is
@@ -29,7 +33,10 @@ import org.apache.spark.sql.types.StructType
   * application maps the input's `toRdd` partitions through the bound
   * projections. The compiled projections are pooled JVM-wide: a task
   * borrows one set and returns it when it completes, so the cache
-  * cannot evict them.
+  * cannot evict them. They are generated code whatever the session's
+  * codegen factory mode (an incremental batch runs everything else
+  * interpreted): a pooled set outlives the window it was first built
+  * in. Only a compile error falls back to an interpreted projection.
   *
   * The plan is keyed on the input schema, the build's parameters and the
   * session SQL confs that change what an expression computes. The
@@ -62,6 +69,10 @@ final class Prepared[P](name: String, build: (DataFrame, P) => DataFrame) {
     val size = input.stats.sizeInBytes * plan.rowSize / EstimationUtils.getSizePerRow(input.output)
     GraftSqlBridge.fromInternal(spark, rows, plan.schema, Some(size.max(1)))
   }
+
+  /** The projection sets pooled for this projection's plans. */
+  private[graft] def pooled: Seq[Seq[UnsafeProjection]] =
+    plans.values.asScala.toSeq.flatMap(p => Option(pools.get(p.id)).toSeq.flatMap(_.asScala))
 
   private def prepare(spark: SparkSession, input: StructType, params: P): Plan = {
     val empty = spark.sparkContext.emptyRDD[InternalRow]
@@ -113,12 +124,20 @@ object Prepared {
     named ++ conf.getAll.filter(_._1.startsWith("spark.sql.legacy.")).toSeq.sorted
   }
 
+  /** Generated code, falling back to interpreted only on a compile
+    * error: `UnsafeProjection.create`'s default, but without reading the
+    * factory mode, which a task inherits from the window it runs in.
+    */
+  private def compile(exprs: Seq[Expression]): UnsafeProjection =
+    try GenerateUnsafeProjection.generate(exprs, SQLConf.get.subexpressionEliminationEnabled)
+    catch { case NonFatal(_) => InterpretedUnsafeProjection.createProjection(exprs) }
+
   private def project(id: Long, lists: Seq[Seq[Expression]],
       rows: Iterator[InternalRow]): Iterator[InternalRow] = {
     val pool = pools.computeIfAbsent(id, _ => new ConcurrentLinkedQueue())
     val ps = Option(pool.poll()).getOrElse {
       created.incrementAndGet()
-      lists.map(l => UnsafeProjection.create(l))
+      lists.map(compile)
     }
     TaskContext.get().addTaskCompletionListener[Unit](_ => pool.offer(ps))
     rows.map(r => ps.foldLeft(r)((row, p) => p(row)))

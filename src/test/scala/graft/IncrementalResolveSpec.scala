@@ -6,6 +6,7 @@ import graft.model.Doc
 import graft.sources.DocCorpus
 import graft.streaming.IncrementalResolve
 import graft.tools.FixtureEval
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -259,22 +260,66 @@ class IncrementalResolveSpec extends AnyFunSuite {
       "from-scratch: post-flip rescoring splits A and B — the documented drift")
   }
 
-  test("structured streaming end-to-end via MemoryStream + foreachBatch") {
+  /** Streams `source` through IncrementalResolve.run in two
+    * micro-batches split after `firstBatch` docs and checks the store's
+    * assignments against one batch resolve.
+    */
+  private def assertStreamEqualsBatch(source: => Dataset[Doc], firstBatch: Int): Unit = {
     implicit val sqlCtx = spark.sqlContext
-    val docs = DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).collect().toSeq
+    val docs = source.collect().toSeq
     val stream = MemoryStream[Doc]
     val tmp = java.nio.file.Files.createTempDirectory("incstore3").toString
     val q = IncrementalResolve.run(spark, stream.toDF(), tmp)
     try {
-      stream.addData(docs.take(60))
+      stream.addData(docs.take(firstBatch))
       q.processAllAvailable()
-      stream.addData(docs.drop(60))
+      stream.addData(docs.drop(firstBatch))
       q.processAllAvailable()
     } finally q.stop()
     val store = new SnapshotStore(tmp)
     val finalAssign = store.read(spark, "assignments")
-    val batchRun = ResolveJob.run(spark,
-      DocCorpus.fromFlatJsonl(spark, FixtureEval.CustomersPath).toDF())
+    val batchRun = ResolveJob.run(spark, source.toDF())
     assert(assignMap(finalAssign) == assignMap(batchRun.assignments))
+  }
+
+  test("structured streaming end-to-end via MemoryStream + foreachBatch") {
+    assertStreamEqualsBatch(fixture, 60)
+  }
+
+  test("structured streaming end-to-end via MemoryStream + foreachBatch, synthetic corpus") {
+    assertStreamEqualsBatch(synthetic, 175)
+  }
+
+  test("a batch from another session is rejected before anything is staged") {
+    // foreachBatch hands over frames of the stream's cloned session: a
+    // conf window opened on the outer session would not reach their plans
+    val batch = DocCorpus.synthetic(spark.newSession(), 5).toDF()
+    val tmp = java.nio.file.Files.createTempDirectory("incstore7").toString
+    val store = new SnapshotStore(tmp)
+    val e = intercept[IllegalArgumentException](
+      IncrementalResolve.processBatch(spark, store, batch))
+    assert(e.getMessage.contains("batch.sparkSession"))
+    assert(!store.exists("docs"))
+    assert(IncrementalResolve.processBatch(batch.sparkSession, store, batch).newDocs ==
+      batch.count())
+  }
+
+  test("a steady-state batch compiles no class and leaves the factory mode unset") {
+    // generated classes are compiled once per JVM (the prepared
+    // projections) or not at all: a batch after the warm-up compiles none
+    val docs = DocCorpus.synthetic(spark, 200, seed = 17L).collect().toSeq
+    val (base, rest) = docs.splitAt(docs.size - 60)
+    val tmp = java.nio.file.Files.createTempDirectory("incstore8").toString
+    val store = new SnapshotStore(tmp)
+    IncrementalResolve.processBatch(spark, store, base.toDF())
+    for ((b, i) <- rest.grouped(30).zipWithIndex) {
+      val batch = b.toDF()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val r = IncrementalResolve.processBatch(spark, store, batch)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"steady-state batch ${i + 2} compiled $compiled classes")
+      assert(r.newDocs == b.size)
+    }
+    assert(!spark.conf.getAll.contains(IncrementalResolve.CodegenFactoryMode))
   }
 }

@@ -5,10 +5,12 @@ import graft.model.{Doc, Span}
 import graft.normalize.Normalize
 import graft.score.{Generic, Scoring}
 import graft.sources.DocCorpus
-import graft.util.Prepared
+import graft.streaming.IncrementalResolve
+import graft.util.{Confs, Prepared}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.InterpretedUnsafeProjection
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -126,11 +128,31 @@ class PreparedSpec extends AnyFunSuite {
     assert(second.toSeq == first.toSeq)
   }
 
+  test("a projection first built inside a NO_CODEGEN window is compiled, and reused outside") {
+    // an incremental batch interprets everything but the prepared
+    // projections; their pool outlives the batch's window
+    val docs = DocCorpus.synthetic(spark, 50, seed = 11L).toDF().repartition(1)
+      .localCheckpoint(true)
+    val probe = Prepared[Unit]("normalize probe")((d, _) => Normalize.featureProjection(d))
+    val inside = Confs.withConfs(spark)(IncrementalResolve.CodegenFactoryMode -> "NO_CODEGEN") {
+      probe(docs, ()).collect()
+    }
+    val sets = probe.pooled
+    assert(sets.nonEmpty)
+    sets.flatten.foreach(p => assert(!p.isInstanceOf[InterpretedUnsafeProjection],
+      "the pooled projection was built interpreted"))
+    val created = Prepared.created.get
+    val outside = probe(docs, ()).collect()
+    assert(Prepared.created.get == created, "a later use outside the window compiled again")
+    assert(outside.toSeq == inside.toSeq)
+  }
+
   test("internal rows and compiled projections appear only in the bridge and Prepared") {
     // token -> the one file (under src/main/scala) allowed to use it
     val owners = Map(
       "internalCreateDataFrame" -> "graft/functions/sqlbridge.scala",
-      "UnsafeProjection.create" -> "graft/util/Prepared.scala")
+      "UnsafeProjection.create" -> "graft/util/Prepared.scala",
+      "GenerateUnsafeProjection" -> "graft/util/Prepared.scala")
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"tests must run from the repository root: $root")
     val walk = Files.walk(root)
