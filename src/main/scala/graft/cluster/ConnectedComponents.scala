@@ -37,6 +37,9 @@ object ConnectedComponents {
 
   final case class Stats(iterations: Int, perIterationEdges: Seq[Long])
 
+  /** Bound on the distributed loop's rounds (it converges in O(log n)). */
+  private val MaxIterations = 50
+
   /** large-star: connect every neighbor larger than u to the min of
     * u's closed neighborhood.
     */
@@ -132,7 +135,6 @@ object ConnectedComponents {
   def run(
       spark: SparkSession,
       edges: DataFrame,
-      maxIterations: Int = 50,
       checkpointDir: Option[String] = None,
       localFinishEdges: Long = 100000L,
       /** Eagerly materialize the assignments result (default). Callers
@@ -243,7 +245,7 @@ object ConnectedComponents {
         // frame — the fixed cost is per STAGE, not per job — and 3.4×
         // on the big first frame, where exchange reuse can't cover the
         // nested tree.)
-        while (!converged && iter < maxIterations) {
+        while (!converged && iter < MaxIterations) {
           if (fp._1 > 0 && fp._1 <= localFinishEdges) {
             log.info(s"cc: local union-find finish over ${fp._1} frontier edges")
             val finished = localFinish(spark, e)

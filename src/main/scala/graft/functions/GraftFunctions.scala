@@ -1,18 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
-/** Public Column API over the custom Catalyst expressions, plus SQL
-  * registration. Expressions are bridged Column↔Expression via the
-  * classic-session converters, so no per-session registration is
-  * needed for the Scala API; `register` additionally exposes them to
-  * SQL text.
+/** Public Column API over the custom Catalyst expressions.
+  * Expressions are bridged Column↔Expression via the classic-session
+  * converters, so no per-session registration is needed.
   */
 object GraftFunctions {
-
-  def jaro_winkler(l: Column, r: Column): Column =
-    GraftSqlBridge.column(JaroWinkler(GraftSqlBridge.expression(l), GraftSqlBridge.expression(r)))
 
   def rolling_min_hash(s: Column, window: Column): Column =
     GraftSqlBridge.column(RollingMinHash(GraftSqlBridge.expression(s), GraftSqlBridge.expression(window)))
@@ -67,16 +61,4 @@ object GraftFunctions {
   def cosine_sim(a: Column, b: Column): Column =
     GraftSqlBridge.column(
       CosineSim(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      es => JaroWinkler(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_rolling_min_hash",
-      es => RollingMinHash(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_given_name_sim",
-      es => GivenNameSim(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_surname_sim",
-      es => SurnameSim(es(0), es(1)), "built-in")
-  }
 }

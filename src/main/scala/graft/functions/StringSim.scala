@@ -6,7 +6,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Static methods (Scala object → static forwarders) so generated code
   * from the codegen'd expressions can call them directly:
-  * `graft.functions.StringSim.jaroWinklerU(a, b)`.
+  * `graft.functions.StringSim.givenSimU(a, b)`.
   *
   * Jaro-Winkler per the published definition (Winkler 1990): prefix
   * scale 0.1, max prefix 4, boost only when jaro > 0.7. Matches the
@@ -63,10 +63,6 @@ object StringSim {
     while (p < maxP && s1.charAt(p) == s2.charAt(p)) p += 1
     j + 0.1 * p * (1.0 - j)
   }
-
-  /** UTF8String entry point for generated code. */
-  def jaroWinklerU(a: UTF8String, b: UTF8String): Double =
-    jaroWinkler(a.toString, b.toString)
 
   /** Given-name similarity over normalized, space-separated,
     * lowercase token strings. Jaro-Winkler with an initial rule: a

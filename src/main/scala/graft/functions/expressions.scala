@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the ER scoring kernel.
+/* Custom Catalyst expressions for the ER scoring kernel.
   *
   * These are native codegen'd expressions (not Scala UDFs): they stay
   * inside whole-stage codegen, avoid Row boxing, and Catalyst can
@@ -18,22 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (/root/reference/test/fixtures/flow-output.jsonl:1 — Robert/Bob/
   * Robbie Smith under one NAME feature).
   */
-case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "jaro_winkler"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StringSim.jaroWinklerU(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.StringSim.jaroWinklerU($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
 
 /** Given-name similarity (JW + single-letter-initial rule). */
 case class GivenNameSim(left: Expression, right: Expression)

@@ -3,7 +3,7 @@ package graft.io
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.util.Materialize
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 
@@ -76,10 +76,8 @@ final class SnapshotStore(root: String) {
   def stage(df: => DataFrame, table: String, extras: (String, Column)*): Staged = {
     val id = latestSnapshot(table).getOrElse(0L) + 1L
     val path = dataPath(table, id).toString
-    val written = Materialize.into(df, table, extras: _*) { observed =>
-      observed.write.mode("overwrite").parquet(path)
-      observed.sparkSession.read.schema(observed.schema).parquet(path)
-    }
+    val written = Materialize.into(df, table, extras: _*)(
+      Materialize.parquet(_, path, SaveMode.Overwrite))
     Staged(table, id, written)
   }
 

@@ -17,29 +17,3 @@ package graft.model
 final case class Span(kind: String, text: String, media_ref: String, offset: Int)
 
 final case class Doc(doc_id: String, spans: Seq[Span])
-
-/** A candidate pair produced by blocking (doc_a < doc_b lexicographically). */
-final case class CandidatePair(doc_a: String, doc_b: String, bkey: String)
-
-/** A scored edge between two docs.
-  *
-  * `level` ∈ {RESOLVED, POSSIBLY_SAME, POSSIBLY_RELATED} — the three
-  * observable match levels in the reference's golden output
-  * (/root/reference/test/fixtures/flow-output.jsonl: RECORDS
-  * MATCH_LEVEL_CODE "RESOLVED"; RELATED_ENTITIES MATCH_LEVEL_CODE
-  * "POSSIBLY_SAME"/"POSSIBLY_RELATED").
-  */
-final case class ScoredEdge(
-    doc_a: String,
-    doc_b: String,
-    score: Double,
-    match_key: String,
-    level: String)
-
-/** Final cluster assignment: entity_id is the lexicographic min doc_id
-  * of the cluster — deterministic across runs, resumes, and
-  * parallelism levels (SURVEY.md §7.4 #4). `entity_num` is a dense
-  * numeric id assigned only at export time for report parity with the
-  * reference's ascending integer ENTITY_IDs.
-  */
-final case class ClusterAssignment(doc_id: String, entity_id: String)

@@ -84,15 +84,4 @@ object Multimodal {
         }
       }
   }
-
-  /** Deterministic frame-sampling plan for (fake) video payloads: every
-    * k-th byte offset as a "frame" index — demonstrates the explode-
-    * to-frames shape used by real frame samplers.
-    */
-  def frameSample(withMedia: DataFrame, everyK: Int = 32): DataFrame =
-    withMedia.select(
-      col("doc_id"),
-      explode(sequence(lit(0),
-        greatest(floor(length(col("media")) / everyK).cast("int") - 1, lit(0))))
-        .as("frame_idx"))
 }

@@ -103,6 +103,9 @@ object IncrementalResolve {
     * must belong to `spark`: the batch's conf window is set on `spark`,
     * and a plan built from another session's frame does not see it (in
     * `foreachBatch` the frame belongs to the stream's cloned session).
+    * A doc_id that occurs twice in `batch` with different spans keeps
+    * the version with the greatest content hash
+    * `xxhash64(to_json(spans))`, whatever the batch's row order.
     */
   def processBatch(
       spark: SparkSession,
@@ -141,22 +144,18 @@ object IncrementalResolve {
     // span content is a no-op; one with CHANGED content replaces the old
     // doc — its stale rows are invalidated and it re-pairs like a new
     // doc.
-    val newDocs0 = batch.select("doc_id", "spans").dropDuplicates("doc_id")
-    def contentHash(df: DataFrame): DataFrame =
-      df.withColumn("_h", xxhash64(to_json(col("spans"))))
+    val incoming = dedupByContent(batch)
     val prevDocs = if (store.exists("docs")) Some(store.read(spark, "docs")) else None
     val (allDocs, touched) = prevDocs match {
       case Some(prev) =>
-        val incoming = contentHash(newDocs0).join(
-          contentHash(prev).select(col("doc_id"), col("_h").as("_h_prev")),
-          Seq("doc_id"), "left")
-        val t = Materialize(incoming
+        val t = Materialize(incoming.join(
+            prev.select(col("doc_id"), contentHash.as("_h_prev")), Seq("doc_id"), "left")
           .filter(col("_h_prev").isNull || col("_h") =!= col("_h_prev"))
           .select("doc_id", "spans"), "inc_touched", None)
         val kept = prev.join(t.df.select("doc_id"), Seq("doc_id"), "left_anti")
         (kept.unionByName(t.df), t)
       case None =>
-        val t = Materialize(newDocs0, "inc_touched", None)
+        val t = Materialize(incoming.select("doc_id", "spans"), "inc_touched", None)
         (t.df, t)
     }
     // Every table is STAGED (written once, unpublished) and published
@@ -214,6 +213,17 @@ object IncrementalResolve {
 
     BatchResult(d.assignments, affected, touched.rows, touched.rows, d.ccVertices)
   }
+
+  private def contentHash: Column = xxhash64(to_json(col("spans")))
+
+  /** One row per doc_id of `batch` with its content hash `_h`: the row
+    * with the greatest `_h` (the greater spans on a tie), so two
+    * deliveries of one batch publish the same docs.
+    */
+  private def dedupByContent(batch: DataFrame): DataFrame =
+    batch.groupBy("doc_id")
+      .agg(max(struct(contentHash.as("_h"), col("spans"))).as("_m"))
+      .select(col("doc_id"), col("_m.spans").as("spans"), col("_m._h").as("_h"))
 
   /** Structured Streaming driver: readStream of docs → foreachBatch
     * incremental merge. The batch is the unit of atomic progress; a

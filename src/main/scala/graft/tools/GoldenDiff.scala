@@ -115,8 +115,7 @@ object GoldenDiff {
           ourRelated.foreach { r =>
             relTotal += 1
             if (r.get("IS_AMBIGUOUS").asInt() == 1) relAmbOurs += 1
-            // find other member set via our key mapping — RELATED_ENTITY_KEY is entity_key string
-            val otherKey = r.get("RELATED_ENTITY_KEY")
+            // find the other entity's member set by its ENTITY_ID
             val otherEid = Option(r.get("ENTITY_ID")).map(_.asLong())
             val otherMembers = ourKeyToMembers.get(otherEid.getOrElse(-1L))
             val gRel = otherMembers.flatMap { m =>

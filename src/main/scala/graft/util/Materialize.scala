@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The engine's one way to materialize a frame eagerly at a stage
@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions.{count, lit}
   *  - it carries the job description `graft:<tag>` ([[tagged]]);
   *  - it observes `count(1)` plus the caller's extra aggregates through
   *    `Dataset.observe`, so counters cost no second action or scan;
-  *  - it stores the frame: a parquet snapshot when `dir` is set, else
+  *  - it stores the frame: a parquet snapshot when `dir` is set
+  *    ([[parquet]], read back with the observed schema), else
   *    `localCheckpoint(true)`, which keeps the physical plan's
   *    outputPartitioning and lives in non-replicated executor storage;
   *    [[into]] takes the store from the caller instead
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * subdir follows SparkContext.setCheckpointDir. The JVM-wide sequence
   * number makes every materialization's path unique, so two runs that
   * share `dir` never overwrite each other's live snapshots, within an
-  * app or across apps. The write uses the default ErrorIfExists mode: a
+  * app or across apps. The write uses ErrorIfExists mode: a
   * path collision fails loudly instead of clobbering. Dead-app subdirs
   * are garbage like any Spark checkpoint dir; reaping them is the
   * operator's checkpoint hygiene.
@@ -42,13 +43,20 @@ object Materialize {
     into(df, tag, extras: _*) { observed =>
       dir match {
         case Some(d) =>
-          val spark = observed.sparkSession
-          val path = s"$d/${spark.sparkContext.applicationId}/${seq.getAndIncrement}_$tag"
-          observed.write.parquet(path)
-          spark.read.parquet(path)
+          val app = observed.sparkSession.sparkContext.applicationId
+          parquet(observed, s"$d/$app/${seq.getAndIncrement}_$tag", SaveMode.ErrorIfExists)
         case None => observed.localCheckpoint(true)
       }
     }
+
+  /** The one durable write: `observed` as parquet at `path`, read back
+    * with `observed.schema`, so the read plans without a job that
+    * infers the schema from parquet footers. The boundary is one job.
+    */
+  def parquet(observed: DataFrame, path: String, mode: SaveMode): DataFrame = {
+    observed.write.mode(mode).parquet(path)
+    observed.sparkSession.read.schema(observed.schema).parquet(path)
+  }
 
   /** The same boundary with a caller-supplied store: `store` runs the
     * one job that keeps the observed frame and returns the frame read

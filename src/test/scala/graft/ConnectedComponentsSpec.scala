@@ -1,6 +1,9 @@
 package graft
 
 import graft.cluster.ConnectedComponents
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 class ConnectedComponentsSpec extends AnyFunSuite {
@@ -141,7 +144,55 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       } finally pool.shutdown()
     }
 
-  /** Component-min labels by a classic driver-side union-find. */
+  /** Docs and the edges between them. */
+  private case class Graph(docs: Seq[String], edges: Seq[(String, String)])
+
+  // ids above U+FFFF (surrogate pairs in Java) next to U+FFFF ids: Java's
+  // UTF-16 order and Spark's code-point order disagree on them
+  private val prefixes = Seq("d", "\uFFFF", "\uD83D\uDE00", "\uD835\uDD38")
+  private def nonBmp(id: String) = id.codePointAt(0) > 0xFFFF
+
+  private val genGraph: Gen[Graph] = for {
+    n <- Gen.choose(4, 20)
+    docs = (0 until n).map(i => f"${prefixes(i % prefixes.size)}$i%02d")
+    m <- Gen.choose(0, 2 * n)
+    edges <- Gen.listOfN(m, Gen.zip(Gen.oneOf(docs), Gen.oneOf(docs)))
+    dups <- Gen.someOf(edges)
+    loops <- Gen.someOf(docs.take(2))
+  } yield Graph(docs, edges ++ dups.map(_.swap) ++ loops.map(d => (d, d)))
+
+  for ((mode, ckpt, localFinish) <- Seq(("default", false, 100000L),
+      ("localFinishEdges = 0", false, 0L), ("durable checkpointDir", true, 0L)))
+    test(s"property: assign == union-find on generated graphs ($mode)") {
+      val dir = if (ckpt) Some(java.nio.file.Files.createTempDirectory("cc_prop").toString) else None
+      var isolated, selfLoops, duplicates, astral = 0
+      val prop = Prop.forAll(genGraph) { g =>
+        val onEdge = g.edges.flatMap(e => Seq(e._1, e._2)).toSet
+        if (g.docs.exists(!onEdge(_))) isolated += 1
+        if (g.edges.exists(e => e._1 == e._2)) selfLoops += 1
+        if (g.edges.map(e => Set(e._1, e._2)).distinct.size < g.edges.size) duplicates += 1
+        if (onEdge.exists(nonBmp)) astral += 1
+        val (assign, _) = ConnectedComponents.assign(spark, g.docs.toDF("doc_id"),
+          g.edges.toDF("doc_a", "doc_b"), dir, localFinish)
+        val got = assign.collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
+        val uf = unionFind(g.edges)
+        got == g.docs.map(d => d -> uf.getOrElse(d, d)).sorted
+      }
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(12)
+        .withInitialSeed(Seed(20261020L)), prop)
+      assert(res.passed, res.status.toString)
+      assert(isolated > 0 && selfLoops > 0 && duplicates > 0 && astral > 0,
+        s"generator coverage: isolated=$isolated selfLoops=$selfLoops " +
+          s"duplicates=$duplicates nonBmp=$astral")
+    }
+
+  /** Spark's string order: UTF-8 bytes, i.e. code points. */
+  private val codePointOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** Component-min labels (code-point order) by a classic driver-side
+    * union-find.
+    */
   private def unionFind(edges: Seq[(String, String)]): Map[String, String] = {
     val parent = scala.collection.mutable.Map[String, String]()
     def find(x: String): String = {
@@ -155,6 +206,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     // canonical oracle labels: min member per root
     val byRoot = nodes.groupBy(find)
-    byRoot.flatMap { case (_, ms) => ms.map(_ -> ms.min) }.toMap
+    byRoot.flatMap { case (_, ms) => ms.map(_ -> ms.min(codePointOrder)) }.toMap
   }
 }

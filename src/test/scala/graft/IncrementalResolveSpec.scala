@@ -304,6 +304,25 @@ class IncrementalResolveSpec extends AnyFunSuite {
       batch.count())
   }
 
+  test("a doc_id twice in one batch ingests the same version in any row order") {
+    val docs = DocCorpus.synthetic(spark, 20, seed = 23L).collect().toSeq
+    val doc = docs.head
+    val twin = doc.copy(spans = doc.spans.map(s =>
+      if (s.kind == "primary_name_first") s.copy(text = "Zebediah") else s))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.toJSON.collect().sorted.toSeq
+    val outcomes = for (order <- Seq(docs :+ twin, twin +: docs); partitions <- Seq(1, 4)) yield {
+      val store = new SnapshotStore(
+        java.nio.file.Files.createTempDirectory("incstore9").toString)
+      val batch = spark.createDataset(spark.sparkContext.parallelize(order, partitions)).toDF()
+      val r = IncrementalResolve.processBatch(spark, store, batch)
+      assert(r.newDocs == docs.size)
+      (rows(store.read(spark, "docs")), rows(store.read(spark, "features_raw")),
+        assignMap(r.assignments))
+    }
+    assert(outcomes.distinct.size == 1,
+      "the ingested version of a duplicated doc_id depends on row order or partitioning")
+  }
+
   test("a steady-state batch compiles no class and leaves the factory mode unset") {
     // generated classes are compiled once per JVM (the prepared
     // projections) or not at all: a batch after the warm-up compiles none
@@ -311,7 +330,16 @@ class IncrementalResolveSpec extends AnyFunSuite {
     val (base, rest) = docs.splitAt(docs.size - 60)
     val tmp = java.nio.file.Files.createTempDirectory("incstore8").toString
     val store = new SnapshotStore(tmp)
-    IncrementalResolve.processBatch(spark, store, base.toDF())
+    // the caller forces affectedEntities after the batch's conf window
+    // has closed, so the first diff compiles its classes; every later
+    // diff reuses them
+    def forceAffected(r: IncrementalResolve.BatchResult): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      r.affectedEntities.write.mode("overwrite").format("noop").save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    info(s"affectedEntities of the first batch compiled " +
+      s"${forceAffected(IncrementalResolve.processBatch(spark, store, base.toDF()))} classes")
     for ((b, i) <- rest.grouped(30).zipWithIndex) {
       val batch = b.toDF()
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -319,6 +347,9 @@ class IncrementalResolveSpec extends AnyFunSuite {
       val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
       assert(compiled == 0, s"steady-state batch ${i + 2} compiled $compiled classes")
       assert(r.newDocs == b.size)
+      val diff = forceAffected(r)
+      info(s"affectedEntities of batch ${i + 2} compiled $diff classes")
+      if (i > 0) assert(diff == 0, s"affectedEntities of batch ${i + 2} compiled $diff classes")
     }
     assert(!spark.conf.getAll.contains(IncrementalResolve.CodegenFactoryMode))
   }

@@ -3,7 +3,7 @@ package graft
 import graft.assemble.Assemble
 import graft.jobs.ResolveJob
 import graft.sources.DocCorpus
-import graft.util.Confs
+import graft.util.{Confs, Materialize}
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -69,6 +69,33 @@ class MaterializeSpec extends AnyFunSuite {
     assert(stages.contains("docs") && stages.contains("assignments"), stages)
     assert(again.resumedStages == stages)
     assert(assignments(again) == assignments(first))
+  }
+
+  test("a durable Materialize is one job: the read-back infers no schema") {
+    val dir = Files.createTempDirectory("matjobs").toString
+    val (r, jobs) = SparkSuite.jobDescriptions(
+      Materialize(spark.range(100).toDF("x"), "one_job", Some(dir)))
+    assert(jobs == Seq("graft:one_job"), s"a durable boundary ran ${jobs.size} jobs: $jobs")
+    assert(r.rows == 100L && r.df.count() == 100L)
+  }
+
+  test("a parquet write appears only in Materialize and the frozen Verify dump") {
+    val allowed = Set("graft/util/Materialize.scala", "graft/Verify.scala")
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"tests must run from the repository root: $root")
+    // `.write`, then a chain of builder calls, then a parquet sink
+    val arg = """\((?:[^()]|\([^()]*\))*\)"""
+    val pattern = ("""\.write\b(?:\s*\.\w+(?:""" + arg + """)?)*?\s*""" +
+      """(?:\.parquet\(|\.format\("parquet"\))""").r
+    val walk = Files.walk(root)
+    val writers = try walk.iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => root.relativize(f).toString.replace('\\', '/') -> Files.readString(f))
+      .collect { case (rel, text) if pattern.findFirstIn(text).isDefined => rel }
+      finally walk.close()
+    assert(writers.toSet.contains("graft/util/Materialize.scala"), writers)
+    assert(writers.forall(allowed), "a durable write must go through " +
+      s"graft.util.Materialize.parquet: ${writers.filterNot(allowed).mkString(", ")}")
   }
 
   test("localCheckpoint and Observation appear only in Materialize and documented exceptions") {

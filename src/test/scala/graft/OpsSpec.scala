@@ -405,7 +405,6 @@ class OpsSpec extends AnyFunSuite {
     val dt = Multimodal.decode(spark, trunc).collect()
     assert(dt.forall(m => m.header_ok == 0 && m.payload_md5 == null
       && m.decoded_text == null && m.media_bytes == 7))
-    assert(Multimodal.frameSample(wm).count() > 0)
   }
 
   test("cosine kernels: ragged vector pair → null, not out-of-bounds garbage") {
