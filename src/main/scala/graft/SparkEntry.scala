@@ -4,7 +4,7 @@ import graft.functions.GraftFunctions
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.DocCorpus
 import graft.util.Materialize
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -71,15 +71,12 @@ object SparkEntry {
         .otherwise("NO_MATCH").as("level"))
 
   private def erClusters(spark: SparkSession, c: DataFrame): DataFrame = {
-    // CC labels are lexicographic-min strings — zero-pad the numeric ids
-    // so string order == numeric order, then cast back. 19 digits covers
-    // any non-negative int64 (lpad TRUNCATES over-width input; the
-    // numeric-min oracle would diverge on 13+-digit ids at width 12).
-    def pad(x: Column): Column = lpad(x.cast("string"), 19, "0")
+    import graft.cluster.ConnectedComponents, ConnectedComponents.padId
     val edges = erEdges(c).filter(col("level") === "RESOLVED")
-      .select(pad(col("doc_a")).as("doc_a"), pad(col("doc_b")).as("doc_b"))
-    val ids = c.select(pad(col("c_custkey")).as("doc_id"))
-    val (assign, _) = graft.cluster.ConnectedComponents.assign(spark, ids, edges)
+      .select(padId(col("doc_a")).as("doc_a"), padId(col("doc_b")).as("doc_b"))
+    // c_custkey is the key: distinct, and every edge endpoint is one
+    val ids = c.select(padId(col("c_custkey")).as("doc_id"))
+    val (assign, _) = ConnectedComponents.assign(spark, ids, edges)
     assign.select(col("doc_id").cast("long").as("doc_id"),
       col("entity_id").cast("long").as("entity_id"))
   }

@@ -1,9 +1,8 @@
 package graft.cluster
 
 import graft.util.Materialize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Transitive clustering via alternating large-star / small-star
   * connected components on a DataFrame of match edges (Kiveris et al.,
@@ -76,7 +75,7 @@ object ConnectedComponents {
     * before entering). Union-by-size with path compression, then label
     * every node with its component min: exactly the star-shaped
     * fixpoint (node → component-min, node ≠ min) the distributed loop
-    * converges to, so downstream `roots`/`assignments` code is shared.
+    * converges to, so both phases end in the same star forest.
     */
   private def localFinish(spark: SparkSession, e: DataFrame): DataFrame = {
     import spark.implicits._
@@ -128,23 +127,21 @@ object ConnectedComponents {
   }
 
   /** @param edges DataFrame with string columns (src, dst)
-    * @return (assignments DataFrame (doc_id, entity_id), stats) where
-    *         entity_id = min doc_id of the component; only nodes that
-    *         appear in `edges` are returned (callers union singletons).
+    * @return (star edges (doc_id, entity_id), stats): the fixpoint's
+    *         star forest, one row per node that is NOT its component's
+    *         min, with entity_id = that min. A node without a row (a
+    *         component min, or a node on no edge) is its own label, so
+    *         callers label a doc universe with one left join and
+    *         `coalesce(entity_id, doc_id)` (see [[assign]]).
+    * @throws IllegalStateException when the loop stops at
+    *         `MaxIterations` without converging (the frame would not be
+    *         a star forest).
     */
   def run(
       spark: SparkSession,
       edges: DataFrame,
       checkpointDir: Option[String] = None,
-      localFinishEdges: Long = 100000L,
-      /** Eagerly materialize the assignments result (default). Callers
-        * that consume the result exactly ONCE (the dedup-groups member
-        * labeling) pass false and skip one driver-serial job — the
-        * lazy union+distinct then runs inside the consumer's own
-        * materialization, reading the already-checkpointed (and, with
-        * `checkpointDir`, durable) fixpoint frame.
-        */
-      materializeAssignments: Boolean = true): (DataFrame, Stats) = {
+      localFinishEdges: Long = 100000L): (DataFrame, Stats) = {
 
     // Per-iteration materialization MUST truncate the logical plan
     // (localCheckpoint / parquet snapshot), not merely persist: each
@@ -262,32 +259,26 @@ object ConnectedComponents {
             e = next
           }
         }
-        (e, iter, edgeCounts)
+        (e, iter, edgeCounts, converged)
       }
     }
-    val (e, iter, edgeCounts) = loop
+    val (e, iter, edgeCounts, converged) = loop
+    if (!converged)
+      throw new IllegalStateException(s"connected components did not converge in " +
+        s"$MaxIterations iterations (edges per iteration: ${edgeCounts.mkString(", ")})")
 
-    // At the fixpoint every edge is (node → component-min).
-    val roots = e.select(col("dst").as("doc_id"), col("dst").as("entity_id")).distinct()
-    // materialized: every caller fans this out (assign's singleton
-    // anti-join + the union, the dedup closure's member labeling) and
-    // a lazy result re-runs BOTH distincts per consumer — observed as
-    // 4+ extra doc_id shuffles in the dd_dedup_groups plan. Narrow
-    // 2-column frame, one extra job, re-scans free after it. Durable
-    // (like the iteration snapshots) when a checkpointDir is configured
-    // — an executor loss after the loop must not kill the labeling
-    // joins (r6, VERDICT ask).
-    val assignFrame = e.select(col("src").as("doc_id"), col("dst").as("entity_id"))
-      .unionAll(roots)
-      .distinct()
-    val assignments =
-      if (materializeAssignments) Materialize(assignFrame, "cc_assignments", checkpointDir).df
-      else assignFrame
-    (assignments, Stats(iter, edgeCounts.toSeq))
+    // At the fixpoint every edge is (node → component-min): the labels.
+    // The frame is the last cc_iter_* snapshot (durable under
+    // checkpointDir) or the local finish's driver-built frame.
+    (e.select(col("src").as("doc_id"), col("dst").as("entity_id")), Stats(iter, edgeCounts.toSeq))
   }
 
-  /** Full assignment over a doc universe: CC over match edges +
-    * identity assignment for docs with no edges (singleton entities).
+  /** Full assignment over a doc universe: each doc's component min
+    * over the match edges, a doc with no edge being its own entity.
+    * PRECONDITION: `docIds` is distinct and holds every endpoint of
+    * `resolvedEdges` — the labels are `docIds` left-joined to [[run]]'s
+    * star edges, so a repeated doc repeats its row and an endpoint
+    * outside `docIds` gets none.
     */
   def assign(
       spark: SparkSession,
@@ -295,12 +286,18 @@ object ConnectedComponents {
       resolvedEdges: DataFrame, // (doc_a, doc_b)
       checkpointDir: Option[String] = None,
       localFinishEdges: Long = 100000L): (DataFrame, Stats) = {
-    val (members, stats) = run(spark,
+    val (star, stats) = run(spark,
       resolvedEdges.select(col("doc_a").as("src"), col("doc_b").as("dst")),
       checkpointDir = checkpointDir, localFinishEdges = localFinishEdges)
-    val singletons = docIds
-      .join(members, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("entity_id"))
-    (members.unionAll(singletons), stats)
+    (docIds.select("doc_id").join(star, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("entity_id"), col("doc_id")).as("entity_id")), stats)
   }
+
+  /** A non-negative numeric id as a CC node id: labels are string mins,
+    * so ids are zero-padded to 19 digits (every non-negative int64) to
+    * make string order numeric order; cast the labels back to long.
+    * `lpad` truncates wider input, so the width must never be less
+    * than the widest possible id.
+    */
+  def padId(x: Column): Column = lpad(x.cast("string"), 19, "0")
 }

@@ -51,13 +51,9 @@ object ExportJob {
         .withColumnRenamed("entity_id", "affected_id")
       val affAssignments = resolve.assignments.join(affected,
         resolve.assignments("entity_id") === col("affected_id"), "left_semi")
-      // ResolveJob's rule: with no ambiguous doc the frame is not
-      // passed, so assembly plans no join for it
       Assemble.toExportJson(Assemble.entities(
         resolve.features, resolve.docs, affAssignments, resolve.edges,
-        numberEntities = false,
-        ambiguousDocs =
-          if (resolve.metrics("ambiguous_docs") == 0L) None else Some(resolve.ambiguousDocs),
+        numberEntities = false, ambiguousDocs = resolve.ambiguousDocs,
         relatedAssignments = Some(resolve.assignments)))
   }
 

@@ -61,7 +61,8 @@ object ResolveJob {
       edges: DataFrame,
       assignments: DataFrame,
       entities: DataFrame,
-      ambiguousDocs: DataFrame,
+      /** (doc_id, conflict_desc); None when no doc is ambiguous */
+      ambiguousDocs: Option[DataFrame],
       ccStats: ConnectedComponents.Stats,
       metrics: Map[String, Long],
       resumedStages: Seq[String],
@@ -152,18 +153,16 @@ object ResolveJob {
       def apply(name: String, extras: (String, Column)*)(build: => DataFrame) =
         stage(name, extras: _*)(build)
       def state(name: String)(df: DataFrame): DataFrame = df
-      def resumable: Boolean = store.isDefined
     })
 
     // the intra-assembly materializations run eagerly here; the final
     // report query stays lazy (timed by the caller's action).
-    // ambiguousDocs is passed ONLY when suppression actually fired: a
+    // ambiguousDocs is Some ONLY when suppression actually fired: a
     // Some(empty-frame) would merge zero rows at the cost of a join.
+    val ambiguousDocs = if (d.ambiguousDocs.rows == 0L) None else Some(d.ambiguousDocs.df)
     val entities = timed("assemble_eager") {
       Assemble.entities(d.features.df, docsSnap, d.assignments, d.edges.df,
-        cfg.numberEntities,
-        ambiguousDocs = if (d.ambiguousDocs.rows == 0L) None else Some(d.ambiguousDocs.df),
-        checkpointDir = cfg.checkpointDir)
+        cfg.numberEntities, ambiguousDocs = ambiguousDocs, checkpointDir = cfg.checkpointDir)
     }
 
     val metrics = Map(
@@ -174,7 +173,7 @@ object ResolveJob {
       "ambiguous_docs" -> d.ambiguousDocs.rows,
       "cc_iterations" -> d.ccStats.iterations.toLong)
 
-    Result(docsSnap, d.features.df, d.edges.df, d.assignments, entities, d.ambiguousDocs.df,
+    Result(docsSnap, d.features.df, d.edges.df, d.assignments, entities, ambiguousDocs,
       d.ccStats, metrics, resumed.toSeq, stageMs.toSeq)
   }
 
@@ -194,8 +193,6 @@ object ResolveJob {
       * (`blocks`, `resolved`), or returns `df` as it is.
       */
     def state(name: String)(df: DataFrame): DataFrame
-    /** Stages are committed snapshots a restarted run resumes from. */
-    def resumable: Boolean
   }
 
   /** What [[resolveDelta]] produced. `edges` are post-suppression;
@@ -268,16 +265,17 @@ object ResolveJob {
     // comparable claims never merge — see graft.score.Ambiguity. It
     // re-derives from the whole edge set, because suppression cascades
     // cross components through POSSIBLY_SAME bridges.
-    // LAZY: a resumed run with committed edges/ambiguous_docs snapshots
-    // never evaluates the suppression fixpoint at all.
-    lazy val amb = Ambiguity.suppress(rawEdges.df, feats.df)
+    // Eager: a resumed run re-runs the fixpoint's jobs (one when nothing
+    // fires) to learn whether it fired; committed edges/ambiguous_docs
+    // snapshots then stand in for its output.
+    val amb = Ambiguity.suppress(rawEdges.df, feats.df)
     val (edges, ambDocs) =
-      if (!stage.resumable && amb.firedCount == 0)
+      if (amb.firedCount == 0)
         // nothing fired: the suppressed frame IS the raw frame plus a
         // constant column, and no doc is ambiguous — skip the second
         // materialization entirely
         (rawEdges.copy(df = amb.edges), Materialize.Result(amb.ambiguousDocs, 0L, Map.empty))
-      else (stage("edges", resolvedTally)(amb.edges), // on resume: amb never forced
+      else (stage("edges", resolvedTally)(amb.edges),
         stage("ambiguous_docs")(amb.ambiguousDocs))
     val resolved = stage.state("resolved")(
       edges.df.filter(col("level") === "RESOLVED").select("doc_a", "doc_b"))
@@ -311,8 +309,9 @@ object ResolveJob {
     }
     var ccStats = ConnectedComponents.Stats(0, Seq.empty)
     val assignments = stage("assignments") {
-      val (a, stats) = ConnectedComponents.assign(
-        spark, ccDocs.df.select("doc_id"), ccEdges, cfg.checkpointDir)
+      // ccDocs is distinct and holds every ccEdges endpoint (assign's
+      // precondition): all features in a batch, the affected docs in a delta
+      val (a, stats) = ConnectedComponents.assign(spark, ccDocs.df, ccEdges, cfg.checkpointDir)
       ccStats = stats
       carried.fold(a)(_.select("doc_id", "entity_id").unionByName(a.select("doc_id", "entity_id")))
     }.df

@@ -654,16 +654,11 @@ object Dedup {
       lengthBucket: Int = 100,
       /** Durable parquet snapshots for every eager materialization in
         * this composition (rep map, rep sets, tier frames, CC
-        * iterations + assignments, group labels) — executor-loss
-        * survival on a real cluster; localCheckpoint otherwise.
+        * iterations, group labels) — executor-loss survival on a real
+        * cluster; localCheckpoint otherwise.
         */
       checkpointDir: Option[String] = None): (DataFrame, graft.cluster.ConnectedComponents.Stats) = {
-    // CC labels are lexicographic-min STRINGS (collision-free at any
-    // scale) — zero-pad the numeric ids so string order == numeric
-    // order, cast back after. 19 digits covers every non-negative
-    // int64 (lpad TRUNCATES over-width input, so the pad width must
-    // never be less than the widest possible id).
-    def pad(x: Column): Column = lpad(x.cast("string"), 19, "0")
+    import graft.cluster.ConnectedComponents.padId
     // The closure runs over the REPRESENTATIVE graph only: docToRep is
     // a function (one rep per doc) and rep_id is the MIN doc of its
     // identical-set group, so component(doc) = component(rep(doc)) and
@@ -678,16 +673,15 @@ object Dedup {
     // the loop at all (its members collapse to one rep upstream).
     val r = ngramRepPairs(docs, n, threshold, lengthBucket, checkpointDir)
     val repEdges = r.repPairs
-      .select(pad(col("rep_a")).as("src"), pad(col("rep_b")).as("dst"))
-    // single consumer (the labeled join below) → skip the eager
-    // assignments job; the union+distinct runs inside g's own
+      .select(padId(col("rep_a")).as("src"), padId(col("rep_b")).as("dst"))
+    // the star edges (rep → its component's min rep), read by g's own
     // materialization off the durable/checkpointed fixpoint frame
-    val (repAssign, ccStats) =
-      graft.cluster.ConnectedComponents.run(spark, repEdges,
-        checkpointDir = checkpointDir, materializeAssignments = false)
-    // member label = its rep's component min (reps without any rep-level
-    // edge keep themselves — rep IS the group min); docs with empty
-    // shingle sets never entered docToRep and stay singletons.
+    val (repStar, ccStats) =
+      graft.cluster.ConnectedComponents.run(spark, repEdges, checkpointDir = checkpointDir)
+    // member label = its rep's component min (a rep with no star edge —
+    // a component min, or a rep with no rep-level edge — keeps itself);
+    // docs with empty shingle sets never entered docToRep and stay
+    // singletons.
     // `labeled` is consumed exactly once (the union below) now that
     // the singleton anti-join runs against the already-checkpointed
     // docToRep (same doc_id universe) — so it needs no checkpoint of
@@ -697,13 +691,13 @@ object Dedup {
     // final join — lazy, each consumer would re-run the rep-labeling
     // join (and through it the CC output) once more.
     val labeled = r.docToRep
-      .select(col("doc_id"), pad(col("rep_id")).as("rep"))
-      .join(repAssign.select(col("doc_id").as("rep"), col("entity_id")),
+      .select(col("doc_id"), padId(col("rep_id")).as("rep"))
+      .join(repStar.select(col("doc_id").as("rep"), col("entity_id")),
         Seq("rep"), "left")
       .select(col("doc_id"), coalesce(col("entity_id"), col("rep")).as("glabel"))
     val singletons = docs.select(col("doc_id"))
       .join(r.docToRep.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), pad(col("doc_id")).as("glabel"))
+      .select(col("doc_id"), padId(col("doc_id")).as("glabel"))
     val g = Materialize(labeled.unionByName(singletons)
       .select(col("doc_id").cast("long").as("doc_id"),
         col("glabel").cast("long").as("group_id")),

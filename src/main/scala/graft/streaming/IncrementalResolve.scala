@@ -187,7 +187,6 @@ object IncrementalResolve {
           case None => Materialize(build, s"inc_$name", None, extras: _*)
         }
       def state(name: String)(df: DataFrame): DataFrame = apply(name)(df).df
-      def resumable: Boolean = false
     })
 
     // read() binds the snapshot PATH eagerly, so this lazy diff stays

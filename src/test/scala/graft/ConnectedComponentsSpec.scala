@@ -3,6 +3,7 @@ package graft
 import graft.cluster.ConnectedComponents
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,30 +11,38 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  private def cc(edges: Seq[(String, String)]): Map[String, String] = {
-    val (assign, _) = ConnectedComponents.run(spark, edges.toDF("src", "dst"))
-    assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+  /** Labels of every edge endpoint, by [[ConnectedComponents.assign]]. */
+  private def cc(edges: Seq[(String, String)], spark: org.apache.spark.sql.SparkSession = spark,
+      checkpointDir: Option[String] = None, localFinishEdges: Long = 100000L)
+      : (Map[String, String], ConnectedComponents.Stats) = {
+    import spark.implicits._
+    val (assign, stats) = ConnectedComponents.assign(spark, endpoints(edges).toDF("doc_id"),
+      edges.toDF("doc_a", "doc_b"), checkpointDir, localFinishEdges)
+    (assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap, stats)
   }
 
+  private def endpoints(edges: Seq[(String, String)]): Seq[String] =
+    edges.flatMap(e => Seq(e._1, e._2)).distinct
+
   test("chain collapses to min label") {
-    val got = cc(Seq("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e"))
+    val (got, _) = cc(Seq("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e"))
     assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "e" -> "a"))
   }
 
   test("star (reversed direction) collapses") {
-    val got = cc(Seq("z" -> "m", "y" -> "m", "x" -> "m"))
+    val (got, _) = cc(Seq("z" -> "m", "y" -> "m", "x" -> "m"))
     assert(got.values.toSet == Set("m"))
     assert(got.keySet == Set("x", "y", "z", "m"))
   }
 
   test("two components stay separate") {
-    val got = cc(Seq("a" -> "b", "c" -> "d"))
+    val (got, _) = cc(Seq("a" -> "b", "c" -> "d"))
     assert(got("a") == "a" && got("b") == "a")
     assert(got("c") == "c" && got("d") == "c")
   }
 
   test("self-loop and duplicate edges are harmless") {
-    val got = cc(Seq("a" -> "a", "a" -> "b", "b" -> "a", "a" -> "b"))
+    val (got, _) = cc(Seq("a" -> "a", "a" -> "b", "b" -> "a", "a" -> "b"))
     assert(got == Map("a" -> "a", "b" -> "a"))
   }
 
@@ -57,30 +66,26 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (f"r${rnd.nextInt(60)}%02d", f"r${rnd.nextInt(60)}%02d")
     }.filter(e => e._1 != e._2)
     val edges = (chain ++ clique ++ random ++ Seq(("solo_a", "solo_b")))
-    val (distAssign, distStats) = ConnectedComponents.run(
-      spark, edges.toDF("src", "dst"), localFinishEdges = 0L)
-    val dist = distAssign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val (dist, distStats) = cc(edges, localFinishEdges = 0L)
     assert(distStats.iterations > 0, "distributed path must actually iterate")
-    assert(dist == cc(edges), "local union-find finish must produce the loop's fixpoint labels")
+    assert(dist == cc(edges)._1, "local union-find finish must produce the loop's fixpoint labels")
   }
 
-  for (materialize <- Seq(true, false))
-    test(s"durable runs sharing a checkpointDir stay isolated (materializeAssignments=$materialize)") {
-      // A's result is read back lazily from its durable snapshots; B has
-      // the same shape (so it writes as many iteration snapshots) but
-      // other ids, so a shared snapshot path would hand A B's labels
-      val chainA = (0 until 24).map(i => (f"a$i%02d", f"a${i + 1}%02d"))
-      val chainB = chainA.map { case (s, d) => ("b" + s.tail, "b" + d.tail) }
-      val dir = java.nio.file.Files.createTempDirectory("cc_shared").toString
-      def durable(edges: Seq[(String, String)]) = ConnectedComponents.run(
-        spark, edges.toDF("src", "dst"), checkpointDir = Some(dir),
-        localFinishEdges = 0L, materializeAssignments = materialize)
-      val (a, statsA) = durable(chainA)
-      assert(statsA.iterations > 0, "distributed path must actually iterate")
-      durable(chainB)._1.collect()
-      val got = a.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(got == cc(chainA))
-    }
+  test("durable runs sharing a checkpointDir stay isolated") {
+    // A's result is read back lazily from its durable snapshots; B has
+    // the same shape (so it writes as many iteration snapshots) but
+    // other ids, so a shared snapshot path would hand A B's labels
+    val chainA = (0 until 24).map(i => (f"a$i%02d", f"a${i + 1}%02d"))
+    val chainB = chainA.map { case (s, d) => ("b" + s.tail, "b" + d.tail) }
+    val dir = java.nio.file.Files.createTempDirectory("cc_shared").toString
+    def durable(edges: Seq[(String, String)]) = ConnectedComponents.assign(spark,
+      endpoints(edges).toDF("doc_id"), edges.toDF("doc_a", "doc_b"), Some(dir), 0L)
+    val (a, statsA) = durable(chainA)
+    assert(statsA.iterations > 0, "distributed path must actually iterate")
+    durable(chainB)._1.collect()
+    val got = a.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == cc(chainA)._1)
+  }
 
   test("local finish uses UTF8 binary order, matching the loop's least()/min()") {
     // U+1F600 (surrogate pair) vs U+FFFF: Java UTF-16 order puts the
@@ -90,10 +95,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val emoji = "😀" // U+1F600 — code point ABOVE U+FFFF
     assert(emoji < hi, "precondition: Java order disagrees with code-point order")
     val edges = Seq((hi, emoji))
-    val local = cc(edges)
-    val (distAssign, _) = ConnectedComponents.run(
-      spark, edges.toDF("src", "dst"), localFinishEdges = 0L)
-    val dist = distAssign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val (local, _) = cc(edges)
+    val (dist, _) = cc(edges, localFinishEdges = 0L)
     assert(local == dist, "labels must be phase-invariant")
     assert(local.values.toSet == Set(hi), s"component min must be U+FFFF, got ${local.values.toSet}")
   }
@@ -104,45 +107,40 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val edges = (1 to 400).map { _ =>
       (f"n${rnd.nextInt(n)}%03d", f"n${rnd.nextInt(n)}%03d")
     }.filter(e => e._1 != e._2)
-    assert(cc(edges) == unionFind(edges))
+    assert(cc(edges)._1 == unionFind(edges))
   }
 
-  for (materialize <- Seq(true, false))
-    test(s"concurrent durable runs sharing a checkpointDir each match union-find (materializeAssignments=$materialize)") {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      // two same-shaped graphs with disjoint ids: a run that read the
-      // other's snapshot would report the other's labels
-      val rnd = new scala.util.Random(5)
-      val shape = (0 until 24).map(i => (i, i + 1)) ++
-        (1 to 60).map(_ => (rnd.nextInt(50), rnd.nextInt(50))).filter(e => e._1 != e._2)
-      def graph(prefix: String) = shape.map { case (s, d) => (f"$prefix$s%02d", f"$prefix$d%02d") }
-      val dir = java.nio.file.Files.createTempDirectory("cc_concurrent").toString
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val start = new java.util.concurrent.CyclicBarrier(2)
-      try {
-        val runs = Seq("a", "b").map { p =>
-          Future {
-            // a session per run: CC scopes SQL confs (graft.util.Confs),
-            // and two runs on one session can restore each other's
-            // values, leaving the shared test session with AQE off
-            val s = spark.newSession()
-            val edges = s.createDataFrame(graph(p)).toDF("src", "dst")
-            start.await()
-            ConnectedComponents.run(s, edges,
-              checkpointDir = Some(dir), localFinishEdges = 0L,
-              materializeAssignments = materialize)
-          }
+  test("concurrent durable runs sharing a checkpointDir match union-find") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // two same-shaped graphs with disjoint ids: a run that read the
+    // other's snapshot would report the other's labels
+    val rnd = new scala.util.Random(5)
+    val shape = (0 until 24).map(i => (i, i + 1)) ++
+      (1 to 60).map(_ => (rnd.nextInt(50), rnd.nextInt(50))).filter(e => e._1 != e._2)
+    def graph(prefix: String) = shape.map { case (s, d) => (f"$prefix$s%02d", f"$prefix$d%02d") }
+    val dir = java.nio.file.Files.createTempDirectory("cc_concurrent").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    try {
+      val runs = Seq("a", "b").map { p =>
+        Future {
+          // a session per run: CC scopes SQL confs (graft.util.Confs),
+          // and two runs on one session can restore each other's
+          // values, leaving the shared test session with AQE off
+          val s = spark.newSession()
+          start.await()
+          cc(graph(p), s, checkpointDir = Some(dir), localFinishEdges = 0L)
         }
-        val results = runs.map(Await.result(_, 5.minutes))
-        for ((p, (assign, stats)) <- Seq("a", "b").zip(results)) {
-          assert(stats.iterations > 0, "distributed path must actually iterate")
-          val got = assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-          assert(got == unionFind(graph(p)), s"run $p")
-        }
-      } finally pool.shutdown()
-    }
+      }
+      val results = runs.map(Await.result(_, 5.minutes))
+      for ((p, (got, stats)) <- Seq("a", "b").zip(results)) {
+        assert(stats.iterations > 0, "distributed path must actually iterate")
+        assert(got == unionFind(graph(p)), s"run $p")
+      }
+    } finally pool.shutdown()
+  }
 
   /** Docs and the edges between them. */
   private case class Graph(docs: Seq[String], edges: Seq[(String, String)])
@@ -176,7 +174,15 @@ class ConnectedComponentsSpec extends AnyFunSuite {
           g.edges.toDF("doc_a", "doc_b"), dir, localFinish)
         val got = assign.collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
         val uf = unionFind(g.edges)
-        got == g.docs.map(d => d -> uf.getOrElse(d, d)).sorted
+        // run's rows are the star forest: one row per non-min node
+        // (no doc_id twice), pointing at a min (no entity_id as a doc_id)
+        val (star, _) = ConnectedComponents.run(spark, g.edges.toDF("src", "dst"), dir, localFinish)
+        val rows = star.collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+        val starForest = rows.map(_._1).distinct.size == rows.size &&
+          rows.map(_._2).toSet.intersect(rows.map(_._1).toSet).isEmpty
+        (got == g.docs.map(d => d -> uf.getOrElse(d, d)).sorted) :| "assign == union-find" &&
+          starForest :| s"run's rows are a star forest: $rows" &&
+          (rows.toMap == uf.filter { case (d, m) => d != m }) :| "star edges == non-min labels"
       }
       val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(12)
         .withInitialSeed(Seed(20261020L)), prop)

@@ -185,20 +185,22 @@ class FixtureResolveSpec extends AnyFunSuite {
       s"no per-app tier snapshot dir under $ckpt")
     // r6: EVERY eager materialization on the durable path is a parquet
     // snapshot now — the assembly docs/entries frames and the CC
-    // assignments frame included (an executor loss mid-assembly used
-    // to kill their localCheckpoint blocks)
+    // iteration frames included (an executor loss mid-assembly used
+    // to kill their localCheckpoint blocks); the labels read the last
+    // cc_iter_* snapshot, so CC writes no assignments frame of its own
     import scala.jdk.CollectionConverters._
     val tierDirs = java.nio.file.Files.list(appDir).iterator().asScala
       .map(_.getFileName.toString).toSet
     assert(tierDirs.exists(_.contains("asm_docs")), s"no asm_docs snapshot in $tierDirs")
-    assert(tierDirs.exists(_.contains("cc_assignments")),
-      s"no cc_assignments snapshot in $tierDirs")
+    assert(tierDirs.exists(_.contains("cc_iter")), s"no CC iteration snapshot in $tierDirs")
+    assert(!tierDirs.exists(_.contains("cc_assignments")),
+      s"a cc_assignments snapshot in $tierDirs")
   }
 
   test("durable path: nearDupGroups with checkpointDir is byte-identical to default") {
     // the r6 durable threading for the dedup-groups composition: rep
-    // map, rep sets, tier frames, CC iterations + assignments and the
-    // group labels all become parquet snapshots, outputs unchanged
+    // map, rep sets, tier frames, CC iterations and the group labels
+    // all become parquet snapshots, outputs unchanged
     val ckpt = java.nio.file.Files.createTempDirectory("ddckpt").toString
     val corpus = (0 until 60).map { i =>
       val base = s"shared boilerplate tokens alpha beta gamma delta run$i"
@@ -219,10 +221,8 @@ class FixtureResolveSpec extends AnyFunSuite {
       .map(_.getFileName.toString).toSet
     assert(dirs.exists(_.contains("ngram_doc2rep")) &&
       dirs.exists(_.contains("ngram_groups")), s"missing dedup snapshots: $dirs")
-    // the dedup path consumes the CC assignments exactly once, so no
-    // cc_assignments snapshot is written here — the fixpoint frames
-    // (cc_iter_*) are durable and the labeling recomputes from them;
-    // the ResolveJob durable test above covers the materialized case
+    // the fixpoint frames (cc_iter_*) are durable and the group
+    // labeling reads the last of them
     assert(dirs.exists(_.contains("cc_iter")), s"no CC iteration snapshot: $dirs")
   }
 

@@ -42,8 +42,10 @@ class MaterializeSpec extends AnyFunSuite {
     val names = try snaps.iterator().asScala.map(_.getFileName.toString).toSet
       finally snaps.close()
     assert(names.exists(_.contains("asm_docs")), s"no asm_docs snapshot in $names")
-    assert(names.exists(_.contains("cc_iter")) && names.exists(_.contains("cc_assignments")),
-      s"no CC snapshots in $names")
+    // the labels read the last durable cc_iter_* snapshot: CC writes no
+    // assignments frame of its own
+    assert(names.exists(_.contains("cc_iter")), s"no CC iteration snapshot in $names")
+    assert(!names.exists(_.contains("cc_assignments")), s"a cc_assignments snapshot in $names")
   }
 
   test("assignments are identical at 2 and 8 shuffle partitions") {
@@ -69,6 +71,39 @@ class MaterializeSpec extends AnyFunSuite {
     assert(stages.contains("docs") && stages.contains("assignments"), stages)
     assert(again.resumedStages == stages)
     assert(assignments(again) == assignments(first))
+  }
+
+  test("a run killed after any committed stage resumes to the clean run's output") {
+    val corpus = DocCorpus.synthetic(spark, 150, seed = 1L).toDF()
+    def run(root: java.nio.file.Path) =
+      ResolveJob.run(spark, corpus, ResolveJob.Config(snapshotRoot = Some(root.toString)))
+    def outputs(r: ResolveJob.Result) =
+      (r.assignments.collect().map(x => (x.getString(0), x.getString(1))).toSet,
+        Assemble.toExportJson(r.entities).collect().map(_.getString(0)).sorted.toSeq)
+    val cleanRoot = Files.createTempDirectory("killclean")
+    val clean = run(cleanRoot)
+    val want = outputs(clean)
+    val committed = clean.stageMillis.map(_._1).filter(n => Files.isDirectory(cleanRoot.resolve(n)))
+    // suppression fires nothing on this corpus, so edges/ambiguous_docs
+    // are not staged and the raw-score stage feeds CC directly
+    assert(clean.metrics("ambiguous_docs") == 0L && clean.ambiguousDocs.isEmpty)
+    assert(committed == Seq("docs", "features_raw", "features", "pairs", "edges_raw",
+      "assignments"), committed)
+    def tree(p: java.nio.file.Path) = {
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toList finally walk.close()
+    }
+    for ((stage, k) <- committed.zipWithIndex) {
+      // the crash: stages after k were never committed
+      val root = Files.createTempDirectory("killed")
+      tree(cleanRoot).foreach(f => Files.copy(f, root.resolve(cleanRoot.relativize(f).toString),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+      for (later <- committed.drop(k + 1); t <- Seq(later, s"_lineage_$later"))
+        if (Files.exists(root.resolve(t))) tree(root.resolve(t)).reverse.foreach(Files.delete)
+      val resumed = run(root)
+      assert(resumed.resumedStages == committed.take(k + 1), s"killed after $stage")
+      assert(outputs(resumed) == want, s"killed after $stage: output differs from a clean run")
+    }
   }
 
   test("a durable Materialize is one job: the read-back infers no schema") {
