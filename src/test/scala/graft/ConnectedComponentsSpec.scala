@@ -1,6 +1,7 @@
 package graft
 
 import graft.cluster.ConnectedComponents
+import graft.util.Materialize
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
@@ -71,21 +72,34 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(dist == cc(edges)._1, "local union-find finish must produce the loop's fixpoint labels")
   }
 
-  test("durable runs sharing a checkpointDir stay isolated") {
-    // A's result is read back lazily from its durable snapshots; B has
-    // the same shape (so it writes as many iteration snapshots) but
-    // other ids, so a shared snapshot path would hand A B's labels
-    val chainA = (0 until 24).map(i => (f"a$i%02d", f"a${i + 1}%02d"))
-    val chainB = chainA.map { case (s, d) => ("b" + s.tail, "b" + d.tail) }
-    val dir = java.nio.file.Files.createTempDirectory("cc_shared").toString
-    def durable(edges: Seq[(String, String)]) = ConnectedComponents.assign(spark,
+  /** [[ConnectedComponents.assign]]'s labels, either lazy (read back
+    * from CC's durable iteration snapshots when an action runs) or, with
+    * `materialize`, through the caller's eager durable boundary in the
+    * same `dir` (graft.util.Materialize), as a resolve's `assignments`
+    * stage puts them.
+    */
+  private def durableLabels(s: org.apache.spark.sql.SparkSession, edges: Seq[(String, String)],
+      dir: String, materialize: Boolean): (org.apache.spark.sql.DataFrame, ConnectedComponents.Stats) = {
+    import s.implicits._
+    val (assign, stats) = ConnectedComponents.assign(s,
       endpoints(edges).toDF("doc_id"), edges.toDF("doc_a", "doc_b"), Some(dir), 0L)
-    val (a, statsA) = durable(chainA)
-    assert(statsA.iterations > 0, "distributed path must actually iterate")
-    durable(chainB)._1.collect()
-    val got = a.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == cc(chainA)._1)
+    (if (materialize) Materialize(assign, "assignments", Some(dir)).df else assign, stats)
   }
+
+  for (materialize <- Seq(true, false))
+    test(s"durable runs sharing a checkpointDir stay isolated (materializeAssignments=$materialize)") {
+      // A's result is read back from its durable snapshots; B has the
+      // same shape (so it writes as many iteration snapshots) but other
+      // ids, so a shared snapshot path would hand A B's labels
+      val chainA = (0 until 24).map(i => (f"a$i%02d", f"a${i + 1}%02d"))
+      val chainB = chainA.map { case (s, d) => ("b" + s.tail, "b" + d.tail) }
+      val dir = java.nio.file.Files.createTempDirectory("cc_shared").toString
+      val (a, statsA) = durableLabels(spark, chainA, dir, materialize)
+      assert(statsA.iterations > 0, "distributed path must actually iterate")
+      durableLabels(spark, chainB, dir, materialize)._1.collect()
+      val got = a.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == cc(chainA)._1)
+    }
 
   test("local finish uses UTF8 binary order, matching the loop's least()/min()") {
     // U+1F600 (surrogate pair) vs U+FFFF: Java UTF-16 order puts the
@@ -110,37 +124,39 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(cc(edges)._1 == unionFind(edges))
   }
 
-  test("concurrent durable runs sharing a checkpointDir match union-find") {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    // two same-shaped graphs with disjoint ids: a run that read the
-    // other's snapshot would report the other's labels
-    val rnd = new scala.util.Random(5)
-    val shape = (0 until 24).map(i => (i, i + 1)) ++
-      (1 to 60).map(_ => (rnd.nextInt(50), rnd.nextInt(50))).filter(e => e._1 != e._2)
-    def graph(prefix: String) = shape.map { case (s, d) => (f"$prefix$s%02d", f"$prefix$d%02d") }
-    val dir = java.nio.file.Files.createTempDirectory("cc_concurrent").toString
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val start = new java.util.concurrent.CyclicBarrier(2)
-    try {
-      val runs = Seq("a", "b").map { p =>
-        Future {
-          // a session per run: CC scopes SQL confs (graft.util.Confs),
-          // and two runs on one session can restore each other's
-          // values, leaving the shared test session with AQE off
-          val s = spark.newSession()
-          start.await()
-          cc(graph(p), s, checkpointDir = Some(dir), localFinishEdges = 0L)
+  for (materialize <- Seq(true, false))
+    test(s"concurrent durable runs sharing a checkpointDir each match union-find (materializeAssignments=$materialize)") {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration._
+      // two same-shaped graphs with disjoint ids: a run that read the
+      // other's snapshot would report the other's labels
+      val rnd = new scala.util.Random(5)
+      val shape = (0 until 24).map(i => (i, i + 1)) ++
+        (1 to 60).map(_ => (rnd.nextInt(50), rnd.nextInt(50))).filter(e => e._1 != e._2)
+      def graph(prefix: String) = shape.map { case (s, d) => (f"$prefix$s%02d", f"$prefix$d%02d") }
+      val dir = java.nio.file.Files.createTempDirectory("cc_concurrent").toString
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      try {
+        val runs = Seq("a", "b").map { p =>
+          Future {
+            // a session per run: CC scopes SQL confs (graft.util.Confs),
+            // and two runs on one session can restore each other's
+            // values, leaving the shared test session with AQE off
+            val s = spark.newSession()
+            start.await()
+            durableLabels(s, graph(p), dir, materialize)
+          }
         }
-      }
-      val results = runs.map(Await.result(_, 5.minutes))
-      for ((p, (got, stats)) <- Seq("a", "b").zip(results)) {
-        assert(stats.iterations > 0, "distributed path must actually iterate")
-        assert(got == unionFind(graph(p)), s"run $p")
-      }
-    } finally pool.shutdown()
-  }
+        val results = runs.map(Await.result(_, 5.minutes))
+        for ((p, (assign, stats)) <- Seq("a", "b").zip(results)) {
+          assert(stats.iterations > 0, "distributed path must actually iterate")
+          val got = assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+          assert(got == unionFind(graph(p)), s"run $p")
+        }
+      } finally pool.shutdown()
+    }
 
   /** Docs and the edges between them. */
   private case class Graph(docs: Seq[String], edges: Seq[(String, String)])
